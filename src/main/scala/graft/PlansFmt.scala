@@ -10,25 +10,18 @@ package graft
 object PlansFmt {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     val suffix = args.head
-    val spark = Sessions.build(cpus)
+    val spark = Sessions.build(Bench.cpus)
     val outDir = java.nio.file.Paths.get("/root/repo/plans/r20")
     java.nio.file.Files.createDirectories(outDir)
-    args.tail.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      // Run the query first so (a) memoized leaves resolve and (b) AQE's
-      // final plan is what executedPlan-based tools would see; the formatted
-      // dump below is the pre-execution plan the driver contract asks for,
-      // with PushedFilters/ReadSchema/join strategies visible.
-      df.count()
+    // The formatted dump is the pre-execution plan the driver contract asks
+    // for, with PushedFilters/ReadSchema/join strategies visible.
+    Plans.each(spark, sfDir, args.toSeq.tail) { (name, df) =>
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       java.nio.file.Files.write(outDir.resolve(s"${name}_$suffix.txt"),
         txt.getBytes("UTF-8"))
       println(s"[plansfmt] wrote ${name}_$suffix.txt (${txt.length} chars)")
-      spark.sharedState.cacheManager.clearCache()
     }
     spark.stop()
   }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * [[Time]]. This is the "does the plan survive a scale-up" check the
   * 100 TB scaladoc claims make: a healthy plan grows ~linearly in the fact
   * volume on 32 cores; a broken one (missed broadcast, single-task window,
-  * driver collect) goes superlinear or OOMs.
+  * driver collect) goes superlinear or OOMs. Bench's warm-up runs first.
   *
   * Usage: `sbt "runMain graft.ScaleStress q_agg_pricing_summary ..."`;
   * generation runs once (marker-gated), ~6M lineitem rows.
@@ -22,10 +22,7 @@ object ScaleStress {
 
   def main(args: Array[String]): Unit = {
     val src = "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val spark = Sessions.build(cpus)
+    val spark = Sessions.build(Bench.cpus)
     val marker = new java.io.File(s"$Out/_READY")
     if (!marker.exists()) {
       // > max sf0.1 o_orderkey (149,999) and event_id (99,999); replicas
@@ -51,19 +48,7 @@ object ScaleStress {
       marker.createNewFile()
       println(s"SCALE generated $Out")
     }
-    spark.read.parquet(s"$Out/region.parquet").count()
-    SparkEntry.entry(spark).count()
-    args.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, Out).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.sharedState.cacheManager.clearCache()
-        dt
-      }
-      println(f"SCALE $name%-28s ${times.map(t => f"$t%.2f").mkString(" ")}")
-    }
+    Time.warmAndTime(spark, Out, "SCALE", args.toSeq)
     spark.stop()
   }
 }

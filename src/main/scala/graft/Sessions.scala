@@ -61,10 +61,9 @@ object Sessions {
       // default — this knob is fixture-size compensation, not a scale
       // strategy.
       .config("spark.sql.files.maxPartitionBytes", "4m")
-      // Catalog tables (bucketing demos/tests) land in a per-JVM temp
+      // Catalog tables (bucketing demos/tests) land in a scratch
       // warehouse, never in the repo working dir.
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse_").toString)
+      .config("spark.sql.warehouse.dir", Memo.tempDir("warehouse").toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -409,7 +409,7 @@ object Scalars extends QueryPack {
 
   override val queries: Vector[Q] = Vector(
     Q("q_sql_try_functions", sqlTryFunctions, Some(sqlTryFunctionsOracle)),
-    Q("q_json_variant", jsonVariant, Some(jsonVariantOracle)),
+    Q("q_json_variant", jsonVariant, Some(jsonVariantOracle), warm = true),
     Q("q_str_collation", strCollation, Some(strCollationOracle)),
     Q("q_str_url", strUrl, Some(strUrlOracle)),
     Q("q_str_funcs", strFuncs, Some("""

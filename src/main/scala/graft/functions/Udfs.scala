@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 import graft.{Catalog, Q, QueryPack}
-import graft.Dsl._
 
 /** SURVEY.md §2.K — the user-extension surface: scalar UDF, typed UDAF
   * (`Aggregator`), and the generator (UDTF-shaped) path.

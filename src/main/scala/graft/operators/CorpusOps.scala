@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Catalog, Q, QueryPack}
+import graft.{Catalog, Memo, Q, QueryPack}
 
 /** SURVEY.md §2.J3 — corpus-curation operators (added round 9): the three
   * pipeline stages between raw dedup and the training run that the §2.J/J2
@@ -406,7 +406,7 @@ object CorpusOps extends QueryPack {
     */
   /** Learned model: the 8 merge rows plus the post-merge vocabulary
     * (word, cnt, s) — `s` is the word's final double-space-delimited
-    * segmentation. Built once per (application, sfDir) and shared by the
+    * segmentation. Built once through [[graft.Memo]] and shared by the
     * learner and the apply query (train once, encode many — the kmAssign/
     * ivf leaf precedent). The vocab DataFrame is the loop's final eager
     * localCheckpoint, i.e. already a leaf.
@@ -414,28 +414,8 @@ object CorpusOps extends QueryPack {
   private case class BpeModel(
       merges: Seq[(Long, String, String, Long)], vocab: DataFrame)
 
-  private val bpeModels =
-    new java.util.concurrent.ConcurrentHashMap[String, BpeModel]()
-
-  /** Test hook mirroring [[GraphOps.clearMemoForTest]]. */
-  private[graft] def clearBpeMemoForTest(): Unit = bpeModels.clear()
-
-  /** Memoized model accessor — the get → build → putIfAbsent shape of
-    * [[GraphOps.memoEdgeLeaf]] (same stale-app eviction, same benign-race
-    * contract; a losing duplicate build is just an unreferenced leaf).
-    */
-  private def bpeModel(spark: SparkSession, sfDir: String): BpeModel = {
-    val appId = spark.sparkContext.applicationId
-    bpeModels.keySet.removeIf(k => !k.startsWith(s"$appId#"))
-    val key = s"$appId#$sfDir"
-    val cached = bpeModels.get(key)
-    if (cached != null) cached
-    else {
-      val built = buildBpeModel(spark, sfDir)
-      val prev = bpeModels.putIfAbsent(key, built)
-      if (prev != null) prev else built
-    }
-  }
+  private def bpeModel(spark: SparkSession, sfDir: String): BpeModel =
+    Memo(spark, sfDir, "bpeModel")(buildBpeModel(spark, sfDir))
 
   private def buildBpeModel(spark: SparkSession, sfDir: String): BpeModel = {
     import spark.implicits._
@@ -1396,7 +1376,7 @@ object CorpusOps extends QueryPack {
     Q("q_pack_bins", packBins, Some(packBinsSql)),
     Q("q_text_dup_ngrams", textDupNgrams, Some(textDupNgramsSql)),
     Q("q_corpus_temperature", corpusTemperature, Some(corpusTemperatureSql)),
-    Q("q_text_bpe_learn", textBpeLearn, Some(textBpeLearnSql)),
+    Q("q_text_bpe_learn", textBpeLearn, Some(textBpeLearnSql), warm = true),
     Q("q_text_bpe_apply", textBpeApply, Some(textBpeApplySql)),
     Q("q_text_decontaminate", textDecontaminate, Some(textDecontaminateSql)),
     Q("q_text_repetition", textRepetition, Some(textRepetitionSql)),

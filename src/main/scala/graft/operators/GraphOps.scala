@@ -3,9 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.{Catalog, Q, QueryPack}
+import graft.{Catalog, Memo, Q, QueryPack}
 
 /** SURVEY.md §2.O — graph operators (added round 5): connected components
   * over the near-duplicate pair graph (the clustering stage every dedup
@@ -37,53 +36,8 @@ object GraphOps extends QueryPack {
 
   private val MaxRounds = 20
 
-  /** Derived edge tables, materialized ONCE per (application, sfDir) as an
-    * eager localCheckpoint leaf — the same materialize-once pattern as the
-    * Scans roundtrip scratch and the bucketed join table. Two graph queries
-    * share each edge set (components+clusters the near-dup graph,
-    * triangles+pagerank the co-purchase graph); without memoization each of
-    * the four re-built its edges from the raw tables, so the shared upstream
-    * stage was paid four times per session. Since round 9 the dedup
-    * pipeline's tokenize→shingle→df-cap base is a leaf too
-    * ([[LlmPipeline]] `docShingles`, shared by q_dedup_near and
-    * q_dedup_minhash); every query still times its own declared stages
-    * downstream of the materialized intermediates. Keyed on
-    * applicationId so test suites with their own sessions never share
-    * checkpointed RDDs across contexts; entries are a few thousand rows.
-    */
-  private val edgeLeaves =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** Test hook: drop every memoized leaf so a suite can force rebuilds
-    * without spinning up a new SparkContext per iteration. */
-  private[graft] def clearMemoForTest(): Unit = edgeLeaves.clear()
-  private[graft] def memoEdgeLeaf(spark: SparkSession, sfDir: String, tag: String)(
-      build: => DataFrame): DataFrame = {
-    val appId = spark.sparkContext.applicationId
-    // Evict leaves from other applications: their checkpointed RDDs died
-    // with their SparkContext, and in long-lived JVMs (test suites spinning
-    // up a session per suite) stale entries would otherwise accumulate
-    // unboundedly. Concurrent sessions share one context (= one appId), so
-    // dropping foreign-app keys never discards a live leaf.
-    edgeLeaves.keySet.removeIf(k => !k.startsWith(s"$appId#"))
-    // get -> build -> putIfAbsent, NOT computeIfAbsent: the labels leaf's
-    // build resolves the und-edges leaf through this same map, and the JDK
-    // forbids a computeIfAbsent mapping function updating the map it runs
-    // under — it throws IllegalStateException("Recursive update") whenever
-    // the two keys land in one hash bin, which depends on the applicationId
-    // string, i.e. strikes per-JVM at random (round 7's verify crash). With
-    // this shape no build ever runs under a bin lock; a racing duplicate
-    // build is benign (both sides produce equivalent checkpoint leaves and
-    // the loser is just an unreferenced cached RDD).
-    val key = s"$appId#$sfDir#$tag"
-    val cached = edgeLeaves.get(key)
-    if (cached != null) cached
-    else {
-      val built = build.localCheckpoint(true)
-      val prev = edgeLeaves.putIfAbsent(key, built)
-      if (prev != null) prev else built
-    }
-  }
+  // Derived edge tables are graft.Memo leaves: the graph queries that read
+  // one edge set share it, so its upstream stage is paid once per session.
 
   /** HOT-NEIGHBOR set for the salted wedge joins (optimization round 19):
     * co-purchase nodes whose degree exceeds `S`× the average degree
@@ -96,7 +50,7 @@ object GraphOps extends QueryPack {
   private[graft] def saltHotDeg(spark: SparkSession, sfDir: String,
                                 s: Int): DataFrame = {
     import spark.implicits._
-    memoEdgeLeaf(spark, sfDir, s"saltHotV$s") {
+    Memo.leaf(spark, sfDir, s"saltHotV$s") {
       val und = coPurchaseUnd(spark, sfDir)
       val deg = und.groupBy($"u".as("node")).agg(count(lit(1)).as("deg"))
       val avg = deg.agg((sum($"deg") cast "long").as("sd"),
@@ -315,7 +269,7 @@ object GraphOps extends QueryPack {
     */
   private def nearDupLabelsTwoStar(spark: SparkSession, sfDir: String): DataFrame = {
     val und = nearDupUnd(spark, sfDir)
-    memoEdgeLeaf(spark, sfDir, "nearDupLabelsTwoStar")(
+    Memo.leaf(spark, sfDir, "nearDupLabelsTwoStar")(
       twoStarLabels(spark, und)._1.localCheckpoint(true))
   }
 
@@ -345,7 +299,7 @@ object GraphOps extends QueryPack {
     */
   private def nearDupUnd(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    memoEdgeLeaf(spark, sfDir, "nearDupUnd")(
+    Memo.leaf(spark, sfDir, "nearDupUnd")(
       LlmPipeline.dedupNear(spark, sfDir)
         .select(explode(array(
           struct($"doc_a".as("u"), $"doc_b".as("v")),
@@ -361,11 +315,8 @@ object GraphOps extends QueryPack {
     * an eager localCheckpoint), so memoizing stores a leaf, not lineage.
     */
   private def nearDupLabels(spark: SparkSession, sfDir: String): DataFrame = {
-    // Resolve the und-edges leaf BEFORE entering this leaf's build (belt to
-    // memoEdgeLeaf's no-lock-held-while-building braces): the nested memo
-    // call is then a plain argument, never a memo-inside-memo.
     val und = nearDupUnd(spark, sfDir)
-    memoEdgeLeaf(spark, sfDir, "nearDupLabels")(propagateMinLabels(spark, und))
+    Memo.leaf(spark, sfDir, "nearDupLabels")(propagateMinLabels(spark, und))
   }
 
   private def components(spark: SparkSession, sfDir: String): DataFrame = {
@@ -421,13 +372,13 @@ object GraphOps extends QueryPack {
       .distinct()
   }
 
-  /** Undirected co-purchase edge leaf (memoized; see [[memoEdgeLeaf]]).
+  /** Undirected co-purchase edge leaf (memoized; see [[graft.Memo]]).
     * The canonical a<b form is recovered exactly by `filter(u < v)` — both
     * directions of every canonical pair are present, nothing else.
     */
   private[graft] def coPurchaseUnd(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    memoEdgeLeaf(spark, sfDir, "coPurchaseUnd")(
+    Memo.leaf(spark, sfDir, "coPurchaseUnd")(
       coPurchaseEdges(spark, sfDir)
         .select(explode(array(
           struct($"a".as("u"), $"b".as("v")),
@@ -494,7 +445,7 @@ object GraphOps extends QueryPack {
     */
   private def triPerNode(spark: SparkSession, sfDir: String): DataFrame = {
     val und = coPurchaseUnd(spark, sfDir)
-    memoEdgeLeaf(spark, sfDir, "triPerNode")(buildTriPerNode(spark, und))
+    Memo.leaf(spark, sfDir, "triPerNode")(buildTriPerNode(spark, und))
   }
 
   private def triangles(spark: SparkSession, sfDir: String): DataFrame = {
@@ -1429,12 +1380,11 @@ object GraphOps extends QueryPack {
     // and codegen linear in the iteration count (the components-lineage
     // lesson applied statically).
     val und = coPurchaseUnd(spark, sfDir)
-    // memoEdgeLeaf, not per-invocation .cache() (round-18 hygiene; the
-    // r17 HITS fix applied to its sibling): the degree table is a
-    // persistent graph leaf — the memo shares it across invocations (PPR
-    // builds the identical frame) and clearMemoForTest covers it, where a
-    // bare cache leaked blocks for the application lifetime.
-    val deg = memoEdgeLeaf(spark, sfDir, "pprDeg")(
+    // A memo leaf, not per-invocation .cache(): the degree table is a
+    // persistent graph leaf shared across invocations (PPR builds the
+    // identical frame), where a bare cache leaked blocks for the
+    // application lifetime.
+    val deg = Memo.leaf(spark, sfDir, "pprDeg")(
       und.groupBy($"u".as("node")).agg(count(lit(1)).as("deg")))
     var pr = deg.select($"node", lit(PrScale).as("pr"))
     // Stays ONE declarative 5-iteration plan deliberately: a mid-loop
@@ -1483,9 +1433,9 @@ object GraphOps extends QueryPack {
   private def graphPpr(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val und = coPurchaseUnd(spark, sfDir)
-    val deg = memoEdgeLeaf(spark, sfDir, "pprDeg")(
+    val deg = Memo.leaf(spark, sfDir, "pprDeg")(
       und.groupBy($"u".as("node")).agg(count(lit(1)).as("deg")))
-    val seeds = memoEdgeLeaf(spark, sfDir, "pprSeeds")(
+    val seeds = Memo.leaf(spark, sfDir, "pprSeeds")(
       deg.filter(pmod($"node", lit(PprSeedMod)) === 1L).select($"node"))
     val base = seeds.select($"node", lit(PprScale * 15 / 100).as("t"))
     var pr = seeds.select($"node", lit(PprScale).as("pr"))
@@ -1559,15 +1509,13 @@ object GraphOps extends QueryPack {
     */
   private def graphHits(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // memoEdgeLeaf, not per-invocation .cache() (round-17 ADVICE fix): the
-    // oriented edge/node projections are persistent graph leaves like
-    // coPurchaseUnd itself — the memo shares them across invocations and
-    // clearMemoForTest covers them, where a bare cache would leak blocks
-    // for the application lifetime.
-    val edges = memoEdgeLeaf(spark, sfDir, "hitsEdges")(
+    // Memo leaves, not per-invocation .cache(): the oriented edge/node
+    // projections are persistent graph leaves like coPurchaseUnd itself,
+    // where a bare cache would leak blocks for the application lifetime.
+    val edges = Memo.leaf(spark, sfDir, "hitsEdges")(
       coPurchaseUnd(spark, sfDir)
         .filter($"u" < $"v").select($"u".as("src"), $"v".as("dst")))
-    val nodes = memoEdgeLeaf(spark, sfDir, "hitsNodes")(
+    val nodes = Memo.leaf(spark, sfDir, "hitsNodes")(
       edges.select($"src".as("node")).union(edges.select($"dst")).distinct())
     def normalize(df: DataFrame): DataFrame = {
       // MATERIALIZE the half-round before the normalizer aggregate (the
@@ -1829,7 +1777,7 @@ object GraphOps extends QueryPack {
         struct($"doc_a".as("u"), $"doc_b".as("v")),
         struct($"doc_b".as("u"), $"doc_a".as("v")))).as("e"))
       .select($"e.u".as("u"), $"e.v".as("v"))
-    val lbl = memoEdgeLeaf(spark, sfDir, "pipelineLabels")(
+    val lbl = Memo.leaf(spark, sfDir, "pipelineLabels")(
       propagateMinLabels(spark, und))
     val members = lbl.select($"node".as("doc_id"), $"lbl".as("survivor_id"))
       .join(Catalog.load(spark, sfDir, "documents")
@@ -2038,11 +1986,11 @@ object GraphOps extends QueryPack {
   private def graphWalks(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val und = coPurchaseUnd(spark, sfDir)
-    val adj = memoEdgeLeaf(spark, sfDir, "walkAdj")(
+    val adj = Memo.leaf(spark, sfDir, "walkAdj")(
       und.select($"u", $"v",
         row_number().over(
           Window.partitionBy($"u").orderBy($"v".asc)).as("rn")))
-    val deg = memoEdgeLeaf(spark, sfDir, "pprDeg")(
+    val deg = Memo.leaf(spark, sfDir, "pprDeg")(
       und.groupBy($"u".as("node")).agg(count(lit(1)).as("deg")))
     val seeds = und.select($"u".as("node")).distinct()
       .orderBy($"node".asc).limit(WalkSeeds)
@@ -2145,11 +2093,11 @@ object GraphOps extends QueryPack {
                                sfDir: String): DataFrame = {
     import spark.implicits._
     val und = coPurchaseUnd(spark, sfDir)
-    val adj = memoEdgeLeaf(spark, sfDir, "walkAdj")(
+    val adj = Memo.leaf(spark, sfDir, "walkAdj")(
       und.select($"u", $"v",
         row_number().over(
           Window.partitionBy($"u").orderBy($"v".asc)).as("rn")))
-    val deg = memoEdgeLeaf(spark, sfDir, "pprDeg")(
+    val deg = Memo.leaf(spark, sfDir, "pprDeg")(
       und.groupBy($"u".as("node")).agg(count(lit(1)).as("deg")))
     val seeds = und.select($"u".as("node")).distinct()
       .orderBy($"node".asc).limit(WalkSeeds)
@@ -2281,7 +2229,7 @@ object GraphOps extends QueryPack {
   private[graft] def louvainLabels(spark: SparkSession, sfDir: String,
                                    rounds: Int = LouvainRounds): DataFrame =
     if (rounds == LouvainRounds)
-      memoEdgeLeaf(spark, sfDir, "louvainFine")(
+      Memo.leaf(spark, sfDir, "louvainFine")(
         louvainLabelsPlan(spark, sfDir, rounds))
     else louvainLabelsPlan(spark, sfDir, rounds)
 
@@ -2289,7 +2237,7 @@ object GraphOps extends QueryPack {
                                 rounds: Int): DataFrame = {
     import spark.implicits._
     val und = coPurchaseUnd(spark, sfDir)
-    val deg = memoEdgeLeaf(spark, sfDir, "pprDeg")(
+    val deg = Memo.leaf(spark, sfDir, "pprDeg")(
       und.groupBy($"u".as("node")).agg(count(lit(1)).as("deg")))
     val vdim = und.agg(count(lit(1)).as("vol")) // = 2m, one broadcast row
     var labels = und.select($"u".as("node")).distinct()
@@ -2370,7 +2318,7 @@ object GraphOps extends QueryPack {
     import spark.implicits._
     val und = coPurchaseUnd(spark, sfDir)
     val labels = louvainLabels(spark, sfDir)
-    val deg = memoEdgeLeaf(spark, sfDir, "pprDeg")(
+    val deg = Memo.leaf(spark, sfDir, "pprDeg")(
       und.groupBy($"u".as("node")).agg(count(lit(1)).as("deg")))
     val edges = und.filter($"u" < $"v")
     val ein = edges
@@ -2472,7 +2420,7 @@ object GraphOps extends QueryPack {
                                  sfDir: String): DataFrame = {
     import spark.implicits._
     val und = coPurchaseUnd(spark, sfDir)
-    val deg = memoEdgeLeaf(spark, sfDir, "pprDeg")(
+    val deg = Memo.leaf(spark, sfDir, "pprDeg")(
       und.groupBy($"u".as("node")).agg(count(lit(1)).as("deg")))
     val l3 = louvainCoarseLabels(spark, sfDir).localCheckpoint(true)
     val edges = und.filter($"u" < $"v")
@@ -2538,7 +2486,7 @@ object GraphOps extends QueryPack {
     import spark.implicits._
     val und = coPurchaseUnd(spark, sfDir)
     val fine = louvainLabels(spark, sfDir)
-    val deg = memoEdgeLeaf(spark, sfDir, "pprDeg")(
+    val deg = Memo.leaf(spark, sfDir, "pprDeg")(
       und.groupBy($"u".as("node")).agg(count(lit(1)).as("deg")))
     val mv = louvainAscentMoves(und, deg, fine)
     fine.join(mv, Seq("lbl")).select($"node", $"newlbl".as("lbl"))
@@ -2615,7 +2563,7 @@ object GraphOps extends QueryPack {
     // multi rollup and the Leiden refinement (the louvainFine policy);
     // explicit `levels` calls (the spec's rungs) stay un-memoized.
     if (levels == LouvainLevels)
-      memoEdgeLeaf(spark, sfDir, "louvainMultiL")(
+      Memo.leaf(spark, sfDir, "louvainMultiL")(
         louvainMultiLabelsPlan(spark, sfDir, levels))
     else louvainMultiLabelsPlan(spark, sfDir, levels)
 
@@ -2623,7 +2571,7 @@ object GraphOps extends QueryPack {
                                      levels: Int): DataFrame = {
     import spark.implicits._
     val und = coPurchaseUnd(spark, sfDir)
-    val deg = memoEdgeLeaf(spark, sfDir, "pprDeg")(
+    val deg = Memo.leaf(spark, sfDir, "pprDeg")(
       und.groupBy($"u".as("node")).agg(count(lit(1)).as("deg")))
     var labels = louvainLabels(spark, sfDir)
     var lvl = 0
@@ -2668,7 +2616,7 @@ object GraphOps extends QueryPack {
                                 sfDir: String): DataFrame = {
     import spark.implicits._
     val und = coPurchaseUnd(spark, sfDir)
-    val deg = memoEdgeLeaf(spark, sfDir, "pprDeg")(
+    val deg = Memo.leaf(spark, sfDir, "pprDeg")(
       und.groupBy($"u".as("node")).agg(count(lit(1)).as("deg")))
     val lm = louvainMultiLabels(spark, sfDir).localCheckpoint(true)
     val edges = und.filter($"u" < $"v")
@@ -2779,7 +2727,7 @@ object GraphOps extends QueryPack {
                                  sfDir: String): DataFrame = {
     import spark.implicits._
     val und = coPurchaseUnd(spark, sfDir)
-    val deg = memoEdgeLeaf(spark, sfDir, "pprDeg")(
+    val deg = Memo.leaf(spark, sfDir, "pprDeg")(
       und.groupBy($"u".as("node")).agg(count(lit(1)).as("deg")))
     val lm = louvainMultiLabels(spark, sfDir).localCheckpoint(true)
     // shuffle_hash hints (optimization round 19, second pass): lm/refined/
@@ -3248,28 +3196,28 @@ object GraphOps extends QueryPack {
       Some(eigencentralityOracle)),
     Q("q_graph_label_propagation", labelPropagation,
       Some(labelPropagationOracle)),
-    Q("q_graph_louvain", graphLouvain, Some(graphLouvainOracle)),
+    Q("q_graph_louvain", graphLouvain, Some(graphLouvainOracle), warm = true),
     Q("q_graph_louvain_coarse", graphLouvainCoarse,
       Some(graphLouvainCoarseOracle)),
     Q("q_graph_louvain_multi", graphLouvainMulti,
-      Some(graphLouvainMultiOracle)),
+      Some(graphLouvainMultiOracle), warm = true),
     Q("q_graph_louvain_refine", graphLouvainRefine,
       Some(graphLouvainRefineOracle)),
     Q("q_graph_walks", graphWalks, Some(graphWalksOracle)),
     Q("q_graph_walks_biased", graphWalksBiased,
-      Some(graphWalksBiasedOracle)),
+      Some(graphWalksBiasedOracle), warm = true),
     Q("q_graph_link_ra", linkRa, Some(linkRaOracle)),
     Q("q_graph_modularity", graphModularity, Some(graphModularityOracle)),
     Q("q_split_group_aware", splitGroupAware, Some(splitGroupAwareOracle)),
-    Q("q_dedup_pipeline", dedupPipeline, Some(dedupPipelineOracle)),
+    Q("q_dedup_pipeline", dedupPipeline, Some(dedupPipelineOracle), warm = true),
     Q("q_graph_clustering_coeff", graphClusteringCoeff,
       Some(graphClusteringCoeffOracle)),
     Q("q_er_golden", erGolden, Some(erGoldenOracle)),
     Q("q_graph_kcore", graphKcore, Some(kcoreOracle)),
     Q("q_graph_mst", graphMst, None),
-    Q("q_graph_components", components, Some(componentsOracle)),
-    Q("q_graph_components_twostar", componentsTwoStar, Some(componentsOracle)),
-    Q("q_graph_triangles", triangles, Some(trianglesOracle)),
+    Q("q_graph_components", components, Some(componentsOracle), warm = true),
+    Q("q_graph_components_twostar", componentsTwoStar, Some(componentsOracle), warm = true),
+    Q("q_graph_triangles", triangles, Some(trianglesOracle), warm = true),
     Q("q_graph_degree_hist", degreeHist, Some(degreeHistOracle)),
     Q("q_graph_common_neighbors", commonNeighbors, Some(commonNeighborsOracle)),
     Q("q_graph_common_neighbors_capped", commonNeighborsCapped,
@@ -3279,8 +3227,8 @@ object GraphOps extends QueryPack {
     Q("q_graph_pagerank", pagerank, Some(pagerankOracle)),
     Q("q_graph_ppr", graphPpr, Some(graphPprOracle)),
     Q("q_graph_closeness", graphCloseness, Some(graphClosenessOracle)),
-    Q("q_graph_betweenness", graphBetweenness, Some(graphBetweennessOracle)),
-    Q("q_graph_hits", graphHits, Some(graphHitsOracle)),
+    Q("q_graph_betweenness", graphBetweenness, Some(graphBetweennessOracle), warm = true),
+    Q("q_graph_hits", graphHits, Some(graphHitsOracle), warm = true),
     Q("q_dedup_clusters", dedupClusters, Some(dedupClustersOracle)),
     Q("q_dedup_survivor", dedupSurvivor, Some(dedupSurvivorOracle)),
   )

@@ -999,7 +999,7 @@ object Joins extends QueryPack {
         JOIN nation ON s_nationkey = n_nationkey
         JOIN region ON n_regionkey = r_regionkey
       GROUP BY r_name, n_name
-      ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""")),
+      ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST"""), warm = true),
     Q("q_join_left_outer", joinLeftOuter, Some(s"""
       SELECT c_custkey, count(o_orderkey) AS n_orders_1998,
         ${Oracle.dsum("o_totalprice")} AS spend_1998

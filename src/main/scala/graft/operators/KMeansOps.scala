@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Catalog, Q, QueryPack}
+import graft.{Catalog, Memo, Q, QueryPack}
 
 /** SURVEY.md §2.J2 — k-means centroid TRAINING over the embeddings table
   * (added round 12): the missing "learn the cells" half of the IVF ANN
@@ -52,7 +52,7 @@ import graft.{Catalog, Q, QueryPack}
   * so iterative lineage stays flat (the pagerank/components precedent; on
   * a real cluster swap in reliable checkpointing). The final assignment
   * and centroids materialize once per (application, sfDir) as
-  * [[GraphOps.memoEdgeLeaf]] leaves shared by both queries — train once,
+  * [[graft.Memo]] leaves shared by both queries — train once,
   * serve many, exactly like the label-cell IVF split.
   */
 object KMeansOps extends QueryPack {
@@ -67,7 +67,7 @@ object KMeansOps extends QueryPack {
     */
   private[operators] def kmQuant(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    GraphOps.memoEdgeLeaf(spark, sfDir, "kmQuant") {
+    Memo.leaf(spark, sfDir, "kmQuant") {
       Catalog.load(spark, sfDir, "embeddings")
         .select($"vec_id",
           transform($"embedding",
@@ -104,7 +104,7 @@ object KMeansOps extends QueryPack {
   /** Final (3rd-iteration) assignment leaf: (vec_id, cell). */
   private[graft] def kmAssign(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    GraphOps.memoEdgeLeaf(spark, sfDir, "kmAssign") {
+    Memo.leaf(spark, sfDir, "kmAssign") {
       val quant = kmQuant(spark, sfDir)
       val seedW = Window.orderBy($"h".asc, $"vec_id".asc)
       // k rows only ever flow through this window — the single-partition
@@ -133,8 +133,7 @@ object KMeansOps extends QueryPack {
     * cheap agg; guarantees leaf consistency).
     */
   private[graft] def kmCentroids(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    GraphOps.memoEdgeLeaf(spark, sfDir, "kmCentroids") {
+    Memo.leaf(spark, sfDir, "kmCentroids") {
       centroidsOf(kmAssign(spark, sfDir)
         .join(kmQuant(spark, sfDir), Seq("vec_id")))
     }
@@ -146,7 +145,7 @@ object KMeansOps extends QueryPack {
     */
   private[graft] def kmPostings(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    GraphOps.memoEdgeLeaf(spark, sfDir, "kmPostings") {
+    Memo.leaf(spark, sfDir, "kmPostings") {
       Catalog.load(spark, sfDir, "embeddings")
         .join(kmAssign(spark, sfDir), Seq("vec_id"))
         .select($"cell", $"vec_id".as("cand_id"), $"embedding".as("c_emb"))
@@ -597,19 +596,13 @@ object KMeansOps extends QueryPack {
   /** The trained direction vector itself, 1-indexed by dimension —
     * extracted from [[vecPcaPower]] (round 13) so the projection SERVE
     * query reuses the SAME trained artifact instead of retraining.
-    * Cached per (application, sfDir): the value is 64 longs (driver-side
-    * by design — the training loop's collects are the bounded 64-row
-    * actions documented above), so a plain map — not a checkpoint leaf —
-    * is the right memo shape.
+    * A [[graft.Memo]] value, not a leaf: 64 longs, driver-side by design
+    * (the training loop's collects are the bounded 64-row actions
+    * documented above).
     */
-  private val dirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, IndexedSeq[Long]]()
-
   private[graft] def pcaDirection(
-      spark: SparkSession, sfDir: String): IndexedSeq[Long] = {
-    val appId = spark.sparkContext.applicationId
-    dirCache.keySet.removeIf(k => !k.startsWith(s"$appId#"))
-    dirCache.computeIfAbsent(s"$appId#$sfDir", _ => {
+      spark: SparkSession, sfDir: String): IndexedSeq[Long] =
+    Memo(spark, sfDir, "pcaDirection") {
       import spark.implicits._
       val quant = kmQuant(spark, sfDir)
       var v: IndexedSeq[BigInt] = IndexedSeq.fill(Dim)(BigInt(1000000))
@@ -628,8 +621,7 @@ object KMeansOps extends QueryPack {
         v = w.map(wi => ((wi + m) * 1000000) / m - 1000000).toIndexedSeq
       }
       v.map(_.toLong)
-    })
-  }
+    }
 
   private def vecPcaPower(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
@@ -989,7 +981,7 @@ object KMeansOps extends QueryPack {
     Q("q_ml_class_report", mlClassReport, Some(mlClassReportOracle)),
     Q("q_vec_covariance", vecCovariance, Some(vecCovarianceOracle)),
     Q("q_vec_project", vecProject, Some(vecProjectOracle)),
-    Q("q_ml_kmeans_train", kmeansTrain, Some(kmeansTrainOracle)),
+    Q("q_ml_kmeans_train", kmeansTrain, Some(kmeansTrainOracle), warm = true),
     Q("q_ml_kmeans_inertia", kmeansInertia, Some(kmeansInertiaOracle)),
     Q("q_sim_ann_ivf_trained", ivfTrainedProbe, Some(ivfTrainedOracle)),
     Q("q_sim_ann_ivf_nprobe", ivfTrainedNprobe, Some(ivfTrainedNprobeOracle)),

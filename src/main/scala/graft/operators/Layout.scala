@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.Memo
+
 /** File-layout compaction — the operator behind `Catalog`'s fixture
   * re-split, exposed as a first-class API. A lakehouse table degrades into
   * layouts that defeat scan parallelism from BOTH ends: thousands of tiny
@@ -33,23 +35,16 @@ object Layout {
     n
   }
 
-  private lazy val scratch =
-    java.nio.file.Files.createTempDirectory("graft_compact_").toString
-  private val materialized =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Compact the fixture `lineitem` once per (JVM, sfDir) into ~256 KB
-    * files and return the destination directory.
+  /** Compact the fixture `lineitem` once (a [[graft.Memo]] directory) into
+    * ~256 KB files and return the destination directory.
     */
   def compactedLineitem(spark: SparkSession, sfDir: String): String =
-    materialized.computeIfAbsent(sfDir, { _ =>
-      val dest = s"$scratch/lineitem_${sfDir.replaceAll("[^A-Za-z0-9.-]", "_")}"
+    Memo.dir(spark, sfDir, "compact_lineitem") { dest =>
       val srcBytes =
         java.nio.file.Files.size(java.nio.file.Path.of(s"$sfDir/lineitem.parquet"))
       compact(graft.Catalog.load(spark, sfDir, "lineitem"), srcBytes, dest,
         targetFileBytes = 256L << 10)
-      dest
-    })
+    }
 
   /** Z-value of (x, y) — bit j of x at output bit 2j, bit j of y at 2j+1 —
     * as a pure integer expression: Σ 4^j·(xbit + 2·ybit). Unrolled to 8
@@ -117,11 +112,8 @@ object Layout {
     $steps"""
   }
 
-  private val materializedH =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Write a HILBERT-clustered copy of `orders` once per (JVM, sfDir) —
-    * the write half of the Hilbert story (q_layout_hilbert grades the
+  /** Write a HILBERT-clustered copy of `orders` once (a [[graft.Memo]]
+    * directory) — the write half of the Hilbert story (q_layout_hilbert grades the
     * index arithmetic and per-segment locality; this materializes the
     * clustering and q_layout_hilbert_write answers a 2-D range query from
     * it). Rows carry their grid keys and Hilbert index `hd`; the table is
@@ -132,9 +124,8 @@ object Layout {
     * partition (the q_layout_hilbert_write spec proves it).
     */
   def hilbertOrders(spark: SparkSession, sfDir: String): String =
-    materializedH.computeIfAbsent(sfDir, { _ =>
+    Memo.dir(spark, sfDir, "orders_h") { dest =>
       import org.apache.spark.sql.functions.{col, expr}
-      val dest = s"$scratch/orders_h_${sfDir.replaceAll("[^A-Za-z0-9.-]", "_")}"
       val keyed = graft.Catalog.load(spark, sfDir, "orders")
         .withColumn("x", expr("CAST(o_custkey % 256 AS BIGINT)"))
         .withColumn("y",
@@ -144,8 +135,7 @@ object Layout {
         .repartition(col("seg"))
         .sortWithinPartitions(col("hd"))
         .write.mode("overwrite").partitionBy("seg").parquet(dest)
-      dest
-    })
+    }
 
   /** Hilbert RANGE DECOMPOSITION — the query-planning step of every
     * Hilbert-clustered store: the distinct curve segments intersecting
@@ -162,13 +152,10 @@ object Layout {
       .collect().map(_.getLong(0)).toSeq.sorted
   }
 
-  private val materializedZm =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** ZONE-MAP layout (added round 12 batch 8; manifest made distributed
-    * round 14, r13 VERDICT note 4): lineitem rewritten once per
-    * (JVM, sfDir) range-clustered by `l_shipdate` into 16 files (each a
-    * contiguous shipdate slice), and the FILE-LEVEL min/max manifest every
+    * round 14, r13 VERDICT note 4): lineitem rewritten once (a
+    * [[graft.Memo]] directory) range-clustered by `l_shipdate` into 16
+    * files (each a contiguous shipdate slice), and the FILE-LEVEL min/max manifest every
     * lakehouse keeps (Delta per-file stats, Iceberg manifests) built in
     * the SAME job — one `input_file_name()` grouping pass at write time,
     * landed as a parquet TABLE beside the data (never collected whole:
@@ -176,9 +163,9 @@ object Layout {
     * its pruned form). Returns the manifest table's path.
     */
   def zonemapManifestPath(spark: SparkSession, sfDir: String): String =
-    materializedZm.computeIfAbsent(sfDir, { _ =>
+    Memo.dir(spark, sfDir, "li_zm") { d =>
       import org.apache.spark.sql.functions._
-      val dest = s"$scratch/li_zm_${sfDir.replaceAll("[^A-Za-z0-9.-]", "_")}"
+      val dest = s"$d/data"
       graft.Catalog.load(spark, sfDir, "lineitem")
         .repartitionByRange(16, col("l_shipdate"), col("l_orderkey"))
         .sortWithinPartitions(col("l_shipdate"))
@@ -187,9 +174,8 @@ object Layout {
         .groupBy(input_file_name().as("file"))
         .agg(min(col("l_shipdate")).as("mn"), max(col("l_shipdate")).as("mx"))
         .coalesce(1)
-        .write.mode("overwrite").parquet(s"${dest}__manifest")
-      s"${dest}__manifest"
-    })
+        .write.mode("overwrite").parquet(s"$d/manifest")
+    } + "/manifest"
 
   /** The zone-map manifest as a DataFrame (file, mn, mx). */
   def zonemapManifest(spark: SparkSession, sfDir: String)
@@ -214,11 +200,8 @@ object Layout {
       .collect().map(_.getString(0)).toSeq.sorted
   }
 
-  private val materializedZ =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Write a Z-ORDERED copy of `orders` once per (JVM, sfDir) and return
-    * its root path — the WRITE half of the z-order story
+  /** Write a Z-ORDERED copy of `orders` once (a [[graft.Memo]] directory)
+    * and return its root path — the WRITE half of the z-order story
     * (q_layout_zorder grades the interleave arithmetic; this materializes
     * the clustering and q_layout_zorder_write answers a 2-D range query
     * from it). Rows carry their 8-bit grid keys (`zx` = custkey mod 256,
@@ -235,9 +218,8 @@ object Layout {
     * rewrite, never on the query path.
     */
   def zorderedOrders(spark: SparkSession, sfDir: String): String =
-    materializedZ.computeIfAbsent(sfDir, { _ =>
+    Memo.dir(spark, sfDir, "orders_z") { dest =>
       import org.apache.spark.sql.functions.{col, expr}
-      val dest = s"$scratch/orders_z_${sfDir.replaceAll("[^A-Za-z0-9.-]", "_")}"
       graft.Catalog.load(spark, sfDir, "orders")
         .withColumn("zx", expr("CAST(o_custkey % 256 AS BIGINT)"))
         .withColumn("zy",
@@ -247,6 +229,5 @@ object Layout {
         .repartition(col("tile"))
         .sortWithinPartitions(col("z"))
         .write.mode("overwrite").partitionBy("tile").parquet(dest)
-      dest
-    })
+    }
 }

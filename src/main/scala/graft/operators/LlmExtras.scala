@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Catalog, Q, QueryPack}
+import graft.{Catalog, Memo, Q, QueryPack}
 import graft.Dsl._
 
 /** Training-data-pipeline operators beyond SURVEY §2.J's core set (declared
@@ -514,7 +514,7 @@ object LlmExtras extends QueryPack {
 
   /** IVF index BUILD, materialized once per (application, sfDir) as two
     * memoized leaves (round 11 — the build/serve split the production
-    * retrieval shape needs; the leaf machinery is [[GraphOps.memoEdgeLeaf]],
+    * retrieval shape needs; the leaf machinery is [[graft.Memo]],
     * same pattern as the graph edge/label leaves):
     *
     *  - centroids leaf: cell → mean vector (tiny, |cells| rows) — 64 avg
@@ -533,7 +533,7 @@ object LlmExtras extends QueryPack {
     */
   private[graft] def ivfCentroids(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    GraphOps.memoEdgeLeaf(spark, sfDir, "ivfCentroids") {
+    Memo.leaf(spark, sfDir, "ivfCentroids") {
       Catalog.load(spark, sfDir, "embeddings").groupBy($"label")
         .agg(array((0 until 64).map(i =>
           avg(element_at($"embedding", i + 1).cast("double"))): _*)
@@ -543,7 +543,7 @@ object LlmExtras extends QueryPack {
 
   private[graft] def ivfPostings(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    GraphOps.memoEdgeLeaf(spark, sfDir, "ivfPostings") {
+    Memo.leaf(spark, sfDir, "ivfPostings") {
       Catalog.load(spark, sfDir, "embeddings")
         .select($"label".as("cell"), $"vec_id".as("cand_id"),
           $"embedding".as("c_emb"))
@@ -881,11 +881,11 @@ object LlmExtras extends QueryPack {
     bb.array()
   }
 
-  /** Writes the image scratch once per (JVM, sfDir): doc_id < 64, format
+  /** Writes the image scratch once (a [[graft.Memo]] dir): doc_id < 64, format
     * doc_id mod 3 (png/jpg/webp), width 64+(id·7 mod 512), height
     * 64+(id·11 mod 512) — the SAME closed form the oracle predicts. */
   private def imgScratch(spark: SparkSession, sfDir: String): String =
-    graft.sources.Scans.materializeOnce("imgsrc", sfDir) { d =>
+    Memo.dir(spark, sfDir, "imgsrc") { d =>
       val docs = Catalog.load(spark, sfDir, "documents")
         .filter(col("doc_id") < 64).select(col("doc_id"), col("text")).collect()
       val p = java.nio.file.Paths.get(d)
@@ -1045,7 +1045,7 @@ object LlmExtras extends QueryPack {
     * 8000·(1 + id%5), 16-bit PCM, the doc's UTF-8 bytes as the data
     * chunk — the same closed form the oracle predicts. */
   private def wavScratch(spark: SparkSession, sfDir: String): String =
-    graft.sources.Scans.materializeOnce("wavsrc", sfDir) { d =>
+    Memo.dir(spark, sfDir, "wavsrc") { d =>
       val docs = Catalog.load(spark, sfDir, "documents")
         .filter(col("doc_id") < 48).select(col("doc_id"), col("text")).collect()
       val p = java.nio.file.Paths.get(d)
@@ -1692,11 +1692,11 @@ object LlmExtras extends QueryPack {
     Q("q_dedup_simhash", dedupSimhash, Some(dedupSimhashSql)),
     Q("q_dedup_simhash_eval", dedupSimhashEval, Some(dedupSimhashEvalSql)),
     Q("q_sim_ann_lsh", simAnnLsh, Some(simAnnLshSql)),
-    Q("q_sim_ann_ivf", simIvfAnn, Some(simIvfSql(0L, 10L))),
+    Q("q_sim_ann_ivf", simIvfAnn, Some(simIvfSql(0L, 10L)), warm = true),
     Q("q_sim_ann_ivf_serve", simIvfAnnServe, Some(simIvfSql(10L, 20L))),
     Q("q_sim_ann_recall_eval", simAnnRecallEval, Some(simAnnRecallEvalSql)),
-    Q("q_multimodal_binary", multimodalBinary, Some(multimodalBinarySql)),
-    Q("q_multimodal_wav", multimodalWav, Some(multimodalWavSql)),
+    Q("q_multimodal_binary", multimodalBinary, Some(multimodalBinarySql), warm = true),
+    Q("q_multimodal_wav", multimodalWav, Some(multimodalWavSql), warm = true),
     Q("q_multimodal_frames", multimodalFrames, Some(multimodalFramesSql)),
     Q("q_text_collocations", collocations, Some(collocationsSql)),
     Q("q_text_ngram_lm", ngramLm, Some(ngramLmSql)),

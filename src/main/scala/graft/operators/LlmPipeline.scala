@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Catalog, Oracle, Q, QueryPack}
+import graft.{Catalog, Memo, Oracle, Q, QueryPack}
 import graft.Dsl._
 
 /** SURVEY.md §2.J — LLM-training-data pipeline operators over the
@@ -103,14 +103,13 @@ object LlmPipeline extends QueryPack {
     * and the anti-join probe, and would otherwise run the tokenize+shingle
     * build twice.
     *
-    * The df-capped result is a materialize-once leaf (GraphOps.memoEdgeLeaf
-    * pattern, round 9): q_dedup_near and q_dedup_minhash are declared stages
-    * of ONE dedup pipeline and each rebuilt the identical tokenize→shingle→
-    * df-cap base from raw documents — the same duplicated-upstream cost the
-    * graph edge leaves eliminated. Bench pre-warms it with the other leaves.
+    * The df-capped result is a [[graft.Memo]] leaf: q_dedup_near and
+    * q_dedup_minhash are declared stages of ONE dedup pipeline and each
+    * rebuilt the identical tokenize→shingle→df-cap base from raw documents.
+    * Bench pre-warms it with the other leaves.
     */
   private[operators] def shingles(spark: SparkSession, sfDir: String): DataFrame =
-    GraphOps.memoEdgeLeaf(spark, sfDir, "docShingles")(buildShingles(spark, sfDir))
+    Memo.leaf(spark, sfDir, "docShingles")(buildShingles(spark, sfDir))
 
   /** Bench warm hook: resolving the leaf materializes it (eager checkpoint). */
   private[graft] def warmShingleLeaf(spark: SparkSession, sfDir: String): Unit = {
@@ -225,7 +224,7 @@ object LlmPipeline extends QueryPack {
     * verify stage both probe.
     */
   private[operators] def mhDocs(spark: SparkSession, sfDir: String): DataFrame =
-    GraphOps.memoEdgeLeaf(spark, sfDir, "mhDocs") {
+    Memo.leaf(spark, sfDir, "mhDocs") {
       import spark.implicits._
       val sh = shingles(spark, sfDir)
         .select($"doc_id", xxhash64(lit("graft_mh"), $"shingle").as("h"))

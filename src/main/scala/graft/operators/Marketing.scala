@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Catalog, Oracle, Q, QueryPack}
+import graft.{Catalog, Memo, Oracle, Q, QueryPack}
 import graft.Dsl._
 
 /** SURVEY.md §2.L — marketing-ETL operators (added round 4): the
@@ -273,7 +273,7 @@ object Marketing extends QueryPack {
     */
   private def basketItems(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    GraphOps.memoEdgeLeaf(spark, sfDir, "basketItems")(
+    Memo.leaf(spark, sfDir, "basketItems")(
       Catalog.load(spark, sfDir, "lineitem")
         .select($"l_orderkey".as("basket"), $"l_partkey".as("item")).distinct())
   }
@@ -1084,7 +1084,7 @@ object Marketing extends QueryPack {
       Some(attributionMarkovOracle)),
     Q("q_funnel_window", funnelWindow, Some(funnelWindowOracle)),
     Q("q_cohort_ltv", cohortLtv, Some(cohortLtvOracle)),
-    Q("q_survival_km", survivalKm, Some(survivalKmOracle)),
+    Q("q_survival_km", survivalKm, Some(survivalKmOracle), warm = true),
     Q("q_path_transitions", pathTransitions, Some(pathTransitionsOracle)),
     Q("q_marketing_engagement_decay", engagementDecay,
       Some(engagementDecayOracle)),
@@ -1094,7 +1094,7 @@ object Marketing extends QueryPack {
     Q("q_scd2_compact", scd2Compact, Some(scd2CompactOracle)),
     Q("q_cdc_apply", cdcApply, Some(cdcApplyOracle)),
     Q("q_basket_pairs", basketPairs, Some(basketPairsOracle)),
-    Q("q_basket_rules", basketRules, Some(basketRulesOracle)),
+    Q("q_basket_rules", basketRules, Some(basketRulesOracle), warm = true),
     Q("q_seq_pattern", seqPattern, Some(seqPatternOracle)),
     Q("q_funnel_steps", funnelSteps, Some("""
       WITH v AS (

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Catalog, Q, QueryPack}
+import graft.{Catalog, Memo, Q, QueryPack}
 
 /** SURVEY.md §2.J2 — PRODUCT QUANTIZATION (added round 12 batch 8): the
   * compressed-index ANN stage every billion-vector store runs (FAISS's
@@ -42,7 +42,7 @@ import graft.{Catalog, Q, QueryPack}
   *
   * Scale: training shuffles (vec_id, sub)-keyed subvector rows (the
   * argmin window partitions by (vec_id, sub) — never global); the codes
-  * leaf is the memoized encode-once artifact ([[GraphOps.memoEdgeLeaf]]);
+  * leaf is the memoized encode-once artifact ([[graft.Memo]]);
   * ADC joins the N·M-row code table against a BROADCAST LUT (probes ×
   * M × Kpq rows — small by construction) and sums map-side-combined per
   * (probe, cand). Candidate scoring never touches the raw vectors — the
@@ -61,7 +61,7 @@ object PqOps extends QueryPack {
     */
   private[operators] def subQuant(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    GraphOps.memoEdgeLeaf(spark, sfDir, "pqSubQuant") {
+    Memo.leaf(spark, sfDir, "pqSubQuant") {
       Catalog.load(spark, sfDir, "embeddings")
         .select($"vec_id",
           transform($"embedding",
@@ -104,7 +104,7 @@ object PqOps extends QueryPack {
   /** Final code assignment leaf: (vec_id, sub, code). */
   private[graft] def pqCodes(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    GraphOps.memoEdgeLeaf(spark, sfDir, "pqCodes") {
+    Memo.leaf(spark, sfDir, "pqCodes") {
       val sq = subQuant(spark, sfDir)
       val seedW = Window.orderBy($"h".asc, $"vec_id".asc)
       val seeds = sq.select($"vec_id").distinct()
@@ -130,8 +130,7 @@ object PqOps extends QueryPack {
     * with the same integer arithmetic (the kmCentroids consistency
     * pattern). */
   private[graft] def pqCodebooks(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    GraphOps.memoEdgeLeaf(spark, sfDir, "pqCodebooks") {
+    Memo.leaf(spark, sfDir, "pqCodebooks") {
       centroidsOf(pqCodes(spark, sfDir)
         .join(subQuant(spark, sfDir), Seq("vec_id", "sub")))
     }
@@ -246,7 +245,7 @@ object PqOps extends QueryPack {
     ORDER BY probe_id ASC NULLS FIRST, rank ASC NULLS FIRST"""
 
   override val queries: Vector[Q] = Vector(
-    Q("q_sim_pq_train", pqTrain, Some(pqTrainOracle)),
+    Q("q_sim_pq_train", pqTrain, Some(pqTrainOracle), warm = true),
     Q("q_sim_pq_adc", pqAdc, Some(pqAdcOracle)),
   )
 }

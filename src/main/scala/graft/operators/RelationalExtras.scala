@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Catalog, Oracle, Q, QueryPack}
+import graft.{Catalog, Memo, Oracle, Q, QueryPack}
 import graft.Dsl._
 
 /** SURVEY.md §2.M — relational depth (added round 4): bucketed co-located
@@ -28,18 +28,11 @@ import graft.Dsl._
   */
 object RelationalExtras extends QueryPack {
 
-  /** Bucketed tables are written once per (catalog, sfDir): the write is the
-    * setup step (like the source-roundtrip scratch artifacts, see
-    * [[graft.sources.Scans]]), the query itself is the co-located read+join.
-    * Keyed on the session's sharedState so a different catalog (fresh test
-    * session) re-materializes its own tables.
+  /** Bucketed tables are written once (a [[graft.Memo]] entry): the write
+    * is the setup step, the query itself is the co-located read+join.
     */
-  private val bucketed =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  private def bucketTables(spark: SparkSession, sfDir: String): (String, String) = {
-    val key = s"${System.identityHashCode(spark.sharedState)}#$sfDir"
-    bucketed.computeIfAbsent(key, { _ =>
+  private def bucketTables(spark: SparkSession, sfDir: String): (String, String) =
+    Memo(spark, sfDir, "bucketTables") {
       val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
       val o = s"graft_orders_bkt_$tag"
       val l = s"graft_lineitem_bkt_$tag"
@@ -50,11 +43,10 @@ object RelationalExtras extends QueryPack {
         .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
         .mode("overwrite").saveAsTable(l)
       (o, l)
-    })
-  }
+    }
 
-  /** Analyzed (CBO-stats) catalog tables, written + ANALYZEd once per
-    * (catalog, sfDir) — the statistics substrate for
+  /** Analyzed (CBO-stats) catalog tables, written + ANALYZEd once (a
+    * [[graft.Memo]] entry) — the statistics substrate for
     * [[joinCboReorder]]. `ANALYZE TABLE ... COMPUTE STATISTICS` records
     * row counts and size; `FOR ALL COLUMNS` adds NDV/min/max/null-count
     * histogram-free column stats, which is what FilterEstimation and
@@ -63,12 +55,8 @@ object RelationalExtras extends QueryPack {
     * query is that WITH stats the ENGINE fixes a bad join order, so
     * per-query hand-ordering stops being required.
     */
-  private val cboAnalyzed =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, String]]()
-
-  private def cboTables(spark: SparkSession, sfDir: String): Map[String, String] = {
-    val key = s"${System.identityHashCode(spark.sharedState)}#$sfDir"
-    cboAnalyzed.computeIfAbsent(key, { _ =>
+  private def cboTables(spark: SparkSession, sfDir: String): Map[String, String] =
+    Memo(spark, sfDir, "cboTables") {
       val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
       Seq("lineitem", "orders", "customer", "nation").map { t =>
         val name = s"graft_cbo_${t}_$tag"
@@ -78,8 +66,7 @@ object RelationalExtras extends QueryPack {
         spark.sql(s"ANALYZE TABLE $name COMPUTE STATISTICS FOR ALL COLUMNS")
         t -> name
       }.toMap
-    })
-  }
+    }
 
   /** The deliberately BADLY-ORDERED 4-way join text: syntactic order is
     * left-deep from the biggest fact (lineitem ⋈ orders first, the two
@@ -666,7 +653,7 @@ object RelationalExtras extends QueryPack {
     Q("q_er_jaro_winkler", erJaroWinkler, Some(erJaroWinklerOracle)),
     Q("q_er_blocking", erBlocking, Some(erBlockingOracle)),
     Q("q_er_sorted_neighborhood", erSortedNeighborhood,
-      Some(erSortedNeighborhoodOracle)),
+      Some(erSortedNeighborhoodOracle), warm = true),
     Q("q_er_score", erScore, Some(erScoreOracle)),
     Q("q_join_null_aware_anti", joinNullAwareAnti, Some(joinNullAwareAntiOracle)),
     Q("q_join_lateral_topk", joinLateralTopk, Some(joinLateralTopkOracle)),
@@ -681,13 +668,13 @@ object RelationalExtras extends QueryPack {
       WHERE n.n_name IN ('NATION_3', 'NATION_7')
         AND c.c_mktsegment = 'BUILDING'
       GROUP BY n_name
-      ORDER BY n_name ASC NULLS FIRST""")),
+      ORDER BY n_name ASC NULLS FIRST"""), warm = true),
     Q("q_join_bucketed", joinBucketed, Some(s"""
       SELECT o_orderpriority, count(*) AS n_items,
         ${Oracle.dsum("l_extendedprice * (1.0 - l_discount)")} AS revenue
       FROM orders JOIN lineitem ON o_orderkey = l_orderkey
       GROUP BY o_orderpriority
-      ORDER BY o_orderpriority ASC NULLS FIRST""")),
+      ORDER BY o_orderpriority ASC NULLS FIRST"""), warm = true),
     Q("q_subquery_suite", subquerySuite, Some("""
       SELECT o.o_orderkey, o.o_custkey, o.o_totalprice
       FROM orders o

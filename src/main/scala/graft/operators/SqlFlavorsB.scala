@@ -593,7 +593,6 @@ object SqlFlavorsB extends QueryPack {
     * map-side partial aggregation to a 1-row result.
     */
   private def sqlTpcdsQ88Flavor(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     val t = table(spark, sfDir) _
     val bands = (0 until 8).map { i =>
       val lo = 1 + i * 6

@@ -40,7 +40,7 @@ import org.apache.spark.sql.types.LongType
   * Scale: the rollup is |months × flags × statuses| rows — the classic
   * 10^6-fold reduction; serving the query from it is a broadcast-scale
   * aggregation instead of a fact scan. Registration is per-application
-  * (the memo-leaf eviction contract of [[graft.operators.GraphOps]]).
+  * (the eviction rule of [[graft.Memo]]).
   */
 object MvAggregateRewrite extends Rule[LogicalPlan] {
 

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Catalog, Q, QueryPack}
+import graft.{Catalog, Memo, Q, QueryPack}
 import graft.Dsl._
 
 /** SURVEY.md §2.I — the events stream.
@@ -172,9 +172,9 @@ object Streams extends QueryPack {
                               extraConfs: Map[String, String] = Map.empty)(
       pipe: DataFrame => DataFrame)(finish: DataFrame => DataFrame): DataFrame = {
     import spark.implicits._
-    val srcDir = java.nio.file.Files.createTempDirectory(s"graft_${tag}_src_")
+    val srcDir = Memo.tempDir(s"${tag}_src")
     linkEventsInto(srcDir, sfDir)
-    val ckDir = java.nio.file.Files.createTempDirectory(s"graft_${tag}_ck_")
+    val ckDir = Memo.tempDir(s"${tag}_ck")
     val physical = spark.read.parquet(s"$sfDir/events.parquet").schema
     val tsNorm = physical("ts").dataType match {
       case org.apache.spark.sql.types.LongType => expr("timestamp_micros(ts div 1000)")
@@ -248,10 +248,10 @@ object Streams extends QueryPack {
     */
   private def foreachBatchSink(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_fb_src_")
+    val srcDir = Memo.tempDir("fb_src")
     linkEventsInto(srcDir, sfDir)
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_fb_ck_")
-    val outDir = java.nio.file.Files.createTempDirectory("graft_fb_out_")
+    val ckDir = Memo.tempDir("fb_ck")
+    val outDir = Memo.tempDir("fb_out")
     val physical = spark.read.parquet(s"$sfDir/events.parquet").schema
     // State-store sizing: one row per user — 4 stores, not 32 (the
     // runEventsStream r14 rationale), pinned into this run's checkpoint
@@ -366,20 +366,14 @@ object Streams extends QueryPack {
     * fixture replay just compresses deploy-restart-backfill into one
     * graded query.
     */
-  private val stageSplits =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Midpoint-split staging of the events table (early/, late/, buffer/
-    * phase dirs), written ONCE per (JVM, sfDir) and shared by the
-    * restart and late-drop runs — the split is pure harness setup, and
-    * unlike checkpointed RDD leaves these are plain parquet files, so
-    * the memo safely outlives any one SparkSession. Each graded run
-    * still pays its full source/checkpoint/sink lifecycles.
+    * phase dirs), written once through [[graft.Memo]] and shared by the
+    * restart and late-drop runs — the split is pure harness setup. Each
+    * graded run still pays its full source/checkpoint/sink lifecycles.
     */
   private def midpointStage(spark: SparkSession, sfDir: String): String =
-    stageSplits.computeIfAbsent(sfDir, { _ =>
+    Memo.dir(spark, sfDir, "split") { stage =>
       import spark.implicits._
-      val stage = java.nio.file.Files.createTempDirectory("graft_split_")
       val ev = Catalog.load(spark, sfDir, "events")
         .select($"event_id", $"user_id", $"event_type", $"value", $"ts")
       val b = ev.agg(unix_micros(min($"ts")).as("mn"),
@@ -396,8 +390,7 @@ object Streams extends QueryPack {
       ev.filter(unix_micros($"ts") > mid)
         .coalesce(1).write.parquet(s"$stage/late")
       ev.filter(lit(false)).coalesce(1).write.parquet(s"$stage/buffer")
-      stage.toString
-    })
+    }
 
   /** Copy one staged phase dir's parquet files into `srcDir` under a
     * `prefix`, stamping the COPIES' mtime (the file source batches
@@ -432,9 +425,9 @@ object Streams extends QueryPack {
 
   private def streamRestart(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_rs_src_")
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_rs_ck_")
-    val outDir = java.nio.file.Files.createTempDirectory("graft_rs_out_")
+    val srcDir = Memo.tempDir("rs_src")
+    val ckDir = Memo.tempDir("rs_ck")
+    val outDir = Memo.tempDir("rs_out")
     val stage = midpointStage(spark, sfDir)
     // State-store count = shuffle partitions, and EVERY micro-batch in
     // BOTH lifecycles commits every store's delta to the checkpoint — at
@@ -470,7 +463,7 @@ object Streams extends QueryPack {
     runOnce() // run 2: resumes from the shared checkpoint
     // Pin the merged sink rows before deleting the scratch trees (the
     // foreachBatch-sink convention: localCheckpoint stores a leaf). The
-    // memoized stage dir is NOT deleted — it is shared per (JVM, sfDir).
+    // memoized stage dir is NOT deleted — other queries share it.
     val merged = spark.read.parquet(outDir.toString).localCheckpoint(true)
     val n2 = merged.count()
     require(n1 > 0 && n2 > n1,
@@ -507,8 +500,8 @@ object Streams extends QueryPack {
     */
   private def streamLateDrop(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_ld_src_")
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_ld_ck_")
+    val srcDir = Memo.tempDir("ld_src")
+    val ckDir = Memo.tempDir("ld_ck")
     val stage = midpointStage(spark, sfDir)
     val ev = Catalog.load(spark, sfDir, "events")
       .select($"event_id", $"user_id", $"event_type", $"value", $"ts")
@@ -928,10 +921,10 @@ object Streams extends QueryPack {
   private def streamLakeSink(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import java.nio.charset.StandardCharsets.UTF_8
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_lsink_src_")
+    val srcDir = Memo.tempDir("lsink_src")
     linkEventsInto(srcDir, sfDir)
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_lsink_ck_")
-    val lake = java.nio.file.Files.createTempDirectory("graft_lsink_lake_")
+    val ckDir = Memo.tempDir("lsink_ck")
+    val lake = Memo.tempDir("lsink_lake")
     val logPath = lake.resolve("_log.json")
     java.nio.file.Files.createFile(logPath)
     val physical = spark.read.parquet(s"$sfDir/events.parquet").schema
@@ -1002,9 +995,9 @@ object Streams extends QueryPack {
   private def streamLakeMor(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import java.nio.charset.StandardCharsets.UTF_8
-    val lake = java.nio.file.Files.createTempDirectory("graft_lmor_lake_")
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_lmor_src_")
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_lmor_ck_")
+    val lake = Memo.tempDir("lmor_lake")
+    val srcDir = Memo.tempDir("lmor_src")
+    val ckDir = Memo.tempDir("lmor_ck")
     val rows = graft.Catalog.load(spark, sfDir, "orders")
       .select($"o_orderkey", $"o_orderstatus",
         ($"o_totalprice".cast("decimal(14,2)") * 100).cast("long")
@@ -1126,9 +1119,9 @@ object Streams extends QueryPack {
   private def streamLakeBloom(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import java.nio.charset.StandardCharsets.UTF_8
-    val lake = java.nio.file.Files.createTempDirectory("graft_lbloom_lake_")
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_lbloom_src_")
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_lbloom_ck_")
+    val lake = Memo.tempDir("lbloom_lake")
+    val srcDir = Memo.tempDir("lbloom_src")
+    val ckDir = Memo.tempDir("lbloom_ck")
     val rows = graft.Catalog.load(spark, sfDir, "orders")
       .select($"o_orderkey", $"o_orderstatus",
         ($"o_totalprice".cast("decimal(14,2)") * 100).cast("long")
@@ -1149,7 +1142,7 @@ object Streams extends QueryPack {
     // micro-batch (maxFilesPerTrigger=1) is a relationally-statable set.
     (0 until 4).foreach { i =>
       val sub = feed.filter(pmod($"o_orderkey", lit(4)) === i.toLong)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_lbloom_tmp_")
+      val tmp = Memo.tempDir("lbloom_tmp")
       sub.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = Option(tmp.toFile.listFiles()).getOrElse(Array.empty)
         .find(f => f.getName.startsWith("part-") && f.length() > 0)
@@ -1292,10 +1285,10 @@ object Streams extends QueryPack {
     // The count is pinned into each run's fresh checkpoint.
     s2.conf.set("spark.sql.shuffle.partitions", "4")
     import s2.implicits._
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_tws_src_")
+    val srcDir = Memo.tempDir("tws_src")
     linkEventsInto(srcDir, sfDir)
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_tws_ck_")
-    val outDir = java.nio.file.Files.createTempDirectory("graft_tws_out_")
+    val ckDir = Memo.tempDir("tws_ck")
+    val outDir = Memo.tempDir("tws_out")
     val physical = s2.read.parquet(s"$sfDir/events.parquet").schema
     val tsNorm = physical("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
@@ -1313,7 +1306,7 @@ object Streams extends QueryPack {
       .toDF("user_id", "n_events", "max_ts_us")
       .writeStream
       .outputMode("update")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         batch.write.mode("append").parquet(outDir.toString)
         ()
       }
@@ -1431,10 +1424,10 @@ object Streams extends QueryPack {
     // The count is pinned into each run's fresh checkpoint.
     s2.conf.set("spark.sql.shuffle.partitions", "4")
     import s2.implicits._
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_twt_src_")
+    val srcDir = Memo.tempDir("twt_src")
     stage(srcDir)
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_twt_ck_")
-    val outDir = java.nio.file.Files.createTempDirectory("graft_twt_out_")
+    val ckDir = Memo.tempDir("twt_ck")
+    val outDir = Memo.tempDir("twt_out")
     val physical = readSchema.getOrElse(
       s2.read.parquet(s"$sfDir/events.parquet").schema)
     val tsNorm = physical("ts").dataType match {
@@ -1457,7 +1450,7 @@ object Streams extends QueryPack {
       .toDF("user_id", "n_events", "expiry_ms")
       .writeStream
       .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         lastTwsTimerBatches += 1
         if (maxFilesPerTrigger.isDefined)
           lastTwsTimerMarkers += batch.filter(col("n_events") === -1L).count()
@@ -1537,10 +1530,10 @@ object Streams extends QueryPack {
     // were pure commit overhead (the q_stream_restart r14 measurement).
     // The count is pinned into each run's fresh checkpoint.
     s2.conf.set("spark.sql.shuffle.partitions", "4")
-    val srcDir = java.nio.file.Files.createTempDirectory(s"graft_${tag}_src_")
+    val srcDir = Memo.tempDir(s"${tag}_src")
     linkEventsInto(srcDir, sfDir)
-    val ckDir = java.nio.file.Files.createTempDirectory(s"graft_${tag}_ck_")
-    val outDir = java.nio.file.Files.createTempDirectory(s"graft_${tag}_out_")
+    val ckDir = Memo.tempDir(s"${tag}_ck")
+    val outDir = Memo.tempDir(s"${tag}_out")
     val physical = s2.read.parquet(s"$sfDir/events.parquet").schema
     val tsNorm = physical("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
@@ -1558,7 +1551,7 @@ object Streams extends QueryPack {
     val q = pipe(s2, src)
       .writeStream
       .outputMode("update")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         batch.write.mode("append").parquet(outDir.toString)
         ()
       }
@@ -1585,7 +1578,6 @@ object Streams extends QueryPack {
     * top-k folding is associative.
     */
   private def streamTwsList(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     runTwsLanding(spark, sfDir, "twl") { (s2, src) =>
       import s2.implicits._
       src.select($"user_id", unix_micros($"ts").as("ts_us"), $"event_id")
@@ -1626,7 +1618,6 @@ object Streams extends QueryPack {
     * merge-on-read keeps the max — the batch aggregate under any split.
     */
   private def streamTwsMap(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     runTwsLanding(spark, sfDir, "twm") { (s2, src) =>
       import s2.implicits._
       src.select($"user_id", $"event_type")
@@ -1674,9 +1665,9 @@ object Streams extends QueryPack {
     // The count is pinned into each run's fresh checkpoint.
     s2.conf.set("spark.sql.shuffle.partitions", "4")
     import s2.implicits._
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_twr_src_")
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_twr_ck_")
-    val outDir = java.nio.file.Files.createTempDirectory("graft_twr_out_")
+    val srcDir = Memo.tempDir("twr_src")
+    val ckDir = Memo.tempDir("twr_ck")
+    val outDir = Memo.tempDir("twr_out")
     val stage = midpointStage(spark, sfDir)
     val ev = Catalog.load(spark, sfDir, "events")
       .select($"event_id", $"user_id", $"event_type", $"value", $"ts")
@@ -1692,7 +1683,7 @@ object Streams extends QueryPack {
         .toDF("user_id", "n_events", "max_ts_us")
         .writeStream
         .outputMode("update")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
           batch.write.mode("append").parquet(outDir.toString)
           ()
         }
@@ -1737,7 +1728,7 @@ object Streams extends QueryPack {
     */
   private def streamMvRefresh(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_mvr_src_")
+    val srcDir = Memo.tempDir("mvr_src")
     // Stage the lineitem fixture like the events streams stage theirs.
     val fixture = java.nio.file.Path.of(sfDir, "lineitem.parquet")
     if (java.nio.file.Files.isDirectory(fixture)) {
@@ -1753,8 +1744,8 @@ object Streams extends QueryPack {
       java.nio.file.Files.createSymbolicLink(
         srcDir.resolve("lineitem.parquet"), fixture)
     }
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_mvr_ck_")
-    val outDir = java.nio.file.Files.createTempDirectory("graft_mvr_out_")
+    val ckDir = Memo.tempDir("mvr_ck")
+    val outDir = Memo.tempDir("mvr_out")
     val physical = spark.read.parquet(s"$sfDir/lineitem.parquet").schema
     val sdNorm = physical("l_shipdate").dataType match {
       case org.apache.spark.sql.types.LongType =>
@@ -1832,8 +1823,8 @@ object Streams extends QueryPack {
   private def streamLakeCdf(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val stage = graft.operators.LakeOps.cdfStageDir(spark, sfDir)
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_lcdf_ck_")
-    val outDir = java.nio.file.Files.createTempDirectory("graft_lcdf_out_")
+    val ckDir = Memo.tempDir("lcdf_ck")
+    val outDir = Memo.tempDir("lcdf_out")
     val schema = spark.read.parquet(stage).schema
     // |priorities| = 5 state rows; 4 stores (the r14 sizing rationale),
     // pinned on an isolated newSession clone.
@@ -1926,8 +1917,8 @@ object Streams extends QueryPack {
   private def streamCdcApply(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val stage = graft.operators.LakeOps.cdfStageDir(spark, sfDir)
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_cdca_ck_")
-    val matDir = java.nio.file.Files.createTempDirectory("graft_cdca_mat_")
+    val ckDir = Memo.tempDir("cdca_ck")
+    val matDir = Memo.tempDir("cdca_mat")
     val headPtr = matDir.resolve("_head")
     val schema = spark.read.parquet(stage).schema
     val s2 = spark.newSession()
@@ -2014,9 +2005,9 @@ object Streams extends QueryPack {
   private def streamCdfRestart(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val stage = graft.operators.LakeOps.cdfStageDir(spark, sfDir)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_cdfr_src_")
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_cdfr_ck_")
-    val outDir = java.nio.file.Files.createTempDirectory("graft_cdfr_out_")
+    val srcDir = Memo.tempDir("cdfr_src")
+    val ckDir = Memo.tempDir("cdfr_ck")
+    val outDir = Memo.tempDir("cdfr_out")
     val schema = spark.read.parquet(stage).schema
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.shuffle.partitions", "4")

@@ -2,14 +2,21 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** The one internal-access shim this library needs: turning a hand-built
+/** The internal-access shim this library needs: turning a hand-built
   * [[LogicalPlan]] (the custom as-of join node, graft.plans.AsOfJoinPlan)
-  * into a DataFrame. `Dataset.ofRows` is `private[sql]`, so the accessor
-  * must live in this package — the standard pattern for Spark extensions
-  * that add whole-operator plan nodes. Nothing else reaches into
-  * internals; the node itself is planned by an injected SparkStrategy.
+  * into a DataFrame, and the shutdown cleanup of [[graft.Memo]]'s scratch.
+  * `Dataset.ofRows` is `private[sql]` and `ShutdownHookManager` is
+  * `private[spark]`, so
+  * the accessors must live in this package — the standard pattern for
+  * Spark extensions that add whole-operator plan nodes. Nothing else
+  * reaches into internals; the node itself is planned by an injected
+  * SparkStrategy.
   */
 object GraftShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Delete `dir` recursively at JVM shutdown, with Spark's own temp dirs. */
+  def deleteAtShutdown(dir: java.io.File): Unit =
+    org.apache.spark.util.ShutdownHookManager.registerShutdownDeleteDir(dir)
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Bucketing is the 100 TB co-location lever: two tables bucketed and
   * sorted on the join key join WITHOUT a shuffle exchange — at scale that
   * turns every repeated fact-fact join into a map-side merge. The flat

@@ -70,14 +70,14 @@ class DifferentialSpec extends SparkTestBase {
       // leaf) under the alternate conf instead of reading the
       // checkpointed RDD the base run materialized — without this the
       // gate is vacuous for exactly the leaf-backed queries it targets.
-      operators.GraphOps.clearMemoForTest()
+      Memo.clearForTest()
       val s2 = spark.newSession()
       s2.conf.set("spark.sql.adaptive.enabled", "false")
       s2.conf.set("spark.sql.shuffle.partitions", "7")
       val alt = canon(SparkEntry.queries(id)(s2, sf0001))
       // Rebuild later suites' leaves under the default conf, not this
       // test's 7-partition AQE-off clone.
-      operators.GraphOps.clearMemoForTest()
+      Memo.clearForTest()
       assert(base.size === alt.size,
         s"row count diverged under the alternate plan: ${base.size} vs ${alt.size}")
       assert(base === alt, "row content diverged under the alternate plan")

@@ -1,17 +1,20 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
 import org.apache.spark.sql.functions._
 
 import graft.operators.GraphOps
 
-/** Regression suite for round 7's verify crash: `GraphOps.memoEdgeLeaf` ran
-  * builds inside `ConcurrentHashMap.computeIfAbsent`, and the labels leaf's
-  * build resolved the und-edges leaf through the SAME map — a nested update
-  * the JDK forbids, throwing IllegalStateException("Recursive update")
-  * whenever both keys landed in one hash bin. Bin placement depended on the
-  * applicationId string, so the crash struck per-JVM at random (~1 in 6
-  * runs), silently dropping q_graph_components and q_dedup_clusters from the
-  * round-7 correctness report.
+/** The [[Memo]] contract. Regression cases for round 7's verify crash: the
+  * graph memo ran builds inside `ConcurrentHashMap.computeIfAbsent`, and the
+  * labels leaf's build resolved the und-edges leaf through the SAME map — a
+  * nested update the JDK forbids, throwing IllegalStateException("Recursive
+  * update") whenever both keys landed in one hash bin. Bin placement
+  * depended on the applicationId string, so the crash struck per-JVM at
+  * random (~1 in 6 runs), silently dropping q_graph_components and
+  * q_dedup_clusters from the round-7 correctness report.
   */
 class GraphMemoSpec extends SparkTestBase {
 
@@ -21,9 +24,10 @@ class GraphMemoSpec extends SparkTestBase {
     // FULL keys hash-equal whatever the appId prefix is (polynomial string
     // hash: same prefix, same suffix length, same suffix hash → same hash).
     // So these two tags land in the same ConcurrentHashMap bin in EVERY
-    // JVM — under the old computeIfAbsent shape this test always threw.
-    val df = GraphOps.memoEdgeLeaf(spark, sf0001, "collide_Aa") {
-      val inner = GraphOps.memoEdgeLeaf(spark, sf0001, "collide_BB") {
+    // JVM — under a build-inside-computeIfAbsent shape this test always
+    // threw.
+    val df = Memo.leaf(spark, sf0001, "collide_Aa") {
+      val inner = Memo.leaf(spark, sf0001, "collide_BB") {
         spark.range(3).select(col("id").as("u"), col("id").as("v"))
       }
       inner.select(col("u"), col("v"))
@@ -31,10 +35,43 @@ class GraphMemoSpec extends SparkTestBase {
     assert(df.count() == 3)
     // Both leaves memoized: a second resolve returns the SAME frame, no
     // rebuild (reference equality is the memo contract for leaves).
-    val again = GraphOps.memoEdgeLeaf(spark, sf0001, "collide_BB") {
+    val again = Memo.leaf(spark, sf0001, "collide_BB") {
       fail("memoized leaf must not rebuild"); ???
     }
     assert(again.count() == 3)
+  }
+
+  test("8 threads resolving one key run its build exactly once") {
+    val builds = new AtomicInteger()
+    val pool = Executors.newFixedThreadPool(8)
+    try {
+      val start = new CountDownLatch(1)
+      val results = (1 to 8).map { _ =>
+        pool.submit(() => {
+          start.await()
+          Memo(spark, sf0001, "once_under_contention") {
+            builds.incrementAndGet()
+            Thread.sleep(200)
+            Seq(1L, 2L, 3L)
+          }
+        })
+      }
+      start.countDown()
+      assert(results.map(_.get(60, TimeUnit.SECONDS)).distinct == Seq(Seq(1L, 2L, 3L)))
+    } finally pool.shutdownNow()
+    assert(builds.get == 1)
+  }
+
+  test("a build that throws is not cached and runs again on the next call") {
+    val builds = new AtomicInteger()
+    def resolve(): Long = Memo(spark, sf0001, "fails_first") {
+      if (builds.incrementAndGet() == 1) throw new IllegalStateException("first build fails")
+      42L
+    }
+    assert(intercept[IllegalStateException](resolve()).getMessage == "first build fails")
+    assert(resolve() == 42L)
+    assert(resolve() == 42L)
+    assert(builds.get == 2)
   }
 
   test("components then dedupClusters rebuild cleanly across 10 fresh memo states") {
@@ -46,7 +83,7 @@ class GraphMemoSpec extends SparkTestBase {
     val comp = SparkEntry.queries("q_graph_components")
     val clus = SparkEntry.queries("q_dedup_clusters")
     (1 to 10).foreach { i =>
-      GraphOps.clearMemoForTest()
+      Memo.clearForTest()
       assert(comp(spark, sf0001).count() > 0, s"components, iteration $i")
       assert(clus(spark, sf0001).count() > 0, s"dedup_clusters, iteration $i")
     }

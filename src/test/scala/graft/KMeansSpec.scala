@@ -25,7 +25,7 @@ class KMeansSpec extends SparkTestBase {
   test("kmeans training is deterministic across leaf rebuilds") {
     val a = SparkEntry.queries("q_ml_kmeans_train")(spark, sf0001)
       .collect().toSeq
-    graft.operators.GraphOps.clearMemoForTest()
+    Memo.clearForTest()
     val b = SparkEntry.queries("q_ml_kmeans_train")(spark, sf0001)
       .collect().toSeq
     assert(a == b)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** The banded-MinHash dedup (q_dedup_minhash) is capability-only in the
   * oracle gate, so its guarantees are pinned here instead:
   *  - recall: every exact near-dup pair (q_dedup_near, Jaccard >= 0.8) must
@@ -13,7 +11,6 @@ import org.apache.spark.sql.functions._
   *  - determinism: two runs produce identical rows.
   */
 class MinhashDedupSpec extends SparkTestBase {
-  import spark.implicits._
 
   private def rows(name: String) =
     SparkEntry.queries(name)(spark, sf0001).collect().toSeq

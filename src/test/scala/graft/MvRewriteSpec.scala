@@ -15,7 +15,7 @@ class MvRewriteSpec extends SparkTestBase {
     }.nonEmpty
 
   test("registered rollup serves the fact aggregation from the leaf") {
-    graft.operators.MvOps.clearForTest()
+    Memo.clearForTest()
     val df = SparkEntry.queries("q_mv_rewrite")(spark, sf0001)
     // The optimized plan must contain NO relation scan at all — the
     // aggregate reads the checkpointed rollup (a LogicalRDD leaf).
@@ -36,7 +36,7 @@ class MvRewriteSpec extends SparkTestBase {
     assert(scansFact(raw))
     assert(raw.collect().toSeq == served)
     // Re-register for any later test in this JVM (memo was cleared).
-    graft.operators.MvOps.clearForTest()
+    Memo.clearForTest()
   }
 
   test("unrelated fact aggregations are not rewritten while registered") {
@@ -76,9 +76,9 @@ class MvRewriteSpec extends SparkTestBase {
         .orderBy($"l_returnflag".asc_nulls_first, $"mon".asc_nulls_first)
         .collect().toSeq
       assert(served == raw)
-      graft.operators.MvOps.clearForTest() // re-register for next loop
+      Memo.clearForTest() // re-register for next loop
       SparkEntry.queries("q_mv_rewrite")(spark, sf0001).count()
     }
-    graft.operators.MvOps.clearForTest()
+    Memo.clearForTest()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.plans.RangeJoinBinning
 
 /** The automatic range-join binning rule: fires on pure point-in-interval

@@ -48,7 +48,7 @@ class Round12DSpec extends SparkTestBase {
     assert(out.filter($"community" < 0L || $"min_node" < 0L).count() == 0)
     // Determinism across reruns (fresh leaves).
     val a = out.collect().toSeq
-    graft.operators.GraphOps.clearMemoForTest()
+    Memo.clearForTest()
     val b = SparkEntry.queries("q_graph_label_propagation")(spark, sf0001)
       .collect().toSeq
     assert(a == b)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Round-12 batch-7 invariants: the stream-static enrichment join covers
   * the full event stream (dimension completeness), and hard-negative
   * mining never leaks a same-class candidate into the negative set.

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Round-12 batch-8 invariants: zone-map pruning really skips files and
   * skips only files that cannot match; the PQ code table is a complete
   * M-codes-per-vector encoding; cogroup covers the key union.

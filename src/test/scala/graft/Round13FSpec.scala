@@ -1,13 +1,10 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Round-13 batch-6 invariants: checksum order-independence + driver
   * replay, Spearman brute-force midrank replay, HHI share accounting,
   * and hapax/TTR consistency.
   */
 class Round13FSpec extends SparkTestBase {
-  import spark.implicits._
 
   test("q_audit_checksum is order-independent and replays on the driver") {
     val out = SparkEntry.queries("q_audit_checksum")(spark, sf0001)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Round-13 batch-8 invariants: correlation-matrix moment replay and
   * commit-log snapshot semantics.
   */

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
   * conservation laws, and the AQE skew-join split as a live plan property.
   */
 class Round13MSpec extends SparkTestBase {
-  import spark.implicits._
 
   test("q_lake_compact: data identical across the compaction commit") {
     val out = SparkEntry.queries("q_lake_compact")(spark, sf0001)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Round-13 batch-14 invariants: copy-on-write MERGE file pruning and
   * both merge arms verified row-by-row.
   */

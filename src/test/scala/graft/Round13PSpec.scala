@@ -36,7 +36,6 @@ class Round13PSpec extends SparkTestBase {
   }
 
   test("the scorer stays inside whole-stage codegen") {
-    import spark.implicits._
     val df = Catalog.load(spark, sf0001, "part")
       .select(org.apache.spark.sql.functions
         .expr("graft_jaro_winkler(p_name, p_type)").as("s"))

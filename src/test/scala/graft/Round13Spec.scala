@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Round-13 batch-1 invariants: robust-mean algebra, PCA projection serve

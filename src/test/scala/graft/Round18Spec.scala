@@ -82,7 +82,7 @@ class Round18Spec extends SparkTestBase {
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("louvain: each ascent round is monotone in Q and beats label propagation") {
-    operators.GraphOps.clearMemoForTest()
+    Memo.clearForTest()
     val nodes = operators.GraphOps.coPurchaseUnd(spark, sf0001)
       .select($"u").distinct().collect().map(_.getLong(0))
     val singletons = nodes.map(n => n -> n).toMap

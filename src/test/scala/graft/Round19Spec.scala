@@ -133,7 +133,7 @@ class Round19Spec extends SparkTestBase {
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("louvain multi: per-level monotone Q, >= coarse, and a true fixed point") {
-    operators.GraphOps.clearMemoForTest()
+    Memo.clearForTest()
     // Level 1 of the multi loop IS the coarse step — exact label equality.
     val coarse = labelMap(operators.GraphOps.louvainCoarseLabels(spark, sf0001))
     val l1 = labelMap(operators.GraphOps.louvainMultiLabels(spark, sf0001, 1))
@@ -292,7 +292,7 @@ class Round19Spec extends SparkTestBase {
   // ---- q_graph_louvain_refine (round 19) ----
 
   test("louvain refine: every refined community is connected; no-op on a connected partition") {
-    operators.GraphOps.clearMemoForTest()
+    Memo.clearForTest()
     val multi = labelMap(operators.GraphOps.louvainMultiLabels(spark, sf0001))
     val refined = SparkEntry.queries("q_graph_louvain_refine")(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.GraphOps
 
 /** Round-20 OPTIMIZATION specs: the rewrites must be result-invariant, and

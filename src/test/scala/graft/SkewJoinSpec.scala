@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** AQE skew-join splitting is the runtime half of the skew story
   * (q_agg_salted_skew is the static half): a hot key lands in one shuffle
   * partition, and AQE splits that partition into parallel sub-joins at

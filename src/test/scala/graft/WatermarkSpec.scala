@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, Trigger}
 
