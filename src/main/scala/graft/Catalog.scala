@@ -35,7 +35,7 @@ object Catalog {
     * parquet predicate pushdown on these columns survives (verified via
     * `explain("formatted")`: PushedFilters carries the timestamp bounds).
     */
-  private def normalize(raw: DataFrame): DataFrame =
+  private[graft] def normalize(raw: DataFrame): DataFrame =
     raw.schema.fields.foldLeft(raw) { (df, f) =>
       f.dataType match {
         case org.apache.spark.sql.types.LongType if f.name == "ts" =>

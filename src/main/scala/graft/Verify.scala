@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,10 +15,7 @@ object Verify {
     val selected =
       if (only.isEmpty) SparkEntry.all
       else SparkEntry.all.filter(q => only.contains(q.id))
-    // Same default as Bench: all cores unless the caller pins it.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = Sessions.build(cpus)
+    val spark = Sessions.build(Bench.cpus)
     new java.io.File(outDir).mkdirs()
     var crashed = List.empty[String]
     selected.foreach { q =>

@@ -107,15 +107,6 @@ object GraphOps extends QueryPack {
     * plus component size; singletons are their own component. Edges are
     * EXACTLY `q_dedup_near`'s output pairs (shared code + shared oracle CTE).
     */
-  private val debug = sys.env.contains("GRAFT_CC_DEBUG")
-  private def dbg[A](tag: String)(f: => A): A =
-    if (!debug) f else {
-      val t0 = System.nanoTime
-      val r = f
-      Console.err.println(f"CCPHASE $tag ${(System.nanoTime - t0) / 1e9}%.2f")
-      r
-    }
-
   /** Min-label propagation over an undirected edge list `(u, v)` (both
     * directions present). Returns `(node, lbl)` with `lbl` = component
     * minimum. REQUIRES convergence within [[MaxRounds]] — a too-deep graph
@@ -135,9 +126,9 @@ object GraphOps extends QueryPack {
     // checkpoint to survive executor loss.
     // Seed labels one propagation step ahead: lbl(n) = min(n, neighbors) —
     // shallow (star-shaped) components then converge on the first check.
-    var lbl = dbg("seed")(und.groupBy($"u").agg(min($"v").as("mn"))
+    var lbl = und.groupBy($"u").agg(min($"v").as("mn"))
       .select($"u".as("node"), least($"u", $"mn").as("lbl"))
-      .localCheckpoint(true))
+      .localCheckpoint(true)
     var sum0 = lbl.agg(sum($"lbl")).as[Long].first()
     var rounds = 0
     var converged = false
@@ -151,11 +142,11 @@ object GraphOps extends QueryPack {
         .join(lbl.select($"node".as("v"), $"lbl".as("vlbl"))
           .hint("shuffle_hash"), Seq("v"))
         .groupBy($"u").agg(min($"vlbl").as("nbr_lbl"))
-      val next = dbg(s"round$rounds")(lbl
+      val next = lbl
         .join(nbrMin.select($"u".as("node"), $"nbr_lbl")
           .hint("shuffle_hash"), Seq("node"), "left")
         .select($"node", least($"lbl", coalesce($"nbr_lbl", $"lbl")).as("lbl"))
-        .localCheckpoint(true))
+        .localCheckpoint(true)
       val sum1 = next.agg(sum($"lbl")).as[Long].first()
       lbl = next
       converged = sum1 == sum0
@@ -1908,8 +1899,8 @@ object GraphOps extends QueryPack {
     var labels = und.select($"u".as("node")).distinct()
       .select($"node", $"node".as("lbl"))
       .localCheckpoint(true)
-    for (r <- 1 to LpaRounds) {
-      val roundPre = und
+    for (_ <- 1 to LpaRounds) {
+      labels = und
         .join(labels.select($"node".as("nbr"), $"lbl").hint("shuffle_hash"),
           $"v" === $"nbr")
         .select($"u".as("node"), $"lbl")
@@ -1917,10 +1908,7 @@ object GraphOps extends QueryPack {
         .groupBy($"node")
         .agg(max_by($"lbl", struct($"c", -$"lbl")).as("lbl"))
         .select($"node", $"lbl")
-      labels = roundPre.localCheckpoint(true)
-      if (sys.env.contains("GRAFT_WALK_DEBUG") && r == 1)
-        Console.err.println("LPAROUND\n" +
-          roundPre.queryExecution.executedPlan.toString.take(6000))
+        .localCheckpoint(true)
     }
     labels.groupBy($"lbl".as("community"))
       .agg(count(lit(1)).as("n_members"), min($"node").as("min_node"))
@@ -2012,17 +2000,14 @@ object GraphOps extends QueryPack {
         .join(deg, Seq("node"))
       // Inner join on the ranked neighbor is total (rn ∈ [1, deg] by
       // construction); the restart CASE just ignores the picked v.
-      val steppedPre = broadcast(p)
+      val stepped = broadcast(p)
         .join(adj, p("node") === adj("u") &&
           adj("rn") === (pmod($"ns", $"deg") + 1))
         .select($"walk_id", lit(k.toLong).as("step"),
           when(pmod($"ns", lit(5L)) === 0L, $"walk_id").otherwise($"v")
             .as("node"),
           $"ns".as("state"))
-      val stepped = steppedPre.localCheckpoint(true)
-      if (sys.env.contains("GRAFT_WALK_DEBUG") && k == 1)
-        Console.err.println("WALKSTEP\n" +
-          steppedPre.queryExecution.executedPlan.toString.take(6000))
+        .localCheckpoint(true)
       cur = stepped
       all :+= stepped
     }
@@ -2149,16 +2134,13 @@ object GraphOps extends QueryPack {
             .otherwise(N2vFar).as("wt"))
       val ord = Window.partitionBy($"walk_id").orderBy($"v".asc)
       val tot = Window.partitionBy($"walk_id")
-      val curPre = weighted
+      cur = weighted
         .withColumn("cum", sum($"wt").over(ord))
         .withColumn("idx", pmod($"ns", sum($"wt").over(tot)))
         .filter($"idx" >= $"cum" - $"wt" && $"idx" < $"cum")
         .select($"walk_id", lit(k.toLong).as("step"),
           $"node".as("prev"), $"v".as("node"), $"ns".as("state"))
-      cur = curPre.localCheckpoint(true)
-      if (sys.env.contains("GRAFT_WALK_DEBUG") && k == 2)
-        Console.err.println("BIASEDSTEP\n" +
-          curPre.queryExecution.executedPlan.toString.take(8000))
+        .localCheckpoint(true)
       all :+= cur.select($"walk_id", $"step", $"node")
     }
     all.reduce(_ unionByName _)
@@ -2763,16 +2745,10 @@ object GraphOps extends QueryPack {
     // pins the equality on a multi-community graph and the DuckDB
     // oracle re-verified at 3 SFs.
     val prop = communityCcLabels(spark, intra)
-    val refinedPre = lm.select($"node")
+    val refined = lm.select($"node")
       .join(prop.hint("shuffle_hash"), Seq("node"), "left")
       .select($"node", coalesce($"rl", $"node").as("lbl"))
-    val refined = refinedPre.localCheckpoint(true)
-    // The final plan only shows the checkpoint leaf — the kernel's
-    // executed shape (one FlatMapGroups over one community-keyed
-    // exchange) is dumped env-gated, the GRAFT_WALK_DEBUG convention.
-    if (sys.env.contains("GRAFT_WALK_DEBUG"))
-      Console.err.println("REFINECC\n" +
-        refinedPre.queryExecution.executedPlan.toString.take(8000))
+      .localCheckpoint(true)
     val edges = und.filter($"u" < $"v")
     val ein = edges
       .join(refined.select($"node".as("u"), $"lbl".as("cu"))

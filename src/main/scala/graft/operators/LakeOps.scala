@@ -233,7 +233,7 @@ object LakeOps extends QueryPack {
         s"graft lake: malformed commit-log action: $line")
   }
 
-  private def readActions(path: java.nio.file.Path): Seq[LakeAction] =
+  private[graft] def readActions(path: java.nio.file.Path): Seq[LakeAction] =
     new String(Files.readAllBytes(path), StandardCharsets.UTF_8)
       .split("\n").toSeq.map(parseAction)
 

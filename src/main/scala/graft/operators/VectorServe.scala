@@ -581,19 +581,16 @@ object VectorServe extends QueryPack {
     var beam = trim(score(probes.select($"probe_id").crossJoin(entries)),
       HnswBeam).select($"probe_id", $"cand_id", $"d2")
       .localCheckpoint(true)
-    (1 to HnswRounds).foreach { r =>
+    (1 to HnswRounds).foreach { _ =>
       val expanded = broadcast(beam)
         .join(graph, beam("cand_id") === graph("src"))
         .select($"probe_id", $"dst".as("cand_id")).distinct()
         .join(broadcast(beam.select($"probe_id", $"cand_id")),
           Seq("probe_id", "cand_id"), "left_anti")
-      val nextPre = trim(score(expanded)
+      beam = trim(score(expanded)
           .unionByName(beam.select($"probe_id", $"cand_id", $"d2")),
         HnswBeam).select($"probe_id", $"cand_id", $"d2")
-      if (sys.env.contains("GRAFT_HNSW_DEBUG") && r == 1)
-        Console.err.println("HNSWROUND\n" +
-          nextPre.queryExecution.executedPlan.toString.take(8000))
-      beam = nextPre.localCheckpoint(true)
+        .localCheckpoint(true)
     }
     trim(beam.filter($"cand_id" =!= $"probe_id"), HnswK)
       .select($"probe_id", $"rn".cast("long").as("rank"), $"cand_id", $"d2")

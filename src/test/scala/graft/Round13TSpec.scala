@@ -31,7 +31,7 @@ class Round13TSpec extends SparkTestBase {
           .write.parquet(s"$dir/events.parquet/b$i")
       }
       // The events "table" is a directory of three parquet dirs; flatten
-      // part files into one dir so linkEventsInto can glob them.
+      // part files into one dir so the stream source can glob them.
       val evDir = java.nio.file.Path.of(s"$dir/events.parquet")
       val ls = java.nio.file.Files.walk(evDir)
       val parts = try {

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -174,5 +176,55 @@ class StreamingSpec extends SparkTestBase {
       .agg(count(lit(1)).as("n"), Dsl.dsum($"value").as("tv"))
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2)))).toMap
     assert(got == want)
+  }
+
+  test("lake commit: replaying one batch id leaves one log line and one data dir") {
+    // foreachBatch is at-least-once: a batch re-delivered after a crash
+    // between the data write and the checkpoint commit must not land twice.
+    val lake = Memo.tempDir("commit_replay")
+    val batch = Catalog.load(spark, sf0001, "events").select($"event_id").limit(5)
+    (1 to 2).foreach(_ =>
+      streaming.Streams.commitLake(lake, "batch_0", "add", 1L, batch))
+    val log = new String(Files.readAllBytes(lake.resolve("_log.json")), "UTF-8")
+      .split("\n").toSeq
+    assert(log == Seq("""{"v":1,"op":"add","path":"batch_0"}"""))
+    val entries = Files.list(lake)
+    val dataDirs = try entries.iterator().asScala.filter(Files.isDirectory(_))
+      .map(_.getFileName.toString).toSeq finally entries.close()
+    assert(dataDirs == Seq("batch_0"))
+    assert(spark.read.parquet(lake.resolve("batch_0").toString).count() == 5)
+  }
+
+  test("a failing stream run re-raises its error and leaves no scratch dirs") {
+    val root = Memo.tempDir("probe").getParent
+    def leftovers: Seq[String] = {
+      val ls = Files.list(root)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("failrun")).toSeq
+      finally ls.close()
+    }
+    // Thrown while the pipe is built: the original exception, unwrapped.
+    val built = intercept[IllegalStateException] {
+      streaming.Streams.eventsRun(spark, sf0001, "failrun_build") { _ =>
+        throw new IllegalStateException("pipe build failed")
+      }(identity)
+    }
+    assert(built.getMessage == "pipe build failed")
+    // Thrown inside a micro-batch: the query fails mid-run, after its
+    // source, checkpoint and sink exist; the original message survives in
+    // the cause chain.
+    val boom = udf { (id: Long) =>
+      if (id >= 0L) throw new IllegalStateException("micro-batch failed")
+      id
+    }
+    val ran = intercept[Exception] {
+      streaming.Streams.eventsRun(spark, sf0001, "failrun_batch") { src =>
+        src.select(boom($"event_id").as("event_id"))
+      }(identity)
+    }
+    val messages = Iterator.iterate[Throwable](ran)(_.getCause)
+      .takeWhile(_ != null).flatMap(t => Option(t.getMessage)).toSeq
+    assert(messages.exists(_.contains("micro-batch failed")), messages)
+    assert(leftovers.isEmpty, s"scratch dirs left behind: $leftovers")
   }
 }
