@@ -48,10 +48,10 @@ object Memo {
     catch { case NonFatal(e) => cells.remove(key, cell); throw e }
   }
 
-  /** A DataFrame leaf: `build`'s result as an eager local checkpoint. */
+  /** A DataFrame leaf: `build`'s result cut by [[Rounds.cut]]. */
   def leaf(spark: SparkSession, sfDir: String, tag: String)(
       build: => DataFrame): DataFrame =
-    apply(spark, sfDir, tag)(build.localCheckpoint(true))
+    apply(spark, sfDir, tag)(Rounds.cut(build))
 
   /** A directory written once: `write` fills a fresh scratch directory,
     * whose path is returned.

@@ -129,7 +129,7 @@ object DistributedRank {
     // Strict comparison as in withNtile: rows equal to a boundary all fall
     // on one side; with a unique order key each bucket is a clean range.
     val bucket = if (bounds.isEmpty) lit(0)
-      else size(filter(array(bounds.map(lit(_)): _*), b => o > b))
+      else size(filter(array(bounds.toIndexedSeq.map(lit(_)): _*), b => o > b))
     val wLoc = Window.partitionBy(col("__bkt")).orderBy(col(orderCol).asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val local = cached.withColumn("__bkt", bucket)
@@ -165,7 +165,7 @@ object DistributedRank {
     // chain: same count-of-boundaries-passed semantics, but the generated
     // code stays O(1) in bucket count (one ArrayFilter loop) where the when
     // chain's unrolled branches grew each layer's codegen unit linearly.
-    val boundsArr = array(bounds.map(lit(_)): _*)
+    val boundsArr = array(bounds.toIndexedSeq.map(lit(_)): _*)
     val nonNullBucket = size(filter(boundsArr,
       b => if (ascending) v > b else v < b))
     val bucket = when(v.isNull,

@@ -320,7 +320,7 @@ object GeoOps extends QueryPack {
     val nNoise = cnt.filter($"n" < DbMinPts)
       .join(borderLbl.select($"sa"), Seq("sa"), "left_anti")
       .join(siteM, Seq("sa"))
-      .agg(coalesce(sum($"m"), lit(0L))).head.getLong(0)
+      .agg(coalesce(sum($"m"), lit(0L))).head().getLong(0)
     val coreAgg = coreLbl
       .join(siteM.select($"sa".as("node"), $"m"), Seq("node"))
       .groupBy($"cluster").agg(sum($"m").as("n_core"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Catalog, Memo, Q, QueryPack}
+import graft.{Catalog, Memo, Q, QueryPack, Rounds}
 
 /** SURVEY.md §2.O — graph operators (added round 5): connected components
   * over the near-duplicate pair graph (the clustering stage every dedup
@@ -86,7 +86,7 @@ object GraphOps extends QueryPack {
     // With a plain (u, v) input the output is (u, u2), exactly the old
     // contract (Round19PerfSpec pins the multiset equivalence).
     val keep = und.columns.filterNot(_ == "v")
-    val out = (keep ++ keep.map(_ + "2")).map(col(_))
+    val out = (keep ++ keep.map(_ + "2")).toIndexedSeq.map(col(_))
     def ren(df: DataFrame): DataFrame =
       keep.foldLeft(df)((d, c) => d.withColumnRenamed(c, c + "2"))
     val undCold = und.join(hotB, Seq("v"), "left_anti")
@@ -103,10 +103,6 @@ object GraphOps extends QueryPack {
     wedgeCold.unionByName(wedgeHot)
   }
 
-  /** doc_id → component id (= min doc_id reachable through near-dup pairs),
-    * plus component size; singletons are their own component. Edges are
-    * EXACTLY `q_dedup_near`'s output pairs (shared code + shared oracle CTE).
-    */
   /** Min-label propagation over an undirected edge list `(u, v)` (both
     * directions present). Returns `(node, lbl)` with `lbl` = component
     * minimum. REQUIRES convergence within [[MaxRounds]] — a too-deep graph
@@ -118,44 +114,30 @@ object GraphOps extends QueryPack {
       spark: SparkSession,
       und: DataFrame): DataFrame = {
     import spark.implicits._
-    // Each round's label table is EAGERLY localCheckpoint-ed: iterative
-    // lineage otherwise doubles the logical plan every round (a 14-round
-    // chain OOM-ed the planner just *printing* the plan). Checkpointing
-    // makes per-round plans constant-size — on a real cluster swap
-    // localCheckpoint for `spark.sparkContext.setCheckpointDir` + reliable
-    // checkpoint to survive executor loss.
     // Seed labels one propagation step ahead: lbl(n) = min(n, neighbors) —
     // shallow (star-shaped) components then converge on the first check.
-    var lbl = und.groupBy($"u").agg(min($"v").as("mn"))
-      .select($"u".as("node"), least($"u", $"mn").as("lbl"))
-      .localCheckpoint(true)
-    var sum0 = lbl.agg(sum($"lbl")).as[Long].first()
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < MaxRounds) {
-      // shuffle_hash hints (optimization round 19): both join inputs are
-      // statistics-free checkpoint-RDD leaves, so unhinted planning fell
-      // to sort-merge joins that re-sorted the edge leaf every round; the
-      // |V|-row label side builds a per-partition hash instead (the
-      // commonNeighbors round-12 rationale, applied to the round kernel).
-      val nbrMin = und
-        .join(lbl.select($"node".as("v"), $"lbl".as("vlbl"))
-          .hint("shuffle_hash"), Seq("v"))
-        .groupBy($"u").agg(min($"vlbl").as("nbr_lbl"))
-      val next = lbl
-        .join(nbrMin.select($"u".as("node"), $"nbr_lbl")
-          .hint("shuffle_hash"), Seq("node"), "left")
-        .select($"node", least($"lbl", coalesce($"nbr_lbl", $"lbl")).as("lbl"))
-        .localCheckpoint(true)
-      val sum1 = next.agg(sum($"lbl")).as[Long].first()
-      lbl = next
-      converged = sum1 == sum0
-      sum0 = sum1
-      rounds += 1
-    }
-    require(converged,
-      s"connected components did not converge within $MaxRounds rounds")
-    lbl
+    val lbl0 = Rounds.cut(und.groupBy($"u").agg(min($"v").as("mn"))
+      .select($"u".as("node"), least($"u", $"mn").as("lbl")))
+    val seed = (lbl0, lbl0.agg(sum($"lbl")).as[Long].first())
+    Rounds.fixpoint("connected components", seed, MaxRounds) {
+      case (lbl, sum0) =>
+        // shuffle_hash hints (optimization round 19): both join inputs are
+        // statistics-free checkpoint-RDD leaves, so unhinted planning fell
+        // to sort-merge joins that re-sorted the edge leaf every round; the
+        // |V|-row label side builds a per-partition hash instead (the
+        // commonNeighbors round-12 rationale, applied to the round kernel).
+        val nbrMin = und
+          .join(lbl.select($"node".as("v"), $"lbl".as("vlbl"))
+            .hint("shuffle_hash"), Seq("v"))
+          .groupBy($"u").agg(min($"vlbl").as("nbr_lbl"))
+        val next = Rounds.cut(lbl
+          .join(nbrMin.select($"u".as("node"), $"nbr_lbl")
+            .hint("shuffle_hash"), Seq("node"), "left")
+          .select($"node",
+            least($"lbl", coalesce($"nbr_lbl", $"lbl")).as("lbl")))
+        val sum1 = next.agg(sum($"lbl")).as[Long].first()
+        ((next, sum1), sum1 != sum0)
+    }._1._1
   }
 
   /** LARGE-STAR/SMALL-STAR connected components (added round 12) — the
@@ -177,10 +159,10 @@ object GraphOps extends QueryPack {
     * distinct-child count) — (a) alone is NOT a fixpoint (a two-parent
     * child still merges its parents on the next small-star), which is
     * why (b) exists; both read off one stacked-role rollup (see
-    * isStar). Each round's edge set is eagerly localCheckpoint-ed
-    * (flat lineage, the house iterative pattern); per round: one
-    * explode, two hash aggs, two equi-joins — all keyed shuffles,
-    * nothing driver-side but the two convergence Longs of one action.
+    * isStar). Each round's edge set is a [[graft.Rounds]] cut; per
+    * round: one explode, two hash aggs, two equi-joins — all keyed
+    * shuffles, nothing driver-side but the two convergence Longs of one
+    * action.
     *
     * Returns ((node, lbl) labels, rounds). Labels cover every node with
     * an edge; singletons resolve downstream via the same coalesce join
@@ -190,10 +172,9 @@ object GraphOps extends QueryPack {
       spark: SparkSession,
       edges0: DataFrame): (DataFrame, Int) = {
     import spark.implicits._
-    var e = edges0
+    val e0 = Rounds.cut(edges0
       .select(greatest($"u", $"v").as("c"), least($"u", $"v").as("p"))
-      .filter($"c" =!= $"p").distinct()
-      .localCheckpoint(true)
+      .filter($"c" =!= $"p").distinct())
     def isStar(df: DataFrame): Boolean = {
       // Folded convergence check (optimization round 20, guide §2.4): the
       // old form spent TWO driver actions per round — a semi-join probe
@@ -217,9 +198,7 @@ object GraphOps extends QueryPack {
         .head()
       r.getLong(0) == 0L && r.getLong(1) == 0L
     }
-    var rounds = 0
-    var done = isStar(e)
-    while (!done && rounds < MaxRounds) {
+    def round(e: DataFrame): DataFrame = {
       // Large-star: for every node u, hang each LARGER neighbor v onto
       // m(u) = min(N(u) ∪ {u}).
       val und = e.select(explode(array(
@@ -239,16 +218,17 @@ object GraphOps extends QueryPack {
       // Small-star: group each node's SMALLER neighbors (ls is already
       // child→parents), hang them and the node onto their minimum.
       val sm = ls.groupBy($"c").agg(min($"p").as("m"))
-      val ss = ls.join(sm.hint("shuffle_hash"), Seq("c"))
+      ls.join(sm.hint("shuffle_hash"), Seq("c"))
         .select(explode(array($"p", $"c")).as("n"), $"m")
         .select(greatest($"n", $"m").as("c"), least($"n", $"m").as("p"))
         .filter($"c" =!= $"p").distinct()
-      e = ss.localCheckpoint(true)
-      rounds += 1
-      done = isStar(e)
     }
-    require(done,
-      s"two-star components did not converge within $MaxRounds rounds")
+    val (e, rounds) =
+      if (isStar(e0)) (e0, 0)
+      else Rounds.fixpoint("two-star components", e0, MaxRounds) { e =>
+        val next = Rounds.cut(round(e))
+        (next, !isStar(next))
+      }
     val lbl = e.select($"c".as("node"), $"p".as("lbl"))
       .union(e.select($"p".as("node"), $"p".as("lbl")))
       .distinct()
@@ -261,7 +241,7 @@ object GraphOps extends QueryPack {
   private def nearDupLabelsTwoStar(spark: SparkSession, sfDir: String): DataFrame = {
     val und = nearDupUnd(spark, sfDir)
     Memo.leaf(spark, sfDir, "nearDupLabelsTwoStar")(
-      twoStarLabels(spark, und)._1.localCheckpoint(true))
+      twoStarLabels(spark, und)._1)
   }
 
   /** q_graph_components_twostar: identical output contract (and the SAME
@@ -302,12 +282,12 @@ object GraphOps extends QueryPack {
     * q_dedup_clusters are two decision tables over the SAME propagation
     * fixpoint, so only the first to run pays the iterative rounds (each
     * round is a fresh plan = a fresh whole-stage-codegen compile). The
-    * propagation result is already a checkpoint leaf (every round ends in
-    * an eager localCheckpoint), so memoizing stores a leaf, not lineage.
+    * propagation result is already a cut leaf (every round ends in
+    * [[graft.Rounds.cut]]), so it is memoized as a value, not cut again.
     */
   private def nearDupLabels(spark: SparkSession, sfDir: String): DataFrame = {
     val und = nearDupUnd(spark, sfDir)
-    Memo.leaf(spark, sfDir, "nearDupLabels")(propagateMinLabels(spark, und))
+    Memo(spark, sfDir, "nearDupLabels")(propagateMinLabels(spark, und))
   }
 
   private def components(spark: SparkSession, sfDir: String): DataFrame = {
@@ -376,6 +356,29 @@ object GraphOps extends QueryPack {
           struct($"b".as("u"), $"a".as("v")))).as("e"))
         .select($"e.u".as("u"), $"e.v".as("v")))
   }
+
+  /** Per-node degree of the co-purchase graph (memoized): `(node, deg)`. */
+  private def degrees(spark: SparkSession, sfDir: String): DataFrame = {
+    import spark.implicits._
+    Memo.leaf(spark, sfDir, "pprDeg")(coPurchaseUnd(spark, sfDir)
+      .groupBy($"u".as("node")).agg(count(lit(1)).as("deg")))
+  }
+
+  /** Co-purchase adjacency ranked per node, `(u, v, rn)` with `rn` the
+    * 1-based rank of `v` ascending (memoized; the walks' neighbor pick).
+    */
+  private def walkAdj(spark: SparkSession, sfDir: String): DataFrame = {
+    import spark.implicits._
+    Memo.leaf(spark, sfDir, "walkAdj")(coPurchaseUnd(spark, sfDir)
+      .select($"u", $"v",
+        row_number().over(Window.partitionBy($"u").orderBy($"v".asc)).as("rn")))
+  }
+
+  /** The `k` smallest node ids of an undirected edge list, as `node`: the
+    * fixed-k deterministic seed sample of closeness, betweenness and walks.
+    */
+  private def smallestNodes(und: DataFrame, k: Int): DataFrame =
+    und.select(col("u").as("node")).distinct().orderBy(col("node").asc).limit(k)
 
   private val coPurchaseEdgesCtes = """urgent AS (
       SELECT DISTINCT o_custkey AS c, date_trunc('day', o_orderdate) AS day
@@ -808,29 +811,25 @@ object GraphOps extends QueryPack {
     * round is one BroadcastHashJoin SCAN of the edge leaf: the edges are
     * never shuffled or sorted. If frontiers outgrow broadcast (graph-scale
     * sources, no horizon), drop the hint and the same plan degrades to the
-    * shuffled equi-join. Each round's frontier is EAGERLY
-    * localCheckpoint-ed (the [[propagateMinLabels]] pattern): later rounds
-    * reference every prior frontier through the anti-join, so without per
-    * -round leaves the plan would re-embed the whole prefix each hop. The
-    * oracle recurses with UNION (not ALL) — distinct (node, d) pairs — so
-    * the path-count explosion of a dense small-world graph (~deg^6 paths)
-    * never materializes on either side.
+    * shuffled equi-join. Each round's frontier is a [[graft.Rounds]] cut:
+    * later rounds reference every prior frontier through the anti-join, so
+    * without per-round leaves the plan would re-embed the whole prefix
+    * each hop. The oracle recurses with UNION (not ALL) — distinct
+    * (node, d) pairs — so the path-count explosion of a dense small-world
+    * graph (~deg^6 paths) never materializes on either side.
     */
   private def graphBfs(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val und = coPurchaseUnd(spark, sfDir)
-    var frontier = und.agg(min($"u").as("node"))
-      .select($"node", lit(0L).as("d")).localCheckpoint(true)
-    var levels = Vector(frontier)
-    for (k <- 1 to BfsHops) {
+    val start = Rounds.cut(und.agg(min($"u").as("node"))
+      .select($"node", lit(0L).as("d")))
+    val levels = (1 to BfsHops).foldLeft(Vector(start)) { (levels, k) =>
       val seen = levels.map(_.select($"node")).reduce(_ union _)
-      frontier = broadcast(frontier.as("x"))
+      levels :+ Rounds.cut(broadcast(levels.last.as("x"))
         .join(und.as("e"), $"x.node" === $"e.u")
         .select($"e.v".as("node")).distinct()
         .join(broadcast(seen), Seq("node"), "left_anti")
-        .select($"node", lit(k.toLong).as("d"))
-        .localCheckpoint(true)
-      levels :+= frontier
+        .select($"node", lit(k.toLong).as("d")))
     }
     levels.reduce(_ union _).select($"node", $"d".as("dist"))
       .orderBy($"node".asc_nulls_first)
@@ -872,13 +871,9 @@ object GraphOps extends QueryPack {
   private def graphCloseness(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val und = coPurchaseUnd(spark, sfDir)
-    val seeds = und.select($"u".as("node")).distinct()
-      .orderBy($"node".asc).limit(10)
-    var frontier = seeds
-      .select($"node".as("source"), $"node", lit(0L).as("d"))
-      .localCheckpoint(true)
-    var levels = Vector(frontier)
-    for (k <- 1 to CloseHops) {
+    val start = Rounds.cut(smallestNodes(und, 10)
+      .select($"node".as("source"), $"node", lit(0L).as("d")))
+    val levels = (1 to CloseHops).foldLeft(Vector(start)) { (levels, k) =>
       val seen = levels.map(_.select($"source", $"node")).reduce(_ union _)
       // Explicit broadcasts (optimization round 19): frontier and seen
       // are |sources|·|ball| rows BY CONSTRUCTION — without the hints the
@@ -886,13 +881,12 @@ object GraphOps extends QueryPack {
       // and re-sorted the edge leaf every round (the graphBfs rationale,
       // applied here). Unbounded-radius callers drop the hints and the
       // same plan degrades to shuffled equi-joins.
-      frontier = broadcast(frontier.select($"source", $"node".as("u")))
-        .join(und, Seq("u"))
-        .select($"source", $"v".as("node")).distinct()
-        .join(broadcast(seen), Seq("source", "node"), "left_anti")
-        .select($"source", $"node", lit(k.toLong).as("d"))
-        .localCheckpoint(true)
-      levels :+= frontier
+      levels :+ Rounds.cut(
+        broadcast(levels.last.select($"source", $"node".as("u")))
+          .join(und, Seq("u"))
+          .select($"source", $"v".as("node")).distinct()
+          .join(broadcast(seen), Seq("source", "node"), "left_anti")
+          .select($"source", $"node", lit(k.toLong).as("d")))
     }
     levels.reduce(_ union _)
       .filter($"d" > 0)
@@ -938,7 +932,7 @@ object GraphOps extends QueryPack {
     * Forward: one SHARED (source, node) BFS frontier carrying σ = the
     * number of shortest paths (σ_k(v) = Σ_{u ∈ layer k−1, u−v} σ(u),
     * aggregated BEFORE the seen-set anti-join so every parent
-    * contributes), per-round localCheckpoint leaves — k sources cost one
+    * contributes), per-round [[graft.Rounds]] cuts — k sources cost one
     * synchronized BFS, not k traversals. Backward: the dependency
     * recurrence δ(v) = Σ_{w ∈ succ(v)} σ(v)/σ(w) · (1 + δ(w)) unrolled
     * layer by layer in the pack's SCALED-INTEGER contract — the per-edge
@@ -965,37 +959,31 @@ object GraphOps extends QueryPack {
   private def graphBetweenness(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val und = coPurchaseUnd(spark, sfDir)
-    val seeds = und.select($"u".as("node")).distinct()
-      .orderBy($"node".asc).limit(10)
-    var lvl = seeds
-      .select($"node".as("source"), $"node", lit(1L).as("sigma"))
-      .localCheckpoint(true)
-    var levels = Vector(lvl)
-    for (_ <- 1 to BetHops) {
+    val start = Rounds.cut(smallestNodes(und, 10)
+      .select($"node".as("source"), $"node", lit(1L).as("sigma")))
+    val levels = (1 to BetHops).foldLeft(Vector(start)) { (levels, _) =>
       val seen = levels.map(_.select($"source", $"node")).reduce(_ union _)
       // Explicit broadcasts (optimization round 19): the frontier and the
       // seen set are |sources|·|ball|-bounded — the graphCloseness
       // rationale; the edge leaf is never shuffled by the forward pass.
-      lvl = broadcast(lvl.select($"source", $"node".as("u"), $"sigma"))
-        .join(und, Seq("u"))
-        .groupBy($"source", $"v".as("node"))
-        .agg(sum($"sigma").as("sigma"))
-        .join(broadcast(seen), Seq("source", "node"), "left_anti")
-        .localCheckpoint(true)
-      levels :+= lvl
+      levels :+ Rounds.cut(
+        broadcast(levels.last.select($"source", $"node".as("u"), $"sigma"))
+          .join(und, Seq("u"))
+          .groupBy($"source", $"v".as("node"))
+          .agg(sum($"sigma").as("sigma"))
+          .join(broadcast(seen), Seq("source", "node"), "left_anti"))
     }
     // Backward accumulation, layer H-1 down to 1; δ at layer H is 0.
-    var deltaNext = levels(BetHops)
+    val deltaH = levels(BetHops)
       .select($"source", $"node", lit(0L).as("delta"))
-    var acc = Vector.empty[DataFrame]
-    for (k <- (BetHops - 1) to 1 by -1) {
+    val deltas = ((BetHops - 1) to 1 by -1).foldLeft(Vector(deltaH)) { (deltas, k) =>
       val cur = levels(k)
       // Backward pass broadcasts (optimization round 19): every frame
       // here is a |sources|·|ball|-bounded BFS layer — the edge leaf is
       // probed in place, never shuffled or sorted.
       val succ = levels(k + 1)
         .select($"source", $"node".as("w"), $"sigma".as("sigma_w"))
-        .join(broadcast(deltaNext.select($"source", $"node".as("w"),
+        .join(broadcast(deltas.last.select($"source", $"node".as("w"),
           $"delta".as("delta_w"))), Seq("source", "w"))
       val contrib = broadcast(cur)
         .join(und.select($"u".as("node"), $"v".as("w")), Seq("node"))
@@ -1003,14 +991,11 @@ object GraphOps extends QueryPack {
         .groupBy($"source", $"node")
         .agg(sum(expr(s"(sigma * ($BetScale + delta_w)) div sigma_w"))
           .as("delta"))
-      val deltaK = cur.select($"source", $"node")
+      deltas :+ Rounds.cut(cur.select($"source", $"node")
         .join(broadcast(contrib), Seq("source", "node"), "left")
-        .select($"source", $"node", coalesce($"delta", lit(0L)).as("delta"))
-        .localCheckpoint(true)
-      acc :+= deltaK
-      deltaNext = deltaK
+        .select($"source", $"node", coalesce($"delta", lit(0L)).as("delta")))
     }
-    acc.reduce(_ unionByName _)
+    deltas.tail.reduce(_ unionByName _)
       .groupBy($"node")
       .agg(sum($"delta").as("bet_ppm"))
       .select($"node".as("custkey"), $"bet_ppm")
@@ -1092,9 +1077,10 @@ object GraphOps extends QueryPack {
     * per-node min, and merges improvements into the distance table via
     * one full-outer coalesce; convergence is ONE Long action per round
     * (the [[propagateMinLabels]] contract) and is guaranteed in at most
-    * `cap` rounds since weights are ≥ 1. Frontier and distance tables are
-    * eagerly checkpointed per round — later rounds otherwise re-embed the
-    * whole prefix plan. The frontier broadcast is small BY CONSTRUCTION
+    * `cap` rounds since weights are ≥ 1 (the [[graft.Rounds]] bound of
+    * `cap + 1` rounds, the last one empty, can never trip). Frontier and
+    * distance tables are cut per round — later rounds otherwise re-embed
+    * the whole prefix plan. The frontier broadcast is small BY CONSTRUCTION
     * (a bounded ball); dropping the hint degrades gracefully to a
     * shuffled equi-join at unbounded scale.
     */
@@ -1102,12 +1088,11 @@ object GraphOps extends QueryPack {
     import spark.implicits._
     val undW = coPurchaseUnd(spark, sfDir)
       .select($"u", $"v", (lit(1L) + pmod($"u" + $"v", lit(7L))).as("w"))
-    var dist = undW.agg(min($"u").as("node"))
-      .select($"node", lit(0L).as("d")).localCheckpoint(true)
-    var frontier = dist
-    var changed = 1L
-    while (changed > 0L) {
-      val improved = broadcast(frontier.as("f"))
+    val start = Rounds.cut(undW.agg(min($"u").as("node"))
+      .select($"node", lit(0L).as("d")))
+    val ((ball, _), _) = Rounds.fixpoint("sssp", (start, start),
+        SsspCap.toInt + 1) { case (dist, frontier) =>
+      val improved = Rounds.cut(broadcast(frontier.as("f"))
         .join(undW.as("e"), $"f.node" === $"e.u")
         .select($"e.v".as("node"), ($"f.d" + $"e.w").as("d"))
         .filter($"d" <= SsspCap)
@@ -1118,23 +1103,21 @@ object GraphOps extends QueryPack {
         .join(dist.withColumnRenamed("d", "d_old").hint("shuffle_hash"),
           Seq("node"), "left_outer")
         .filter($"d_old".isNull || $"d" < $"d_old")
-        .select($"node", $"d")
-        .localCheckpoint(true)
-      changed = improved.count()
-      if (changed > 0L) {
+        .select($"node", $"d"))
+      if (improved.count() == 0L) ((dist, frontier), false)
+      else {
         // Merge as union + min, not full-outer + coalesce (optimization
         // round 19, guide §2.4): `improved` rows are STRICTLY better than
         // any existing entry (the filter above guarantees d < d_old or the
         // node is new), so min over the union IS the coalesce semantics —
         // one hash aggregate instead of a two-sided join (one exchange
         // fewer per round, and map-side partial min combines first).
-        dist = dist.unionByName(improved)
-          .groupBy($"node").agg(min($"d").as("d"))
-          .localCheckpoint(true)
-        frontier = improved
+        val merged = Rounds.cut(dist.unionByName(improved)
+          .groupBy($"node").agg(min($"d").as("d")))
+        ((merged, improved), true)
       }
     }
-    dist.select($"node", $"d".as("dist")).orderBy($"node".asc_nulls_first)
+    ball.select($"node", $"d".as("dist")).orderBy($"node".asc_nulls_first)
   }
 
   private val graphSsspOracle = s"""
@@ -1179,15 +1162,14 @@ object GraphOps extends QueryPack {
     */
   private def graphMst(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val edgesW = coPurchaseUnd(spark, sfDir)
+    val edgesW = Rounds.cut(coPurchaseUnd(spark, sfDir)
       .select($"u", $"v",
         when(greatest($"u", $"v") >= (1L << 21), raise_error(lit(
           "graft q_graph_mst: node id >= 2^21 breaks the composite " +
             "weight key; widen the shifts with the id domain")))
           .otherwise((lit(1L) + pmod($"u" + $"v", lit(7L))) * (1L << 42) +
             least($"u", $"v") * (1L << 21) + greatest($"u", $"v"))
-          .as("wkey"))
-      .localCheckpoint(true)
+          .as("wkey")))
     // GRAPH CONTRACTION (perf form): the working edge list lives at
     // COMPONENT granularity and SHRINKS every round — after a merge, all
     // now-intra edges drop, so a dense graph collapses in 2-3 heavy
@@ -1205,19 +1187,18 @@ object GraphOps extends QueryPack {
     // precedent, not a data-sized pull). Distinct weights make the hybrid
     // produce the identical unique MSF.
     val TailComps = 256L
-    var nodeLbl = edgesW.select($"u".as("node")).distinct()
-      .select($"node", $"node".as("comp")).localCheckpoint(true)
-    var e = edgesW.select($"u".as("cu"), $"v".as("cv"), $"u", $"v", $"wkey")
-      .localCheckpoint(true)
+    var nodeLbl = Rounds.cut(edgesW.select($"u".as("node")).distinct()
+      .select($"node", $"node".as("comp")))
+    var e = Rounds.cut(
+      edgesW.select($"u".as("cu"), $"v".as("cv"), $"u", $"v", $"wkey"))
     var mst = Seq.empty[(Long, Long, Long)].toDF("u", "v", "wkey")
     // Min outgoing edge per component as ONE map-side-combined min(struct)
     // aggregation — wkey is unique, so the struct order is total; no window
     // sort over the (heavily skewed) comp partitions.
-    def minOut(edges: DataFrame): DataFrame = edges.groupBy($"cu")
+    def minOut(edges: DataFrame): DataFrame = Rounds.cut(edges.groupBy($"cu")
       .agg(min(struct($"wkey", $"u", $"v", $"cv")).as("m"))
       .select($"cu", $"m.wkey".as("wkey"), $"m.u".as("u"),
-        $"m.v".as("v"), $"m.cv".as("cv"))
-      .localCheckpoint(true)
+        $"m.v".as("v"), $"m.cv".as("cv")))
     // Component counting (optimization round 19, guide §2.4): `chosen` has
     // EXACTLY one row per component with an outgoing edge, and it is already
     // an eagerly materialized checkpoint leaf — its count() IS
@@ -1237,20 +1218,15 @@ object GraphOps extends QueryPack {
     // join + checkpoint per round). A two-star fallback round cannot be
     // composed driver-side: it flushes the pending composition first,
     // then relabels distributedly exactly as before.
-    val parentAll = scala.collection.mutable.Map.empty[Long, Long]
-    def findAll(x: Long): Long = {
-      val p = parentAll.getOrElseUpdate(x, x)
-      if (p == x) x else { val r = findAll(p); parentAll(x) = r; r }
-    }
+    val merged = new MinRootUnionFind
     def flushNodeRelabel(): Unit = {
-      val m = parentAll.keys.toArray.map(c => (c, findAll(c)))
+      val m = merged.nodes.toArray.map(c => (c, merged.find(c)))
         .filter(kv => kv._1 != kv._2).toSeq
       if (m.nonEmpty)
-        nodeLbl = nodeLbl
+        nodeLbl = Rounds.cut(nodeLbl
           .join(broadcast(m.toDF("comp", "newc")), Seq("comp"), "left")
-          .select($"node", coalesce($"newc", $"comp").as("comp"))
-          .localCheckpoint(true)
-      parentAll.clear()
+          .select($"node", coalesce($"newc", $"comp").as("comp")))
+      merged.clear()
     }
     while (comps > TailComps) {
       // No per-round checkpoint on the accumulator (optimization round
@@ -1275,35 +1251,29 @@ object GraphOps extends QueryPack {
         // roots, nodeLbl waits for the composed flush.
         val pairs = chosen.select($"cu", $"cv").collect()
           .map(r => (r.getLong(0), r.getLong(1)))
-        pairs.foreach { case (a, b) =>
-          val (ra, rb) = (findAll(a), findAll(b))
-          if (ra != rb) parentAll(math.max(ra, rb)) = math.min(ra, rb)
-        }
+        pairs.foreach { case (a, b) => merged.union(a, b) }
         // A LocalRelation needs no checkpoint — both broadcast probes
         // below embed the literal rows directly.
         pairs.flatMap(p => Seq(p._1, p._2)).distinct.toSeq
-          .map(c => (c, findAll(c))).filter(kv => kv._1 != kv._2)
+          .map(c => (c, merged.find(c))).filter(kv => kv._1 != kv._2)
           .toDF("comp", "newc")
       } else {
         flushNodeRelabel()
         val (cl, _) = twoStarLabels(spark,
           chosen.select($"cu".as("u"), $"cv".as("v")))
-        val m = cl.select($"node".as("comp"), $"lbl".as("newc"))
-          .localCheckpoint(true)
-        nodeLbl = nodeLbl.join(broadcast(m), Seq("comp"), "left")
-          .select($"node", coalesce($"newc", $"comp").as("comp"))
-          .localCheckpoint(true)
+        val m = Rounds.cut(cl.select($"node".as("comp"), $"lbl".as("newc")))
+        nodeLbl = Rounds.cut(nodeLbl.join(broadcast(m), Seq("comp"), "left")
+          .select($"node", coalesce($"newc", $"comp").as("comp")))
         m
       })
-      e = e
+      e = Rounds.cut(e
         .join(broadcast(mapping.select($"comp".as("cu"),
           $"newc".as("ncu"))), Seq("cu"), "left")
         .join(broadcast(mapping.select($"comp".as("cv"),
           $"newc".as("ncv"))), Seq("cv"), "left")
         .select(coalesce($"ncu", $"cu").as("cu"),
           coalesce($"ncv", $"cv").as("cv"), $"u", $"v", $"wkey")
-        .filter($"cu" =!= $"cv")
-        .localCheckpoint(true)
+        .filter($"cu" =!= $"cv"))
       chosen = minOut(e)
       comps = chosen.count()
     }
@@ -1322,20 +1292,15 @@ object GraphOps extends QueryPack {
         .sortBy(_._5)
       // Kruskal over the persistent union-find: tail cu/cv are CURRENT
       // comp ids (e is relabeled every round), i.e. roots of — or fresh
-      // to — parentAll, so seeding the tail with the pending loop merges
-      // changes nothing and lets ONE flush relabel nodeLbl for loop +
-      // tail together.
-      val picked = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-      tail.foreach { case (cu, cv, u, v, w) =>
-        val (ru, rv) = (findAll(cu), findAll(cv))
-        if (ru != rv) {
-          parentAll(math.max(ru, rv)) = math.min(ru, rv)
-          picked += ((math.min(u, v), math.max(u, v), w))
-        }
+      // to — the union-find, so seeding the tail with the pending loop
+      // merges changes nothing and lets ONE flush relabel nodeLbl for
+      // loop + tail together.
+      val picked = tail.collect {
+        case (cu, cv, u, v, w) if merged.union(cu, cv) =>
+          (math.min(u, v), math.max(u, v), w)
       }
       if (picked.nonEmpty)
-        mst = mst.unionByName(picked.toSeq.toDF("u", "v", "wkey"))
-          .localCheckpoint(true)
+        mst = Rounds.cut(mst.unionByName(picked.toSeq.toDF("u", "v", "wkey")))
     }
     flushNodeRelabel()
     val lbl = nodeLbl
@@ -1375,8 +1340,7 @@ object GraphOps extends QueryPack {
     // persistent graph leaf shared across invocations (PPR builds the
     // identical frame), where a bare cache leaked blocks for the
     // application lifetime.
-    val deg = Memo.leaf(spark, sfDir, "pprDeg")(
-      und.groupBy($"u".as("node")).agg(count(lit(1)).as("deg")))
+    val deg = degrees(spark, sfDir)
     var pr = deg.select($"node", lit(PrScale).as("pr"))
     // Stays ONE declarative 5-iteration plan deliberately: a mid-loop
     // localCheckpoint leaf was measured (r7) at 6.2 s cold / 1.7-2.2 steady
@@ -1424,8 +1388,7 @@ object GraphOps extends QueryPack {
   private def graphPpr(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val und = coPurchaseUnd(spark, sfDir)
-    val deg = Memo.leaf(spark, sfDir, "pprDeg")(
-      und.groupBy($"u".as("node")).agg(count(lit(1)).as("deg")))
+    val deg = degrees(spark, sfDir)
     val seeds = Memo.leaf(spark, sfDir, "pprSeeds")(
       deg.filter(pmod($"node", lit(PprSeedMod)) === 1L).select($"node"))
     val base = seeds.select($"node", lit(PprScale * 15 / 100).as("t"))
@@ -1515,7 +1478,7 @@ object GraphOps extends QueryPack {
       // with 6 half-rounds that lazy re-execution is exponential
       // (measured 62 s vs sub-second materialized at sf0.1). Each
       // checkpoint is a bounded |nodes|-row job.
-      val cp = df.localCheckpoint(true)
+      val cp = Rounds.cut(df)
       // Integral `div`, never a double division + cast: a float quotient
       // landing one ulp above an integer boundary would truncate to a
       // different k than the oracle's `//`.
@@ -1616,34 +1579,26 @@ object GraphOps extends QueryPack {
     * Loop shape mirrors [[propagateMinLabels]]: per round ONE degree
     * aggregation and one broadcast anti-join of the edge list against the
     * (small by construction — it only holds the nodes peeled THIS round)
-    * victim set, with eager localCheckpoint leaves so per-round plans stay
-    * constant-size and the driver only ever sees one Long (the victim
-    * count).
+    * victim set, a [[graft.Rounds]] cut per round, and the driver only
+    * ever sees whether the victim set is empty.
     */
   private val KcoreUnroll = 12
 
   private def graphKcore(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val K = 3L
-    var g = coPurchaseUnd(spark, sfDir)
-    var round = 0
-    var done = false
-    while (!done) {
-      round += 1
-      require(round <= KcoreUnroll + 1,
-        s"k-core peel needs more than $KcoreUnroll rounds — widen KcoreUnroll " +
-          "and the unrolled oracle together")
+    // KcoreUnroll peels plus the empty round that sees the fixpoint; a
+    // graph that needs more must widen KcoreUnroll and the oracle together.
+    val (core, _) = Rounds.fixpoint("k-core peel", coPurchaseUnd(spark, sfDir),
+        KcoreUnroll + 1) { g =>
       val victims = g.groupBy($"u").agg(count(lit(1)).as("deg"))
         .filter($"deg" < K).select($"u")
-      if (victims.isEmpty) done = true
-      else {
-        g = g.join(broadcast(victims), Seq("u"), "left_anti")
-          .join(broadcast(victims.select($"u".as("v"))), Seq("v"), "left_anti")
-          .select($"u", $"v")
-          .localCheckpoint(true)
-      }
+      if (victims.isEmpty) (g, false)
+      else (Rounds.cut(g.join(broadcast(victims), Seq("u"), "left_anti")
+        .join(broadcast(victims.select($"u".as("v"))), Seq("v"), "left_anti")
+        .select($"u", $"v")), true)
     }
-    g.groupBy($"u".as("custkey")).agg(count(lit(1)).as("core_degree"))
+    core.groupBy($"u".as("custkey")).agg(count(lit(1)).as("core_degree"))
       .orderBy($"custkey".asc_nulls_first)
   }
 
@@ -1889,26 +1844,24 @@ object GraphOps extends QueryPack {
     * per round; the aggregate form is sort-free, map-side combinable,
     * and picks the identical label — max over the total order
     * (c, −label) = count DESC then label ASC, unique per node because
-    * labels are distinct within a node's group). Label frames eagerly
-    * checkpointed per round (flat lineage, the components/pagerank
-    * pattern). Pure integer counting — no float parity risk.
+    * labels are distinct within a node's group). Label frames are a
+    * [[graft.Rounds]] cut per round. Pure integer counting — no float
+    * parity risk.
     */
   private def labelPropagation(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val und = coPurchaseUnd(spark, sfDir)
-    var labels = und.select($"u".as("node")).distinct()
-      .select($"node", $"node".as("lbl"))
-      .localCheckpoint(true)
-    for (_ <- 1 to LpaRounds) {
-      labels = und
+    val start = Rounds.cut(und.select($"u".as("node")).distinct()
+      .select($"node", $"node".as("lbl")))
+    val labels = (1 to LpaRounds).foldLeft(start) { (labels, _) =>
+      Rounds.cut(und
         .join(labels.select($"node".as("nbr"), $"lbl").hint("shuffle_hash"),
           $"v" === $"nbr")
         .select($"u".as("node"), $"lbl")
         .groupBy($"node", $"lbl").agg(count(lit(1)).as("c"))
         .groupBy($"node")
         .agg(max_by($"lbl", struct($"c", -$"lbl")).as("lbl"))
-        .select($"node", $"lbl")
-        .localCheckpoint(true)
+        .select($"node", $"lbl"))
     }
     labels.groupBy($"lbl".as("community"))
       .agg(count(lit(1)).as("n_members"), min($"node").as("min_node"))
@@ -1974,19 +1927,12 @@ object GraphOps extends QueryPack {
   private def graphWalks(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val und = coPurchaseUnd(spark, sfDir)
-    val adj = Memo.leaf(spark, sfDir, "walkAdj")(
-      und.select($"u", $"v",
-        row_number().over(
-          Window.partitionBy($"u").orderBy($"v".asc)).as("rn")))
-    val deg = Memo.leaf(spark, sfDir, "pprDeg")(
-      und.groupBy($"u".as("node")).agg(count(lit(1)).as("deg")))
-    val seeds = und.select($"u".as("node")).distinct()
-      .orderBy($"node".asc).limit(WalkSeeds)
-    var cur = seeds.select($"node".as("walk_id"), lit(0L).as("step"),
-        $"node", expr(s"($WalkA * node + $WalkC) % $WalkM").as("state"))
-      .localCheckpoint(true)
-    var all = Vector(cur)
-    for (k <- 1 to WalkSteps) {
+    val adj = walkAdj(spark, sfDir)
+    val deg = degrees(spark, sfDir)
+    val start = Rounds.cut(smallestNodes(und, WalkSeeds)
+      .select($"node".as("walk_id"), lit(0L).as("step"), $"node",
+        expr(s"($WalkA * node + $WalkC) % $WalkM").as("state")))
+    val all = (1 to WalkSteps).foldLeft(Vector(start)) { (all, k) =>
       // Explicit broadcast of the |walks|-row frame (optimization round
       // 19): without it the no-statistics RDD leaves planned as
       // sort-merge, which AQE only repaired AFTER materializing a full
@@ -1995,21 +1941,18 @@ object GraphOps extends QueryPack {
       // frame is |seeds| rows BY CONSTRUCTION — broadcast at any scale;
       // with graph-scale walk counts drop the hint and the same plan
       // degrades to the shuffled equi-join.
-      val p = broadcast(cur.select($"walk_id", $"node",
+      val p = broadcast(all.last.select($"walk_id", $"node",
           expr(s"($WalkA * state + $WalkC) % $WalkM").as("ns")))
         .join(deg, Seq("node"))
       // Inner join on the ranked neighbor is total (rn ∈ [1, deg] by
       // construction); the restart CASE just ignores the picked v.
-      val stepped = broadcast(p)
+      all :+ Rounds.cut(broadcast(p)
         .join(adj, p("node") === adj("u") &&
           adj("rn") === (pmod($"ns", $"deg") + 1))
         .select($"walk_id", lit(k.toLong).as("step"),
           when(pmod($"ns", lit(5L)) === 0L, $"walk_id").otherwise($"v")
             .as("node"),
-          $"ns".as("state"))
-        .localCheckpoint(true)
-      cur = stepped
-      all :+= stepped
+          $"ns".as("state")))
     }
     all.map(_.select($"walk_id", $"step", $"node"))
       .reduce(_ unionByName _)
@@ -2078,34 +2021,24 @@ object GraphOps extends QueryPack {
                                sfDir: String): DataFrame = {
     import spark.implicits._
     val und = coPurchaseUnd(spark, sfDir)
-    val adj = Memo.leaf(spark, sfDir, "walkAdj")(
-      und.select($"u", $"v",
-        row_number().over(
-          Window.partitionBy($"u").orderBy($"v".asc)).as("rn")))
-    val deg = Memo.leaf(spark, sfDir, "pprDeg")(
-      und.groupBy($"u".as("node")).agg(count(lit(1)).as("deg")))
-    val seeds = und.select($"u".as("node")).distinct()
-      .orderBy($"node".asc).limit(WalkSeeds)
-    val w0 = seeds.select($"node".as("walk_id"), lit(0L).as("step"),
-        $"node", expr(s"($WalkA * node + $WalkC) % $WalkM").as("state"))
-      .localCheckpoint(true)
+    val adj = walkAdj(spark, sfDir)
+    val deg = degrees(spark, sfDir)
+    val w0 = Rounds.cut(smallestNodes(und, WalkSeeds)
+      .select($"node".as("walk_id"), lit(0L).as("step"), $"node",
+        expr(s"($WalkA * node + $WalkC) % $WalkM").as("state")))
     // Step 1: uniform ranked pick (no previous node yet). Broadcasts as
     // in [[graphWalks]] (optimization round 19): the walk frame is
     // |seeds| rows by construction.
     val p1 = broadcast(w0.select($"walk_id", $"node",
         expr(s"($WalkA * state + $WalkC) % $WalkM").as("ns")))
       .join(deg, Seq("node"))
-    var cur = broadcast(p1)
+    val step1 = Rounds.cut(broadcast(p1)
       .join(adj, p1("node") === adj("u") &&
         adj("rn") === (pmod($"ns", $"deg") + 1))
       .select($"walk_id", lit(1L).as("step"), p1("node").as("prev"),
-        $"v".as("node"), $"ns".as("state"))
-      .localCheckpoint(true)
-    var all = Vector(
-      w0.select($"walk_id", $"step", $"node"),
-      cur.select($"walk_id", $"step", $"node"))
-    for (k <- 2 to WalkSteps) {
-      val p = cur.select($"walk_id", $"prev", $"node",
+        $"v".as("node"), $"ns".as("state")))
+    val steps = (2 to WalkSteps).foldLeft(Vector(step1)) { (steps, k) =>
+      val p = steps.last.select($"walk_id", $"prev", $"node",
         expr(s"($WalkA * state + $WalkC) % $WalkM").as("ns"))
       // Per-step joins restructured to tiny-side broadcasts (optimization
       // round 19): the original (prev, v) LEFT join against the edge leaf
@@ -2134,16 +2067,15 @@ object GraphOps extends QueryPack {
             .otherwise(N2vFar).as("wt"))
       val ord = Window.partitionBy($"walk_id").orderBy($"v".asc)
       val tot = Window.partitionBy($"walk_id")
-      cur = weighted
+      steps :+ Rounds.cut(weighted
         .withColumn("cum", sum($"wt").over(ord))
         .withColumn("idx", pmod($"ns", sum($"wt").over(tot)))
         .filter($"idx" >= $"cum" - $"wt" && $"idx" < $"cum")
         .select($"walk_id", lit(k.toLong).as("step"),
-          $"node".as("prev"), $"v".as("node"), $"ns".as("state"))
-        .localCheckpoint(true)
-      all :+= cur.select($"walk_id", $"step", $"node")
+          $"node".as("prev"), $"v".as("node"), $"ns".as("state")))
     }
-    all.reduce(_ unionByName _)
+    (w0 +: steps).map(_.select($"walk_id", $"step", $"node"))
+      .reduce(_ unionByName _)
       .orderBy($"walk_id".asc_nulls_first, $"step".asc_nulls_first)
   }
 
@@ -2206,26 +2138,25 @@ object GraphOps extends QueryPack {
     * The default-rounds result is a MEMO LEAF (round 19): three graded
     * queries (louvain / coarse / multi) build on the identical fine
     * partition, so the 2-round ascent runs once per (app, sfDir) — the
-    * label-leaf policy q_graph_components already follows. Explicit
-    * `rounds` calls (the spec's intermediate rungs) stay un-memoized. */
+    * label-leaf policy q_graph_components already follows (the ascent's
+    * last round is already cut, so the memo stores it as a value).
+    * Explicit `rounds` calls (the spec's intermediate rungs) stay
+    * un-memoized. */
   private[graft] def louvainLabels(spark: SparkSession, sfDir: String,
                                    rounds: Int = LouvainRounds): DataFrame =
     if (rounds == LouvainRounds)
-      Memo.leaf(spark, sfDir, "louvainFine")(
-        louvainLabelsPlan(spark, sfDir, rounds))
+      Memo(spark, sfDir, "louvainFine")(louvainLabelsPlan(spark, sfDir, rounds))
     else louvainLabelsPlan(spark, sfDir, rounds)
 
   private def louvainLabelsPlan(spark: SparkSession, sfDir: String,
                                 rounds: Int): DataFrame = {
     import spark.implicits._
     val und = coPurchaseUnd(spark, sfDir)
-    val deg = Memo.leaf(spark, sfDir, "pprDeg")(
-      und.groupBy($"u".as("node")).agg(count(lit(1)).as("deg")))
+    val deg = degrees(spark, sfDir)
     val vdim = und.agg(count(lit(1)).as("vol")) // = 2m, one broadcast row
-    var labels = und.select($"u".as("node")).distinct()
-      .select($"node", $"node".as("lbl"))
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds) {
+    val start = Rounds.cut(und.select($"u".as("node")).distinct()
+      .select($"node", $"node".as("lbl")))
+    (1 to rounds).foldLeft(start) { (labels, _) =>
       val dtot = labels.join(deg, Seq("node"))
         .groupBy($"lbl".as("c")).agg(sum($"deg").as("dtot"))
       // Candidate communities = every neighbor's community plus the
@@ -2259,12 +2190,10 @@ object GraphOps extends QueryPack {
             ($"dtot" - when($"c" === $"lbl", $"deg").otherwise(lit(0L))))
             .as("score"))
       val w = Window.partitionBy($"node").orderBy($"score".desc, $"c".asc)
-      labels = scored.withColumn("rn", row_number().over(w))
+      Rounds.cut(scored.withColumn("rn", row_number().over(w))
         .filter($"rn" === 1)
-        .select($"node", $"c".as("lbl"))
-        .localCheckpoint(true)
+        .select($"node", $"c".as("lbl")))
     }
-    labels
   }
 
   /** LOUVAIN-STYLE COMMUNITY DETECTION by modularity ascent (round 18;
@@ -2296,19 +2225,23 @@ object GraphOps extends QueryPack {
     * edge-leaf equi-join + (node, c) count (the LPA shuffle), and a
     * per-node argmax window (never global); the volume scalar rides a
     * 1-row broadcast. Everything keys on node or community id. */
-  private def graphLouvain(spark: SparkSession, sfDir: String): DataFrame = {
+  private def graphLouvain(spark: SparkSession, sfDir: String): DataFrame =
+    communityRollup(spark, sfDir, louvainLabels(spark, sfDir))
+
+  /** The Louvain output grain over node labels `(node, lbl)`: per
+    * community its size, min member, intra-edge count e_in and degree mass
+    * d_tot — the exact integer inputs of Newman Q. Shared by the fine,
+    * coarse and multi-level rollups.
+    */
+  private def communityRollup(spark: SparkSession, sfDir: String,
+                              labels: DataFrame): DataFrame = {
     import spark.implicits._
-    val und = coPurchaseUnd(spark, sfDir)
-    val labels = louvainLabels(spark, sfDir)
-    val deg = Memo.leaf(spark, sfDir, "pprDeg")(
-      und.groupBy($"u".as("node")).agg(count(lit(1)).as("deg")))
-    val edges = und.filter($"u" < $"v")
-    val ein = edges
+    val ein = coPurchaseUnd(spark, sfDir).filter($"u" < $"v")
       .join(labels.select($"node".as("u"), $"lbl".as("cu")), Seq("u"))
       .join(labels.select($"node".as("v"), $"lbl".as("cv")), Seq("v"))
       .filter($"cu" === $"cv")
       .groupBy($"cu".as("community")).agg(count(lit(1)).as("e_in"))
-    labels.join(deg, Seq("node"))
+    labels.join(degrees(spark, sfDir), Seq("node"))
       .groupBy($"lbl".as("community"))
       .agg(count(lit(1)).as("n_members"), min($"node").as("min_node"),
         sum($"deg").as("d_tot"))
@@ -2399,27 +2332,9 @@ object GraphOps extends QueryPack {
     * edge-leaf pass, and the ascent round runs on community-sized
     * frames. */
   private def graphLouvainCoarse(spark: SparkSession,
-                                 sfDir: String): DataFrame = {
-    import spark.implicits._
-    val und = coPurchaseUnd(spark, sfDir)
-    val deg = Memo.leaf(spark, sfDir, "pprDeg")(
-      und.groupBy($"u".as("node")).agg(count(lit(1)).as("deg")))
-    val l3 = louvainCoarseLabels(spark, sfDir).localCheckpoint(true)
-    val edges = und.filter($"u" < $"v")
-    val ein = edges
-      .join(l3.select($"node".as("u"), $"lbl".as("cu")), Seq("u"))
-      .join(l3.select($"node".as("v"), $"lbl".as("cv")), Seq("v"))
-      .filter($"cu" === $"cv")
-      .groupBy($"cu".as("community")).agg(count(lit(1)).as("e_in"))
-    l3.join(deg, Seq("node"))
-      .groupBy($"lbl".as("community"))
-      .agg(count(lit(1)).as("n_members"), min($"node").as("min_node"),
-        sum($"deg").as("d_tot"))
-      .join(ein, Seq("community"), "left")
-      .select($"community", $"n_members", $"min_node",
-        coalesce($"e_in", lit(0L)).as("e_in"), $"d_tot")
-      .orderBy($"community".asc_nulls_first)
-  }
+                                 sfDir: String): DataFrame =
+    communityRollup(spark, sfDir,
+      Rounds.cut(louvainCoarseLabels(spark, sfDir)))
 
   /** One Louvain CONTRACTION + WEIGHTED-ASCENT level: contract the given
     * node-level partition into its weighted community graph (wdeg = the
@@ -2468,8 +2383,7 @@ object GraphOps extends QueryPack {
     import spark.implicits._
     val und = coPurchaseUnd(spark, sfDir)
     val fine = louvainLabels(spark, sfDir)
-    val deg = Memo.leaf(spark, sfDir, "pprDeg")(
-      und.groupBy($"u".as("node")).agg(count(lit(1)).as("deg")))
+    val deg = degrees(spark, sfDir)
     val mv = louvainAscentMoves(und, deg, fine)
     fine.join(mv, Seq("lbl")).select($"node", $"newlbl".as("lbl"))
   }
@@ -2542,10 +2456,11 @@ object GraphOps extends QueryPack {
   private[graft] def louvainMultiLabels(spark: SparkSession, sfDir: String,
       levels: Int = LouvainLevels): DataFrame =
     // The converged default-cap labels are a memo leaf shared by the
-    // multi rollup and the Leiden refinement (the louvainFine policy);
+    // multi rollup and the Leiden refinement (the louvainFine policy:
+    // the last level is already cut, so the memo stores it as a value);
     // explicit `levels` calls (the spec's rungs) stay un-memoized.
     if (levels == LouvainLevels)
-      Memo.leaf(spark, sfDir, "louvainMultiL")(
+      Memo(spark, sfDir, "louvainMultiL")(
         louvainMultiLabelsPlan(spark, sfDir, levels))
     else louvainMultiLabelsPlan(spark, sfDir, levels)
 
@@ -2553,20 +2468,14 @@ object GraphOps extends QueryPack {
                                      levels: Int): DataFrame = {
     import spark.implicits._
     val und = coPurchaseUnd(spark, sfDir)
-    val deg = Memo.leaf(spark, sfDir, "pprDeg")(
-      und.groupBy($"u".as("node")).agg(count(lit(1)).as("deg")))
-    var labels = louvainLabels(spark, sfDir)
-    var lvl = 0
-    var converged = false
-    while (lvl < levels && !converged) {
-      val mv = louvainAscentMoves(und, deg, labels).localCheckpoint(true)
-      converged = mv.filter($"newlbl" =!= $"lbl").isEmpty
-      labels = labels.join(mv, Seq("lbl"))
-        .select($"node", $"newlbl".as("lbl"))
-        .localCheckpoint(true)
-      lvl += 1
-    }
-    labels
+    val deg = degrees(spark, sfDir)
+    // The cap is a legitimate stop: the oracle unrolls exactly `levels`.
+    Rounds.upTo(louvainLabels(spark, sfDir), levels) { labels =>
+      val mv = Rounds.cut(louvainAscentMoves(und, deg, labels))
+      val moved = !mv.filter($"newlbl" =!= $"lbl").isEmpty
+      (Rounds.cut(labels.join(mv, Seq("lbl"))
+        .select($"node", $"newlbl".as("lbl"))), moved)
+    }._1
   }
 
   /** MULTI-LEVEL LOUVAIN TO CONVERGENCE (round 19; r18 VERDICT task 4) —
@@ -2595,27 +2504,8 @@ object GraphOps extends QueryPack {
     * 228 supernodes) except the one label-decorated edge-leaf pass per
     * level; the early exit caps wasted levels at one. */
   private def graphLouvainMulti(spark: SparkSession,
-                                sfDir: String): DataFrame = {
-    import spark.implicits._
-    val und = coPurchaseUnd(spark, sfDir)
-    val deg = Memo.leaf(spark, sfDir, "pprDeg")(
-      und.groupBy($"u".as("node")).agg(count(lit(1)).as("deg")))
-    val lm = louvainMultiLabels(spark, sfDir).localCheckpoint(true)
-    val edges = und.filter($"u" < $"v")
-    val ein = edges
-      .join(lm.select($"node".as("u"), $"lbl".as("cu")), Seq("u"))
-      .join(lm.select($"node".as("v"), $"lbl".as("cv")), Seq("v"))
-      .filter($"cu" === $"cv")
-      .groupBy($"cu".as("community")).agg(count(lit(1)).as("e_in"))
-    lm.join(deg, Seq("node"))
-      .groupBy($"lbl".as("community"))
-      .agg(count(lit(1)).as("n_members"), min($"node").as("min_node"),
-        sum($"deg").as("d_tot"))
-      .join(ein, Seq("community"), "left")
-      .select($"community", $"n_members", $"min_node",
-        coalesce($"e_in", lit(0L)).as("e_in"), $"d_tot")
-      .orderBy($"community".asc_nulls_first)
-  }
+                                sfDir: String): DataFrame =
+    communityRollup(spark, sfDir, louvainMultiLabels(spark, sfDir))
 
   /** One unrolled contraction + weighted-ascent level of the multi
     * oracle: reads node labels from CTE `$prev`, emits `lv$lvl`. Mirrors
@@ -2709,9 +2599,8 @@ object GraphOps extends QueryPack {
                                  sfDir: String): DataFrame = {
     import spark.implicits._
     val und = coPurchaseUnd(spark, sfDir)
-    val deg = Memo.leaf(spark, sfDir, "pprDeg")(
-      und.groupBy($"u".as("node")).agg(count(lit(1)).as("deg")))
-    val lm = louvainMultiLabels(spark, sfDir).localCheckpoint(true)
+    val deg = degrees(spark, sfDir)
+    val lm = louvainMultiLabels(spark, sfDir)
     // shuffle_hash hints (optimization round 19, second pass): lm/refined/
     // deg are |V|-row statistics-free checkpoint leaves and ein is a
     // community-level aggregate — unhinted planning sort-merged all four
@@ -2745,10 +2634,11 @@ object GraphOps extends QueryPack {
     // pins the equality on a multi-community graph and the DuckDB
     // oracle re-verified at 3 SFs.
     val prop = communityCcLabels(spark, intra)
-    val refined = lm.select($"node")
+    val refined = Rounds.cut(lm.select($"node")
       .join(prop.hint("shuffle_hash"), Seq("node"), "left")
-      .select($"node", coalesce($"rl", $"node").as("lbl"))
-      .localCheckpoint(true)
+      .select($"node", coalesce($"rl", $"node").as("lbl")))
+    // The communityRollup grain, written out here because every join
+    // below carries the shuffle_hash hints above.
     val edges = und.filter($"u" < $"v")
     val ein = edges
       .join(refined.select($"node".as("u"), $"lbl".as("cu"))
@@ -2781,19 +2671,38 @@ object GraphOps extends QueryPack {
       .select(intra("cu"), intra("u"), intra("v")).as[(Long, Long, Long)]
       .groupByKey(_._1)
       .flatMapGroups { (_, it) =>
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        def find(x: Long): Long = {
-          val p = parent.getOrElseUpdate(x, x)
-          if (p == x) x else { val r = find(p); parent(x) = r; r }
-        }
-        it.foreach { case (_, u, v) =>
-          val (ru, rv) = (find(u), find(v))
-          if (ru != rv) parent(math.max(ru, rv)) = math.min(ru, rv)
-        }
-        val nodes = parent.keys.toArray
-        nodes.iterator.map(n => (n, find(n)))
+        val uf = new MinRootUnionFind
+        it.foreach { case (_, u, v) => uf.union(u, v) }
+        uf.nodes.toArray.iterator.map(n => (n, uf.find(n)))
       }
       .toDF("node", "rl")
+  }
+
+  /** Union-find over node ids whose root is always its set's minimum id —
+    * the min-label contract of every component labeler here (MST's driver
+    * merges and Kruskal tail, [[communityCcLabels]]' per-community pass).
+    */
+  private final class MinRootUnionFind {
+    private val parent = scala.collection.mutable.Map.empty[Long, Long]
+
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+
+    /** Attaches the larger root under the smaller one; false when `a` and
+      * `b` were already in one set.
+      */
+    def union(a: Long, b: Long): Boolean = {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      ra != rb
+    }
+
+    /** Every id seen by `find` or `union` since the last `clear`. */
+    def nodes: Iterable[Long] = parent.keys
+
+    def clear(): Unit = parent.clear()
   }
 
   /** Min-label propagation replays relationally as one recursive CTE

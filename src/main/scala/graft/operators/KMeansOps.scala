@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Catalog, Memo, Q, QueryPack}
+import graft.{Catalog, Memo, Q, QueryPack, Rounds}
 
 /** SURVEY.md §2.J2 — k-means centroid TRAINING over the embeddings table
   * (added round 12): the missing "learn the cells" half of the IVF ANN
@@ -48,12 +48,11 @@ import graft.{Catalog, Memo, Q, QueryPack}
   * one legitimately broadcastable side), one per-vector argmin window
   * (partitioned by vec_id — never global), and one map-side-combined
   * aggregation building all 64 dimension means in a single hash agg (the
-  * ivfCentroids shape). Per-round results are eagerly localCheckpoint-ed
-  * so iterative lineage stays flat (the pagerank/components precedent; on
-  * a real cluster swap in reliable checkpointing). The final assignment
-  * and centroids materialize once per (application, sfDir) as
-  * [[graft.Memo]] leaves shared by both queries — train once,
-  * serve many, exactly like the label-cell IVF split.
+  * ivfCentroids shape). Per-round results are [[graft.Rounds]] cuts, so
+  * iterative lineage stays flat. The final assignment and centroids
+  * materialize once per (application, sfDir) as [[graft.Memo]] leaves
+  * shared by both queries — train once, serve many, exactly like the
+  * label-cell IVF split.
   */
 object KMeansOps extends QueryPack {
 
@@ -116,13 +115,13 @@ object KMeansOps extends QueryPack {
         .orderBy($"h".asc, $"vec_id".asc).limit(K)
         .withColumn("cell", (row_number().over(seedW) - 1).cast("long"))
         .select($"vec_id", $"cell")
-      var cent = quant.join(seeds, Seq("vec_id"))
-        .select($"cell", $"e".as("c"))
-        .localCheckpoint(true)
-      var assigned: DataFrame = null
-      for (_ <- 1 to Iters) {
-        assigned = assignPass(quant, cent).localCheckpoint(true)
-        cent = centroidsOf(assigned).localCheckpoint(true)
+      val cent0 = Rounds.cut(quant.join(seeds, Seq("vec_id"))
+        .select($"cell", $"e".as("c")))
+      // (assignment, centroids) per round; the first slot starts unused.
+      val (assigned, _) = (1 to Iters).foldLeft((cent0, cent0)) {
+        case ((_, cent), _) =>
+          val a = Rounds.cut(assignPass(quant, cent))
+          (a, Rounds.cut(centroidsOf(a)))
       }
       assigned.select($"vec_id", $"cell")
     }
@@ -368,12 +367,11 @@ object KMeansOps extends QueryPack {
       .filter($"rn" <= 3).select($"probe_id", $"cell", $"rn")
     val pEmb = Catalog.load(spark, sfDir, "embeddings")
       .select($"vec_id".as("probe_id"), $"embedding".as("p_emb"))
-    val scored = pcells.join(pEmb, Seq("probe_id"))
+    val scored = Rounds.cut(pcells.join(pEmb, Seq("probe_id"))
       .join(kmPostings(spark, sfDir), Seq("cell"))
       .filter($"cand_id" =!= $"probe_id")
       .select($"probe_id", $"rn", $"cand_id",
-        round(expr("graft_cosine(p_emb, c_emb)"), 4).as("cos_sim"))
-      .localCheckpoint(true)
+        round(expr("graft_cosine(p_emb, c_emb)"), 4).as("cos_sim")))
     val swept = scored
       .withColumn("nprobe", explode(array(lit(1L), lit(2L), lit(3L))))
       .filter($"rn" <= $"nprobe")
@@ -730,9 +728,8 @@ object KMeansOps extends QueryPack {
         if (rows > 0L) out += ((0, rows))
         out.iterator
       }.toDF("k", "sp")
-    val agg = partials.groupBy($"k")
-      .agg(sum($"sp".cast("decimal(38,0)")).as("s"))
-      .localCheckpoint(true)
+    val agg = Rounds.cut(partials.groupBy($"k")
+      .agg(sum($"sp".cast("decimal(38,0)")).as("s")))
     val nF = agg.filter($"k" === 0).select($"s".as("n"))
     val dims = agg.filter($"k" >= 1 && $"k" <= 64)
       .select($"k".cast("long").as("pos"), $"s".as("t"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Catalog, Memo, Q, QueryPack}
+import graft.{Catalog, Memo, Q, QueryPack, Rounds}
 
 /** SURVEY.md §2.J2 — PRODUCT QUANTIZATION (added round 12 batch 8): the
   * compressed-index ANN stage every billion-vector store runs (FAISS's
@@ -114,13 +114,13 @@ object PqOps extends QueryPack {
         .orderBy($"h".asc, $"vec_id".asc).limit(Kpq)
         .withColumn("code", (row_number().over(seedW) - 1).cast("long"))
         .select($"vec_id", $"code")
-      var cent = sq.join(seeds, Seq("vec_id"))
-        .select($"sub", $"code", $"se".as("c"))
-        .localCheckpoint(true)
-      var assigned: DataFrame = null
-      for (_ <- 1 to Iters) {
-        assigned = assignPass(sq, cent).localCheckpoint(true)
-        cent = centroidsOf(assigned).localCheckpoint(true)
+      val cent0 = Rounds.cut(sq.join(seeds, Seq("vec_id"))
+        .select($"sub", $"code", $"se".as("c")))
+      // (codes, codebooks) per round; the first slot starts unused.
+      val (assigned, _) = (1 to Iters).foldLeft((cent0, cent0)) {
+        case ((_, cent), _) =>
+          val a = Rounds.cut(assignPass(sq, cent))
+          (a, Rounds.cut(centroidsOf(a)))
       }
       assigned.select($"vec_id", $"sub", $"code")
     }

@@ -353,8 +353,8 @@ object VectorServe extends QueryPack {
     val cents = KMeansOps.kmCentroids(spark, sfDir)
       .orderBy($"cell".asc).collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-    val cellScores = array(cents.map { case (cell, c) =>
-      val cCol = array(c.map(lit(_)): _*)
+    val cellScores = array(cents.toIndexedSeq.map { case (cell, c) =>
+      val cCol = array(c.toIndexedSeq.map(lit(_)): _*)
       struct(sqDist($"e", cCol).as("d2"), lit(cell).as("cell"))
     }: _*)
     val buckets = q

@@ -1928,7 +1928,7 @@ private[streaming] class TwsTimerProcessor
       info: org.apache.spark.sql.streaming.ExpiredTimerInfo)
       : Iterator[(Long, Long, Long)] = {
     val (c, _, _) = st.get()
-    Iterator.single((key, c, info.getExpiryTimeInMs))
+    Iterator.single((key, c, info.getExpiryTimeInMs()))
   }
 }
 

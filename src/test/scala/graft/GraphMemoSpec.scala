@@ -89,19 +89,33 @@ class GraphMemoSpec extends SparkTestBase {
     }
   }
 
-  test("two-star components: O(log n) rounds on a 64-node chain, labels exact") {
+  /** A path 0-1-2-...-63, both directions: the adversarial case for
+    * min-label propagation (diameter 63 > MaxRounds 20).
+    */
+  private def chain64() = {
     import spark.implicits._
-    // A path 0-1-2-...-63 is the adversarial case for min-label
-    // propagation (diameter 63 > MaxRounds 20); two-star must collapse it
-    // to one star centered at 0 in ~log2(64) rounds.
-    val chain = (0L until 63L).map(i => (i, i + 1)).toDF("u", "v")
-    val und = chain.select(explode(array(
+    (0L until 63L).map(i => (i, i + 1)).toDF("u", "v")
+      .select(explode(array(
         struct($"u", $"v"), struct($"v".as("u"), $"u".as("v")))).as("e"))
       .select($"e.u".as("u"), $"e.v".as("v"))
-    val (lbl, rounds) = GraphOps.twoStarLabels(spark, und)
+  }
+
+  test("two-star components: O(log n) rounds on a 64-node chain, labels exact") {
+    // Two-star must collapse the chain to one star centered at 0 in
+    // ~log2(64) rounds.
+    val (lbl, rounds) = GraphOps.twoStarLabels(spark, chain64())
     assert(rounds <= 8, s"expected ~log2(64) rounds, got $rounds")
     val got = lbl.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got.size == 64 && got.values.forall(_ == 0L), got.toString)
+  }
+
+  test("min-label propagation on the 64-node chain raises, naming the kernel and the cap") {
+    // Diameter 63 needs far more than the 20-round cap: the round driver
+    // must fail loudly instead of returning partial labels.
+    val e = intercept[IllegalArgumentException](
+      GraphOps.propagateMinLabels(spark, chain64()))
+    assert(e.getMessage.contains("connected components did not converge within 20 rounds"),
+      e.getMessage)
   }
 
   test("two-star labels equal min-label labels on the near-dup graph") {

@@ -337,7 +337,7 @@ class Round10OpsSpec extends SparkTestBase {
     }
     assert(got == expected && got.nonEmpty)
     // Coverage never exceeds the naive sum and the blocks never overlap.
-    got.foreach { case (u, (n, blocks, covered)) =>
+    got.foreach { case (_, (n, blocks, covered)) =>
       assert(covered <= n * 900000000L && blocks <= n)
     }
   }

@@ -36,7 +36,7 @@ class Round13BSpec extends SparkTestBase {
     val ids = out.flatMap(r => Seq(r.getLong(0), r.getLong(1))).distinct
     // Same normalization as LlmPipeline.normText (private[operators]).
     val norm: Map[Long, String] = Catalog.load(spark, sf0001, "documents")
-      .filter($"doc_id".isin(ids: _*))
+      .filter($"doc_id".isin(ids.toIndexedSeq: _*))
       .select($"doc_id", trim(regexp_replace(
         regexp_replace(lower($"text"), "[^a-z0-9 ]", " "), " +", " ")).as("n"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap

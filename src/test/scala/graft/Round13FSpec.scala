@@ -50,7 +50,8 @@ class Round13FSpec extends SparkTestBase {
         val r = 2L * below + c + 1L; below += c; v -> r
       }.toMap
     }
-    val rx = ranks2(xs.map(_._1)); val ry = ranks2(xs.map(_._2))
+    val rx = ranks2(xs.map(_._1).toIndexedSeq)
+    val ry = ranks2(xs.map(_._2).toIndexedSeq)
     val sx = xs.map(p => BigInt(rx(p._1))).sum
     val sy = xs.map(p => BigInt(ry(p._2))).sum
     val sxy = xs.map(p => BigInt(rx(p._1)) * ry(p._2)).sum

@@ -42,7 +42,6 @@ class Round13QSpec extends SparkTestBase {
     }
     // Entities with no history on a side keep NULL features there, and
     // both populated and null rows exist on each arm.
-    val eventUsers = evTs.keySet // not needed; users via events table
     val evUsers = Catalog.load(spark, sf, "events")
       .select($"user_id").distinct().collect().map(_.getLong(0)).toSet
     val orderCust = Catalog.load(spark, sf, "orders")

@@ -394,7 +394,7 @@ class Round18Spec extends SparkTestBase {
         .forall { case (h, o) => o.contains(pos(p, h)) })
     }
     val expApplied = (0 until 4)
-      .count(f => memberAny(feed.filter(_._1 % 4 == f).map(_._1)))
+      .count(f => memberAny(feed.filter(_._1 % 4 == f).map(_._1).toIndexedSeq))
     val feedKeys = feed.map(_._1).toSet
     val expCents =
       rows.filter(r => r._1 % 10 < 5 && probes.contains(r._1) &&
