@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
@@ -63,6 +64,15 @@ object Memo {
   /** A fresh, empty directory under the scratch root. */
   def tempDir(prefix: String): Path =
     Files.createDirectory(root.resolve(s"${prefix}_${dirs.incrementAndGet()}"))
+
+  /** Deletes a scratch tree. `Files.walk` does not follow symlinks, so a
+    * fixture that a scratch dir links to is never touched.
+    */
+  def rmTree(p: Path): Unit = if (Files.exists(p)) {
+    val walk = Files.walk(p)
+    try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists)
+    finally walk.close()
+  }
 
   /** Test hook: forget every entry, so the next call rebuilds. */
   private[graft] def clearForTest(): Unit = cells.clear()

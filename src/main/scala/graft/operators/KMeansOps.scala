@@ -117,13 +117,12 @@ object KMeansOps extends QueryPack {
         .select($"vec_id", $"cell")
       val cent0 = Rounds.cut(quant.join(seeds, Seq("vec_id"))
         .select($"cell", $"e".as("c")))
-      // (assignment, centroids) per round; the first slot starts unused.
-      val (assigned, _) = (1 to Iters).foldLeft((cent0, cent0)) {
-        case ((_, cent), _) =>
-          val a = Rounds.cut(assignPass(quant, cent))
-          (a, Rounds.cut(centroidsOf(a)))
+      // Rounds 1..Iters-1 assign and re-center; the last assignment is
+      // the leaf itself, so no unread centroids are computed or cut.
+      val cent = (1 until Iters).foldLeft(cent0) { (c, _) =>
+        Rounds.cut(centroidsOf(Rounds.cut(assignPass(quant, c))))
       }
-      assigned.select($"vec_id", $"cell")
+      assignPass(quant, cent).select($"vec_id", $"cell")
     }
   }
 

@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -61,47 +61,35 @@ object LakeOps extends QueryPack {
       orders.filter(k >= 6 && k < 8)
         .withColumn("o_channel", pmod(expr("o_orderkey div 10"), lit(2)))
         .write.parquet(s"$base/fileF")
-      val log = Seq(
-        """{"v":1,"op":"add","path":"fileA"}""",
-        """{"v":2,"op":"add","path":"fileB"}""",
-        """{"v":3,"op":"remove","path":"fileA"}""",
-        """{"v":3,"op":"add","path":"fileC"}""",
-        """{"v":4,"op":"remove","path":"fileB"}""",
-        """{"v":4,"op":"remove","path":"fileC"}""",
-        """{"v":4,"op":"add","path":"fileD"}""",
-        """{"v":5,"op":"dv","path":"fileD","dv":"dv1"}""",
-        """{"v":6,"op":"add","path":"fileF"}""",
+      def a(v: Int, op: String, path: String) = LakeAction(v, op, path)
+      val acts = Seq(
+        a(1, "add", "fileA"),
+        a(2, "add", "fileB"),
+        a(3, "remove", "fileA"), a(3, "add", "fileC"),
+        a(4, "remove", "fileB"), a(4, "remove", "fileC"), a(4, "add", "fileD"),
+        LakeAction(5, "dv", "fileD", dv = Some("dv1")),
+        a(6, "add", "fileF"),
         // v7 RESTOREs the table to v3: one metadata commit that removes
         // the current live files and re-adds v3's live set (both still
         // on disk — no vacuum ran here). Removing D drops its DV with
         // it, so the restored state is v3's, unmasked — the Delta
         // RESTORE contract: an append-only log, never history rewrite.
-        """{"v":7,"op":"remove","path":"fileD"}""",
-        """{"v":7,"op":"remove","path":"fileF"}""",
-        """{"v":7,"op":"add","path":"fileB"}""",
-        """{"v":7,"op":"add","path":"fileC"}""",
+        a(7, "remove", "fileD"), a(7, "remove", "fileF"),
+        a(7, "add", "fileB"), a(7, "add", "fileC"),
         // NAMED TAGS (round 18, q_lake_tag_read): a tag action names
         // the snapshot at its own `v` — append-only audit metadata
         // (replay ignores it), the Iceberg named-ref surface. `rc`
         // is deliberately tagged TWICE: the later line wins, the
         // git-style retag.
-        """{"v":2,"op":"tag","path":"ingest_done"}""",
-        """{"v":3,"op":"tag","path":"rc"}""",
-        """{"v":5,"op":"tag","path":"dv_applied"}""",
-        """{"v":7,"op":"tag","path":"rc"}""")
-      Files.write(Paths.get(base, "_log.json"),
-        log.mkString("\n").getBytes(StandardCharsets.UTF_8))
+        a(2, "tag", "ingest_done"), a(3, "tag", "rc"),
+        a(5, "tag", "dv_applied"), a(7, "tag", "rc"))
+      commit(logPath(base), 0, acts)
       // Timestamped sibling log (round 18, q_lake_time_travel_ts):
-      // IDENTICAL actions with an in-commit `ts` field inserted by
-      // string transform — identity with the canonical log holds by
-      // construction, so AS OF resolution and data replay can never
-      // disagree on table content.
-      val tsLog = log.map { line =>
-        val v = parseAction(line).v
-        line.replaceFirst("""("path":"\w+")""", "$1,\"ts\":" + lakeTs(v))
-      }
-      Files.write(Paths.get(base, "_log_ts.json"),
-        tsLog.mkString("\n").getBytes(StandardCharsets.UTF_8))
+      // IDENTICAL actions, each carrying its commit's in-commit `ts` —
+      // identity with the canonical log holds by construction, so AS OF
+      // resolution and data replay can never disagree on table content.
+      commit(Paths.get(base, "_log_ts.json"), 0,
+        acts.map(x => x.copy(ts = Some(lakeTs(x.v)))))
     }
 
   /** Deterministic commit timestamps for the scratch's ts log. */
@@ -114,8 +102,7 @@ object LakeOps extends QueryPack {
     * history rewrite); an unknown name refuses loudly with the known
     * names in the message. */
   private[graft] def versionOfTag(base: String, name: String): Int = {
-    val tags = readActions(Paths.get(base, "_log.json"))
-      .filter(_.op == "tag")
+    val tags = tableLog(base).filter(_.op == "tag")
     val hit = tags.filter(_.path == name)
     require(hit.nonEmpty, s"graft lake: unknown tag '$name' — known tags: " +
       tags.map(_.path).distinct.sorted.mkString(", "))
@@ -162,8 +149,8 @@ object LakeOps extends QueryPack {
     * carrying per-COLUMN stats, so conjunctive predicates can prune on
     * any statted column, not just the table key. */
   private[graft] final case class LakeAction(v: Int, op: String,
-      path: String, dv: Option[String],
-      minKey: Option[Long], maxKey: Option[Long],
+      path: String, dv: Option[String] = None,
+      minKey: Option[Long] = None, maxKey: Option[Long] = None,
       colZones: Map[String, (Long, Long)] = Map.empty,
       rows: Option[Long] = None,
       bloom: Option[String] = None,
@@ -184,7 +171,9 @@ object LakeOps extends QueryPack {
     * 16-hex-digit little-endian words) are exclusive to `add`; the
     * round-18 `ts` field (epoch-seconds commit timestamp, the Delta
     * in-commit-timestamp that AS OF resolution needs) is legal on any
-    * action and validated commit-consistent + monotone at resolution. */
+    * action and validated commit-consistent + monotone at resolution.
+    * Fields appear in the order `v, op, path, ts, dv, min, max, zones,
+    * rows, bloom`. [[commit]] is the one writer of log lines. */
   private val actionRe =
     ("""^\{"v":(\d+),"op":"(add|remove|dv|vacuum|conflict|delta|edelete|schema|tag|expire)","path":"(\w+)"""" +
       """(?:,"ts":(\d+))?(?:,"dv":"(\w+)")?(?:,"min":(-?\d+),"max":(-?\d+))?""" +
@@ -233,9 +222,62 @@ object LakeOps extends QueryPack {
         s"graft lake: malformed commit-log action: $line")
   }
 
-  private[graft] def readActions(path: java.nio.file.Path): Seq[LakeAction] =
+  private[graft] def readActions(path: Path): Seq[LakeAction] =
     new String(Files.readAllBytes(path), StandardCharsets.UTF_8)
       .split("\n").toSeq.map(parseAction)
+
+  /** The commit log of the table at `base`. */
+  private[graft] def logPath(base: String): Path = Paths.get(base, "_log.json")
+
+  /** Every action of the table at `base`, in log order. */
+  private[graft] def tableLog(base: String): Seq[LakeAction] =
+    readActions(logPath(base))
+
+  /** The newest version in `acts`; 0 for an empty log. */
+  private[graft] def headOf(acts: Seq[LakeAction]): Int =
+    acts.map(_.v).maxOption.getOrElse(0)
+
+  /** The inverse of [[parseAction]]: the canonical log line of `a`, its
+    * fields in grammar order and its zones sorted by column (so the bytes
+    * are deterministic). */
+  private[graft] def actionLine(a: LakeAction): String = {
+    val zones = a.colZones.toSeq.sortBy(_._1)
+      .map { case (c, (mn, mx)) => s""""$c":[$mn,$mx]""" }
+    Seq(Some(s""""v":${a.v},"op":"${a.op}","path":"${a.path}""""),
+      a.ts.map(t => s""""ts":$t"""),
+      a.dv.map(d => s""""dv":"$d""""),
+      for (mn <- a.minKey; mx <- a.maxKey) yield s""""min":$mn,"max":$mx""",
+      Option.when(zones.nonEmpty)(zones.mkString(""""zones":{""", ",", "}")),
+      a.rows.map(r => s""""rows":$r"""),
+      a.bloom.map(b => s""""bloom":"$b""""))
+      .flatten.mkString("{", ",", "}")
+  }
+
+  /** Commit `actions` to the log at `log` — the one writer of every commit
+    * log and checkpoint file. The commit names the head version it read
+    * (`expected`; a missing log has head 0) and is refused, with the log
+    * untouched, when the head has moved since: the Delta optimistic
+    * concurrency protocol. Otherwise the actions are appended through
+    * [[actionLine]], each checked against the strict grammar first, so a
+    * log never holds a line its readers refuse. Logs are newline-separated,
+    * with no trailing newline. */
+  private[graft] def commit(log: Path, expected: Int,
+                            actions: Seq[LakeAction]): Unit = synchronized {
+    require(actions.nonEmpty, s"graft lake: empty commit to $log")
+    val exists = Files.exists(log)
+    val head = if (exists) headOf(readActions(log)) else 0
+    if (head != expected)
+      throw new IllegalStateException(s"graft lake: stale commit to $log — " +
+        s"it read v$expected, but the head is now v$head; re-read and retry")
+    require(actions.forall(_.v > expected),
+      s"graft lake: a commit on top of v$expected must write newer versions")
+    val lines = actions.map { a => val l = actionLine(a); parseAction(l); l }
+    if (exists) Files.write(log, ("\n" + lines.mkString("\n"))
+      .getBytes(StandardCharsets.UTF_8), StandardOpenOption.APPEND)
+    else Files.write(log, lines.mkString("\n").getBytes(StandardCharsets.UTF_8),
+      StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+    ()
+  }
 
   /** Replayed table state: live files in commit order, deletion vectors
     * per file, zone-map stats per file where the add carried them.
@@ -330,8 +372,7 @@ object LakeOps extends QueryPack {
   }
 
   private def fullState(base: String, v: Int): LakeState =
-    replayActions(emptyState,
-      readActions(Paths.get(base, "_log.json")).filter(_.v <= v))
+    replayActions(emptyState, tableLog(base).filter(_.v <= v))
 
   /** Replay the commit log to version `v` → live file paths. */
   private def liveFiles(base: String, v: Int): Seq[String] =
@@ -364,8 +405,7 @@ object LakeOps extends QueryPack {
     * answer from a partial file set. Logs without expire records (every
     * other scratch) are untouched by this gate. */
   private def checkNotExpired(base: String, v: Int): Unit = {
-    val ex = readActions(Paths.get(base, "_log.json"))
-      .filter(_.op == "expire")
+    val ex = tableLog(base).filter(_.op == "expire")
     ex.find(_.path == s"s$v").foreach { a =>
       throw new IllegalStateException(s"graft lake: snapshot v$v was " +
         s"expired by expire_snapshots at commit ${a.v} — time travel to " +
@@ -664,21 +704,35 @@ object LakeOps extends QueryPack {
     * proof pins.
     */
 
+  /** The lake scratches' orders seed: (o_orderkey, o_orderstatus, cents),
+    * with the total price as exact integer cents. */
+  private[graft] def ordersCents(orders: DataFrame): DataFrame =
+    orders.select(col("o_orderkey"), col("o_orderstatus"),
+      (col("o_totalprice").cast("decimal(14,2)") * 100).cast("long")
+        .as("cents"))
+
+  /** The seed both MERGE scratches share, so MoR ≡ COW is graded on equal
+    * inputs: writes v1's fileB (3 ≤ k%10 < 6) and fileC (k%10 < 3 ∧
+    * status F) under `base`, and returns the cut source batch (keys ≡ 42
+    * mod 100, cents halved). */
+  private def mergeSeed(spark: SparkSession, sfDir: String,
+                        base: String): DataFrame = {
+    import spark.implicits._
+    val rows = ordersCents(Catalog.load(spark, sfDir, "orders"))
+    val k = pmod($"o_orderkey", lit(10))
+    rows.filter(k >= 3 && k < 6).write.parquet(s"$base/fileB")
+    rows.filter(k < 3 && $"o_orderstatus" === "F")
+      .write.parquet(s"$base/fileC")
+    rows.filter(pmod($"o_orderkey", lit(100)) === 42)
+      .select($"o_orderkey", $"o_orderstatus",
+        expr("cents div 2").as("cents"))
+      .localCheckpoint(true)
+  }
+
   private def mergeDir(spark: SparkSession, sfDir: String): String =
     Memo.dir(spark, sfDir, "lake_merge") { base =>
       import spark.implicits._
-      val rows = Catalog.load(spark, sfDir, "orders")
-        .select($"o_orderkey", $"o_orderstatus",
-          ($"o_totalprice".cast("decimal(14,2)") * 100).cast("long")
-            .as("cents"))
-      val k = pmod($"o_orderkey", lit(10))
-      rows.filter(k >= 3 && k < 6).write.parquet(s"$base/fileB")
-      rows.filter(k < 3 && $"o_orderstatus" === "F")
-        .write.parquet(s"$base/fileC")
-      val src = rows.filter(pmod($"o_orderkey", lit(100)) === 42)
-        .select($"o_orderkey", $"o_orderstatus",
-          expr("cents div 2").as("cents"))
-        .localCheckpoint(true)
+      val src = mergeSeed(spark, sfDir, base)
       val v1 = Seq("fileB", "fileC")
       // 1. Prune: rewrite only live files holding matched keys.
       val touched = v1.filter { f =>
@@ -701,13 +755,10 @@ object LakeOps extends QueryPack {
       src.join(liveKeys, Seq("o_orderkey"), "left_anti")
         .write.parquet(s"$base/fileE")
       // 4. One commit: removes + adds.
-      val log =
-        v1.map(f => s"""{"v":1,"op":"add","path":"$f"}""") ++
-          touched.map(f => s"""{"v":2,"op":"remove","path":"$f"}""") ++
-          touched.map(f => s"""{"v":2,"op":"add","path":"${f}_m"}""") :+
-          s"""{"v":2,"op":"add","path":"fileE"}"""
-      Files.write(Paths.get(base, "_log.json"),
-        log.mkString("\n").getBytes(StandardCharsets.UTF_8))
+      commit(logPath(base), 0, v1.map(LakeAction(1, "add", _)) ++
+        touched.map(LakeAction(2, "remove", _)) ++
+        touched.map(f => LakeAction(2, "add", s"${f}_m")) :+
+        LakeAction(2, "add", "fileE"))
     }
 
   private def lakeMerge(spark: SparkSession, sfDir: String): DataFrame = {
@@ -771,18 +822,7 @@ object LakeOps extends QueryPack {
   private def morDir(spark: SparkSession, sfDir: String): String =
     Memo.dir(spark, sfDir, "lake_mor") { base =>
       import spark.implicits._
-      val rows = Catalog.load(spark, sfDir, "orders")
-        .select($"o_orderkey", $"o_orderstatus",
-          ($"o_totalprice".cast("decimal(14,2)") * 100).cast("long")
-            .as("cents"))
-      val k = pmod($"o_orderkey", lit(10))
-      rows.filter(k >= 3 && k < 6).write.parquet(s"$base/fileB")
-      rows.filter(k < 3 && $"o_orderstatus" === "F")
-        .write.parquet(s"$base/fileC")
-      val src = rows.filter(pmod($"o_orderkey", lit(100)) === 42)
-        .select($"o_orderkey", $"o_orderstatus",
-          expr("cents div 2").as("cents"))
-        .localCheckpoint(true)
+      val src = mergeSeed(spark, sfDir, base)
       // MoR MERGE WRITER: reads the base (to combine matched rows'
       // untouched columns into full row images — the Hudi payload-
       // combine step), writes ONLY the delta. Base files untouched.
@@ -794,23 +834,15 @@ object LakeOps extends QueryPack {
       val inserts = src.join(baseDf.select($"o_orderkey"),
         Seq("o_orderkey"), "left_anti")
       matched.unionByName(inserts).write.parquet(s"$base/delta1")
-      val v12 = Seq(
-        """{"v":1,"op":"add","path":"fileB"}""",
-        """{"v":1,"op":"add","path":"fileC"}""",
-        """{"v":2,"op":"delta","path":"delta1"}""")
-      Files.write(Paths.get(base, "_log.json"),
-        v12.mkString("\n").getBytes(StandardCharsets.UTF_8))
+      commit(logPath(base), 0, Seq(LakeAction(1, "add", "fileB"),
+        LakeAction(1, "add", "fileC"), LakeAction(2, "delta", "delta1")))
       // v3 COMPACTION: reads the v2 snapshot through the same MoR
       // kernel readers use (never the source table), lands ONE
       // compacted file, retires base + delta in one metadata commit.
       morSnapshot(spark, base, 2).write.parquet(s"$base/fileBC")
-      val log = v12 ++ Seq(
-        """{"v":3,"op":"remove","path":"fileB"}""",
-        """{"v":3,"op":"remove","path":"fileC"}""",
-        """{"v":3,"op":"remove","path":"delta1"}""",
-        """{"v":3,"op":"add","path":"fileBC"}""")
-      Files.write(Paths.get(base, "_log.json"),
-        log.mkString("\n").getBytes(StandardCharsets.UTF_8))
+      commit(logPath(base), 2,
+        Seq("fileB", "fileC", "delta1").map(LakeAction(3, "remove", _)) :+
+          LakeAction(3, "add", "fileBC"))
     }
 
   /** MoR snapshot read: the DV-masked base read, then each outstanding
@@ -859,10 +891,7 @@ object LakeOps extends QueryPack {
   private def edelDir(spark: SparkSession, sfDir: String): String =
     Memo.dir(spark, sfDir, "lake_edel") { base =>
       import spark.implicits._
-      val rows = Catalog.load(spark, sfDir, "orders")
-        .select($"o_orderkey", $"o_orderstatus",
-          ($"o_totalprice".cast("decimal(14,2)") * 100).cast("long")
-            .as("cents"))
+      val rows = ordersCents(Catalog.load(spark, sfDir, "orders"))
       val k = pmod($"o_orderkey", lit(10))
       rows.filter(k < 3).write.parquet(s"$base/fileP")
       rows.filter(k >= 3 && k < 5).write.parquet(s"$base/fileQ")
@@ -876,23 +905,14 @@ object LakeOps extends QueryPack {
         .select($"o_orderkey", $"o_orderstatus",
           expr("cents div 4").as("cents"))
         .write.parquet(s"$base/up1")
-      val v13 = Seq(
-        """{"v":1,"op":"add","path":"fileP"}""",
-        """{"v":1,"op":"add","path":"fileQ"}""",
-        """{"v":2,"op":"edelete","path":"ed1"}""",
-        """{"v":3,"op":"delta","path":"up1"}""")
-      Files.write(Paths.get(base, "_log.json"),
-        v13.mkString("\n").getBytes(StandardCharsets.UTF_8))
+      commit(logPath(base), 0, Seq(LakeAction(1, "add", "fileP"),
+        LakeAction(1, "add", "fileQ"), LakeAction(2, "edelete", "ed1"),
+        LakeAction(3, "delta", "up1")))
       // v4: compaction folds every layer through the shared kernel.
       morSnapshot(spark, base, 3).write.parquet(s"$base/fileR")
-      val log = v13 ++ Seq(
-        """{"v":4,"op":"remove","path":"fileP"}""",
-        """{"v":4,"op":"remove","path":"fileQ"}""",
-        """{"v":4,"op":"remove","path":"ed1"}""",
-        """{"v":4,"op":"remove","path":"up1"}""",
-        """{"v":4,"op":"add","path":"fileR"}""")
-      Files.write(Paths.get(base, "_log.json"),
-        log.mkString("\n").getBytes(StandardCharsets.UTF_8))
+      commit(logPath(base), 3,
+        Seq("fileP", "fileQ", "ed1", "up1").map(LakeAction(4, "remove", _)) :+
+          LakeAction(4, "add", "fileR"))
     }
 
   private[graft] def edelBase(spark: SparkSession, sfDir: String): String =
@@ -1019,7 +1039,7 @@ object LakeOps extends QueryPack {
       morSnapshot(spark, base, vOld)
         .groupBy($"o_orderstatus")
         .agg(count(lit(1)).as("cnt"), sum($"cents").cast("long").as("cts")))
-    val layers = readActions(Paths.get(base, "_log.json"))
+    val layers = tableLog(base)
       .filter(a => (a.op == "delta" || a.op == "edelete") &&
         a.v > vOld && a.v <= vNew)
       .sortBy(_.v).map(a => (a.op, a.path))
@@ -1201,13 +1221,9 @@ object LakeOps extends QueryPack {
       orders.filter(k >= 3 && k < 6).write.parquet(s"$base/fileB")
       orders.filter(k < 3 && $"o_orderstatus" === "F")
         .write.parquet(s"$base/fileC")
-      val log = Seq(
-        """{"v":1,"op":"add","path":"fileA"}""",
-        """{"v":2,"op":"add","path":"fileB"}""",
-        """{"v":3,"op":"remove","path":"fileA"}""",
-        """{"v":3,"op":"add","path":"fileC"}""")
-      Files.write(Paths.get(base, "_log.json"),
-        log.mkString("\n").getBytes(StandardCharsets.UTF_8))
+      commit(logPath(base), 0, Seq(LakeAction(1, "add", "fileA"),
+        LakeAction(2, "add", "fileB"), LakeAction(3, "remove", "fileA"),
+        LakeAction(3, "add", "fileC")))
       // VACUUM at horizon 3: delete on-disk data files no retained
       // version (v >= 3) references, then log the physical deletions.
       val retained = (3 to 3).flatMap(v => liveState(base, v)._1).toSet
@@ -1215,22 +1231,14 @@ object LakeOps extends QueryPack {
         .filter(f => f.isDirectory && f.getName.startsWith("file"))
         .map(_.getName).toSeq.sorted
       val dead = onDisk.filterNot(retained)
-      dead.foreach { d =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(base, d))
-      }
-      val vacLog = dead.map(d => s"""{"v":4,"op":"vacuum","path":"$d"}""")
-      Files.write(Paths.get(base, "_log.json"),
-        (log ++ vacLog).mkString("\n").getBytes(StandardCharsets.UTF_8))
+      dead.foreach(d => Memo.rmTree(Paths.get(base, d)))
+      commit(logPath(base), 3, dead.map(LakeAction(4, "vacuum", _)))
     }
 
   private def lakeVacuum(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val base = vacuumDir(spark, sfDir)
-    val nVacuumed =
-      readActions(Paths.get(base, "_log.json")).count(_.op == "vacuum")
+    val nVacuumed = tableLog(base).count(_.op == "vacuum")
     val refused = (1 to 3).count(v =>
       liveFiles(base, v).exists(p => !Files.exists(Paths.get(p))))
     val v3files = liveFiles(base, 3)
@@ -1285,28 +1293,19 @@ object LakeOps extends QueryPack {
     * posture. */
   private def doExpire(base: String, toExpire: Seq[Int]): Seq[String] = {
     if (toExpire.isEmpty) return Nil
-    val acts = readActions(Paths.get(base, "_log.json"))
+    val acts = tableLog(base)
     val already = acts.filter(_.op == "expire")
       .map(_.path.stripPrefix("s").toInt).toSet
     val gone = already ++ toExpire
     val retained = dataVersions(acts).filterNot(gone)
     val needed = retained.flatMap(v => liveState(base, v)._1).toSet
     val dead = toExpire.flatMap(v => liveState(base, v)._1).toSet -- needed
-    dead.toSeq.sorted.foreach { d =>
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(base, d))
-    }
-    val newV = acts.map(_.v).max + 1
-    val lines = toExpire.sorted.map(v =>
-      s"""{"v":$newV,"op":"expire","path":"s$v","ts":${lakeTs(newV)}}""") ++
-      dead.toSeq.sorted.map(d =>
-        s"""{"v":$newV,"op":"vacuum","path":"$d","ts":${lakeTs(newV)}}""")
-    val old = new String(Files.readAllBytes(Paths.get(base, "_log.json")),
-      StandardCharsets.UTF_8)
-    Files.write(Paths.get(base, "_log.json"),
-      (old + "\n" + lines.mkString("\n")).getBytes(StandardCharsets.UTF_8))
+    dead.toSeq.sorted.foreach(d => Memo.rmTree(Paths.get(base, d)))
+    val head = headOf(acts)
+    val ts = Some(lakeTs(head + 1))
+    commit(logPath(base), head,
+      toExpire.sorted.map(v => LakeAction(head + 1, "expire", s"s$v", ts = ts)) ++
+        dead.toSeq.sorted.map(LakeAction(head + 1, "vacuum", _, ts = ts)))
     dead.toSeq.sorted
   }
 
@@ -1318,7 +1317,7 @@ object LakeOps extends QueryPack {
     * sweep under the same policy finds no candidates. */
   private[graft] def expireSnapshots(base: String, retainLast: Int,
       olderThan: Long): (Seq[Int], Seq[Int], Seq[String]) = {
-    val acts = readActions(Paths.get(base, "_log.json"))
+    val acts = tableLog(base)
     val versions = dataVersions(acts)
     val already = acts.filter(_.op == "expire")
       .map(_.path.stripPrefix("s").toInt).toSet
@@ -1344,7 +1343,7 @@ object LakeOps extends QueryPack {
     * append, no file deletion — the spec pins both), anything else
     * delegates to [[doExpire]]. */
   private[graft] def expireVersion(base: String, v: Int): Seq[String] = {
-    val acts = readActions(Paths.get(base, "_log.json"))
+    val acts = tableLog(base)
     val tags = acts.filter(a => a.op == "tag" && a.v == v).map(_.path)
     require(tags.isEmpty, s"graft lake: snapshot v$v is protected by " +
       s"tag(s) ${tags.sorted.mkString(", ")} — expire_snapshots refuses; " +
@@ -1375,18 +1374,14 @@ object LakeOps extends QueryPack {
       spark.read.parquet(s"$base/fileB", s"$base/fileC")
         .write.parquet(s"$base/fileD")
       orders.filter(k >= 6 && k < 8).write.parquet(s"$base/fileE")
-      def line(v: Int, op: String, path: String): String =
-        s"""{"v":$v,"op":"$op","path":"$path","ts":${lakeTs(v)}}"""
-      val log = Seq(
-        line(1, "add", "fileA"),
-        line(2, "add", "fileB"),
-        line(3, "remove", "fileA"), line(3, "add", "fileC"),
-        line(3, "tag", "audit"),
-        line(4, "remove", "fileB"), line(4, "remove", "fileC"),
-        line(4, "add", "fileD"),
-        line(5, "add", "fileE"))
-      Files.write(Paths.get(base, "_log.json"),
-        log.mkString("\n").getBytes(StandardCharsets.UTF_8))
+      def a(v: Int, op: String, path: String) =
+        LakeAction(v, op, path, ts = Some(lakeTs(v)))
+      commit(logPath(base), 0, Seq(
+        a(1, "add", "fileA"),
+        a(2, "add", "fileB"),
+        a(3, "remove", "fileA"), a(3, "add", "fileC"), a(3, "tag", "audit"),
+        a(4, "remove", "fileB"), a(4, "remove", "fileC"), a(4, "add", "fileD"),
+        a(5, "add", "fileE")))
       val (expired, prot, dead) =
         expireSnapshots(base, ExpireRetainLast, expireOlderThan)
       require(expired == Seq(1, 2) && prot == Seq(3) &&
@@ -1416,7 +1411,7 @@ object LakeOps extends QueryPack {
   private def lakeExpire(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val base = expireDir(spark, sfDir)
-    val acts = readActions(Paths.get(base, "_log.json"))
+    val acts = tableLog(base)
     val versions = dataVersions(acts)
     val expired = acts.filter(_.op == "expire")
       .map(_.path.stripPrefix("s").toInt).toSet
@@ -1546,12 +1541,7 @@ object LakeOps extends QueryPack {
   private def cloneDir(spark: SparkSession, sfDir: String): String =
     Memo.dir(spark, sfDir, "lake_clone") { base =>
       val src = lakeDir(spark, sfDir)
-      val srcLog = new String(
-        Files.readAllBytes(Paths.get(src, "_log.json")),
-        StandardCharsets.UTF_8).split("\n").toSeq
-      val truncated = srcLog.filter(parseAction(_).v <= 4)
-      Files.write(Paths.get(base, "_log.json"),
-        truncated.mkString("\n").getBytes(StandardCharsets.UTF_8))
+      commit(logPath(base), 0, tableLog(src).filter(_.v <= 4))
       Files.write(Paths.get(base, "_source"),
         src.getBytes(StandardCharsets.UTF_8))
     }
@@ -1623,11 +1613,8 @@ object LakeOps extends QueryPack {
       orders.filter(k >= 5)
         .withColumn("o_year", year($"o_orderdate"))
         .write.partitionBy("o_year").parquet(s"$base/fileP2")
-      val log = Seq(
-        """{"v":1,"op":"add","path":"fileP1"}""",
-        """{"v":2,"op":"add","path":"fileP2"}""")
-      Files.write(Paths.get(base, "_log.json"),
-        log.mkString("\n").getBytes(StandardCharsets.UTF_8))
+      commit(logPath(base), 0,
+        Seq(LakeAction(1, "add", "fileP1"), LakeAction(2, "add", "fileP2")))
     }
 
   private def lakePartitionEvolution(spark: SparkSession, sfDir: String): DataFrame = {
@@ -1662,60 +1649,41 @@ object LakeOps extends QueryPack {
     * attempts, rejected attempts) — a lost update or a double-append
     * breaks the hash. Scale: the check is one compare on catalog state
     * (how Delta's mutual-exclusion on log files behaves), never a data
-    * scan; retry cost is re-validation, not re-write.
+    * scan; retry cost is re-validation, not re-write. The protocol is
+    * [[commit]]'s own: B's stale attempt is exactly its refusal.
     */
-
-  /** Attempt a commit at `expected + 1`; append entries and return true
-    * iff the current head version still equals `expected`. */
-  private def tryCommit(base: String, expected: Int,
-                        entries: Seq[String]): Boolean = {
-    val logPath = Paths.get(base, "_log.json")
-    val lines = new String(Files.readAllBytes(logPath),
-      StandardCharsets.UTF_8).split("\n").toSeq
-    val head = lines.map(parseAction(_).v).max
-    if (head != expected) false
-    else {
-      Files.write(logPath,
-        (lines ++ entries).mkString("\n").getBytes(StandardCharsets.UTF_8))
-      true
-    }
-  }
-
   private def occDir(spark: SparkSession, sfDir: String): String =
     Memo.dir(spark, sfDir, "lake_occ") { base =>
       import spark.implicits._
       val orders = Catalog.load(spark, sfDir, "orders")
       val k = pmod($"o_orderkey", lit(10))
       orders.filter(k < 2).write.parquet(s"$base/fileBase")
-      Files.write(Paths.get(base, "_log.json"),
-        """{"v":1,"op":"add","path":"fileBase"}"""
-          .getBytes(StandardCharsets.UTF_8))
+      val log = logPath(base)
+      commit(log, 0, Seq(LakeAction(1, "add", "fileBase")))
       // Both writers read the SAME head (v1) and stage their files.
       orders.filter(k >= 2 && k < 4).write.parquet(s"$base/fileA")
       orders.filter(k >= 4 && k < 6).write.parquet(s"$base/fileB")
-      val readByA = 1
-      val readByB = 1
+      val read = 1
       // Writer A lands first.
-      require(tryCommit(base, readByA,
-        Seq(s"""{"v":${readByA + 1},"op":"add","path":"fileA"}""")),
-        "writer A must commit cleanly at v2")
-      // Writer B's attempt against its STALE snapshot must be rejected.
-      val bFirst = tryCommit(base, readByB,
-        Seq(s"""{"v":${readByB + 1},"op":"add","path":"fileB"}"""))
-      require(!bFirst, "writer B's stale commit must be rejected")
+      commit(log, read, Seq(LakeAction(read + 1, "add", "fileA")))
+      // Writer B's attempt against its STALE snapshot must be refused.
+      val refused =
+        try {
+          commit(log, read, Seq(LakeAction(read + 1, "add", "fileB"))); false
+        } catch { case _: IllegalStateException => true }
+      require(refused, "writer B's stale commit must be refused")
       // B re-reads the head, validates (append-only ⇒ disjoint) and
       // retries; the conflict is audited in the log.
-      require(tryCommit(base, readByA + 1, Seq(
-        s"""{"v":${readByA + 2},"op":"conflict","path":"fileB"}""",
-        s"""{"v":${readByA + 2},"op":"add","path":"fileB"}""")),
-        "writer B's rebased commit must land at v3")
+      val head = headOf(readActions(log))
+      commit(log, head, Seq(LakeAction(head + 1, "conflict", "fileB"),
+        LakeAction(head + 1, "add", "fileB")))
     }
 
   private def lakeOcc(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val base = occDir(spark, sfDir)
-    val log = readActions(Paths.get(base, "_log.json"))
-    val head = log.map(_.v).max
+    val log = tableLog(base)
+    val head = headOf(log)
     val rejected = log.count(_.op == "conflict")
     spark.read.parquet(liveFiles(base, head): _*)
       .agg(count(lit(1)).as("n_rows"),
@@ -1778,8 +1746,9 @@ object LakeOps extends QueryPack {
         s"graft lake: empty $what zone bucket $b — the scratch builder " +
           "assumes every bucket is populated"))
 
-  private def addLine(v: Int, p: String, mn: Long, mx: Long): String =
-    s"""{"v":$v,"op":"add","path":"$p","min":$mn,"max":$mx}"""
+  /** An `add` of `p` at `v` carrying the key zone `z`. */
+  private def zonedAdd(v: Int, p: String, z: (Long, Long)): LakeAction =
+    LakeAction(v, "add", p, minKey = Some(z._1), maxKey = Some(z._2))
 
   /** Materialize the replayed state at `v` as a checkpoint file of
     * strict-grammar actions (zone-carrying adds + DV registrations +
@@ -1789,45 +1758,30 @@ object LakeOps extends QueryPack {
     * resolution O(tail) in I/O and parse, not just in replay (the log is
     * version-ordered append-only, so the offset stays valid as commits
     * land after it). */
-  /** Render a column→(min,max) map as the optional `zones` action field
-    * (sorted by column for byte determinism); empty → no field. */
-  private def zonesField(cz: Map[String, (Long, Long)]): String =
-    if (cz.isEmpty) ""
-    else cz.toSeq.sortBy(_._1).map { case (c, (mn, mx)) =>
-      s""""$c":[$mn,$mx]""" }.mkString(""","zones":{""", ",", "}")
-
   private def writeCheckpoint(base: String, v: Int): Unit = {
     val st = fullState(base, v)
-    val lines = st.live.map { p =>
-      val zf = zonesField(st.colZones.getOrElse(p, Map.empty))
-      val rf = st.rowCounts.get(p).map(r => s""","rows":$r""").getOrElse("")
-      val bf = st.blooms.get(p).map(b => s""","bloom":"$b"""").getOrElse("")
-      st.zones.get(p) match {
-        case Some((mn, mx)) =>
-          s"""{"v":$v,"op":"add","path":"$p","min":$mn,"max":$mx$zf$rf$bf}"""
-        case None => s"""{"v":$v,"op":"add","path":"$p"$zf$rf$bf}"""
-      }
+    val acts = st.live.map { p =>
+      LakeAction(v, "add", p, minKey = st.zones.get(p).map(_._1),
+        maxKey = st.zones.get(p).map(_._2),
+        colZones = st.colZones.getOrElse(p, Map.empty),
+        rows = st.rowCounts.get(p), bloom = st.blooms.get(p))
     } ++ st.live.flatMap(p => st.dvs.getOrElse(p, Nil).map(d =>
-      s"""{"v":$v,"op":"dv","path":"$p","dv":"$d"}"""))  ++
+      LakeAction(v, "dv", p, dv = Some(d)))) ++
       // Outstanding merge-on-read deltas are part of the replayed state:
       // a checkpoint materialized mid-MoR must carry them in order, or a
       // checkpoint-resolved read would silently lose the upsert layer —
       // and their blooms ride along (a checkpoint-resolved probe read
       // must keep skipping layers).
       st.deltas.map { case (k, d) =>
-        val bf = st.blooms.get(d).map(b => s""","bloom":"$b"""").getOrElse("")
-        s"""{"v":$v,"op":"$k","path":"$d"$bf}""" } ++
+        LakeAction(v, k, d, bloom = st.blooms.get(d)) } ++
       // everAdded files that are no longer live (added-then-removed, not
       // vacuumed) are still on disk and still the empty-snapshot schema
       // fallback's source — persist them as `schema` actions so resolving
       // THROUGH this checkpoint loses no schema source (round-19 ADVICE
       // fix; live files re-enter everAdded through their add lines).
-      st.everAdded.filterNot(st.live.toSet).map(p =>
-        s"""{"v":$v,"op":"schema","path":"$p"}""")
-    Files.write(Paths.get(base, s"_ckpt.v$v.json"),
-      lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    val logLines = new String(
-      Files.readAllBytes(Paths.get(base, "_log.json")),
+      st.everAdded.filterNot(st.live.toSet).map(LakeAction(v, "schema", _))
+    commit(Paths.get(base, s"_ckpt.v$v.json"), 0, acts)
+    val logLines = new String(Files.readAllBytes(logPath(base)),
       StandardCharsets.UTF_8).split("\n")
     val prefix = logLines.takeWhile(l => parseAction(l).v <= v)
     val off = prefix.map(_.getBytes(StandardCharsets.UTF_8).length.toLong)
@@ -1841,11 +1795,11 @@ object LakeOps extends QueryPack {
     * (cv = 0, or a checkpoint written before cursors existed). */
   private def logTail(base: String, cv: Int): Seq[LakeAction] = {
     val offPath = Paths.get(base, s"_ckpt.v$cv.off")
-    val logPath = Paths.get(base, "_log.json")
+    val log = logPath(base)
     if (cv > 0 && Files.exists(offPath)) {
       val off = new String(Files.readAllBytes(offPath),
         StandardCharsets.UTF_8).toLong
-      val ch = java.nio.channels.FileChannel.open(logPath)
+      val ch = java.nio.channels.FileChannel.open(log)
       try {
         val size = ch.size()
         if (off >= size) Nil
@@ -1868,7 +1822,7 @@ object LakeOps extends QueryPack {
             .split("\n").toSeq.filter(_.nonEmpty).map(parseAction)
         }
       } finally ch.close()
-    } else readActions(logPath).filter(_.v > cv)
+    } else readActions(log).filter(_.v > cv)
   }
 
   private val ckptNameRe = """_ckpt\.v(\d+)\.json""".r
@@ -1918,19 +1872,15 @@ object LakeOps extends QueryPack {
       slice10.write.parquet(s"$base/file_10")
       val z10 = slice10.agg(min($"o_orderkey"), max($"o_orderkey"))
         .first()
-      val log =
-        (1 to 8).map(i => addLine(i, s"file_$i",
-          zones(i - 1L)._1, zones(i - 1L)._2)) ++ Seq(
-          s"""{"v":9,"op":"remove","path":"file_1"}""",
-          s"""{"v":9,"op":"remove","path":"file_2"}""",
-          addLine(9, "file_9",
-            math.min(zones(0L)._1, zones(1L)._1),
-            math.max(zones(0L)._2, zones(1L)._2)),
-          s"""{"v":10,"op":"dv","path":"file_9","dv":"dv_9"}""",
-          s"""{"v":11,"op":"remove","path":"file_3"}""",
-          addLine(12, "file_10", z10.getLong(0), z10.getLong(1)))
-      Files.write(Paths.get(base, "_log.json"),
-        log.mkString("\n").getBytes(StandardCharsets.UTF_8))
+      commit(logPath(base), 0,
+        (1 to 8).map(i => zonedAdd(i, s"file_$i", zones(i - 1L))) ++ Seq(
+          LakeAction(9, "remove", "file_1"),
+          LakeAction(9, "remove", "file_2"),
+          zonedAdd(9, "file_9", (math.min(zones(0L)._1, zones(1L)._1),
+            math.max(zones(0L)._2, zones(1L)._2))),
+          LakeAction(10, "dv", "file_9", dv = Some("dv_9")),
+          LakeAction(11, "remove", "file_3"),
+          zonedAdd(12, "file_10", (z10.getLong(0), z10.getLong(1)))))
       // Checkpoint cadence: one checkpoint per CKPT_EVERY commits.
       (CKPT_EVERY to 12 by CKPT_EVERY).foreach(writeCheckpoint(base, _))
     }
@@ -2063,17 +2013,15 @@ object LakeOps extends QueryPack {
         cells.getOrElse((b, c), throw new IllegalArgumentException(
           s"graft lake: empty multi-zone grid cell ($b,$c) — the " +
             "scratch builder assumes every cell is populated"))
-      val log = (for { b <- 0 to 3; c <- 0 to 1 } yield {
+      commit(logPath(base), 0, for { b <- 0 to 3; c <- 0 to 1 } yield {
         orders.filter(bk === b && ck === c)
           .write.parquet(s"$base/file_${b}_$c")
         val (kmn, kmx, cmn, cmx, n) = cell(b.toLong, c.toLong)
-        val v = b * 2 + c + 1
-        s"""{"v":$v,"op":"add","path":"file_${b}_$c","min":$kmn,"max":$kmx""" +
-          s""","zones":{"o_custkey":[$cmn,$cmx],"o_orderkey":[$kmn,$kmx]}""" +
-          s""","rows":$n}"""
-      }).toList
-      Files.write(Paths.get(base, "_log.json"),
-        log.mkString("\n").getBytes(StandardCharsets.UTF_8))
+        zonedAdd(b * 2 + c + 1, s"file_${b}_$c", (kmn, kmx)).copy(
+          colZones = Map("o_custkey" -> ((cmn, cmx)),
+            "o_orderkey" -> ((kmn, kmx))),
+          rows = Some(n))
+      })
     }
 
   /** Conjunctive zone pruning: keep a file unless some statted conjunct
@@ -2261,18 +2209,15 @@ object LakeOps extends QueryPack {
       val probes = slice.filter($"o_orderkey" >= maxk / 2)
         .orderBy($"o_orderkey".asc).limit(BloomProbesN)
         .select($"o_orderkey").collect().map(_.getLong(0))
-      val log = (0 until BloomFiles).map { i =>
+      commit(logPath(base), 0, (0 until BloomFiles).map { i =>
         slice.filter(fcol === i.toLong).write.parquet(s"$base/file_$i")
         val (mn, mx, n) = zonesB.getOrElse(i.toLong,
           throw new IllegalArgumentException(
             s"graft lake: empty bloom residue slice $i — the scratch " +
               "builder assumes every residue class is populated"))
-        val hex = hexes(i.toLong)
-        s"""{"v":${i + 1},"op":"add","path":"file_$i","min":$mn""" +
-          s""","max":$mx,"rows":$n,"bloom":"$hex"}"""
-      }
-      Files.write(Paths.get(base, "_log.json"),
-        log.mkString("\n").getBytes(StandardCharsets.UTF_8))
+        zonedAdd(i + 1, s"file_$i", (mn, mx))
+          .copy(rows = Some(n), bloom = Some(hexes(i.toLong)))
+      })
       Files.write(Paths.get(base, "_meta_probes"),
         probes.mkString(",").getBytes(StandardCharsets.UTF_8))
     }
@@ -2393,36 +2338,28 @@ object LakeOps extends QueryPack {
   private def probeTableDir(spark: SparkSession, sfDir: String): String =
     Memo.dir(spark, sfDir, "lake_probe") { base =>
       import spark.implicits._
-      val slice = Catalog.load(spark, sfDir, "orders")
-        .filter($"o_orderpriority" === "1-URGENT")
-        .select($"o_orderkey", $"o_orderstatus",
-          ($"o_totalprice".cast("decimal(14,2)") * 100).cast("long")
-            .as("cents"))
+      val slice = ordersCents(Catalog.load(spark, sfDir, "orders")
+        .filter($"o_orderpriority" === "1-URGENT"))
         .localCheckpoint(true)
       val fcol = pmod($"o_orderkey", lit(BloomFiles.toLong))
       val hexes = bloomHexes(slice, fcol, "o_orderkey")
       val baseAdds = (0 until BloomFiles).map { i =>
         slice.filter(fcol === i.toLong).write.parquet(s"$base/file_$i")
-        s"""{"v":${i + 1},"op":"add","path":"file_$i"""" +
-          s""","bloom":"${hexes(i.toLong)}"}"""
+        LakeAction(i + 1, "add", s"file_$i", bloom = Some(hexes(i.toLong)))
       }
-      def layer(name: String, df: DataFrame): String = {
+      def layer(v: Int, op: String, name: String, df: DataFrame) = {
         df.write.parquet(s"$base/$name")
-        s""""bloom":"${bloomHexes(df, lit(0L), "o_orderkey")(0L)}""""
+        LakeAction(v, op, name,
+          bloom = Some(bloomHexes(df, lit(0L), "o_orderkey")(0L)))
       }
       val k = $"o_orderkey"
-      val d1 = layer("delta1", slice.filter(pmod(k, lit(ProbeMod)) === 17L)
-        .select(k, $"o_orderstatus", expr("cents div 3").as("cents")))
-      val e1 = layer("edel1", slice.filter(pmod(k, lit(ProbeMod)) === 14L)
-        .select(k))
-      val d2 = layer("delta2", slice.filter(pmod(k, lit(ProbeMod)) === 7L)
-        .select(k, $"o_orderstatus", expr("cents div 5").as("cents")))
-      val log = baseAdds ++ Seq(
-        s"""{"v":9,"op":"delta","path":"delta1",$d1}""",
-        s"""{"v":10,"op":"edelete","path":"edel1",$e1}""",
-        s"""{"v":11,"op":"delta","path":"delta2",$d2}""")
-      Files.write(Paths.get(base, "_log.json"),
-        log.mkString("\n").getBytes(StandardCharsets.UTF_8))
+      commit(logPath(base), 0, baseAdds ++ Seq(
+        layer(9, "delta", "delta1", slice.filter(pmod(k, lit(ProbeMod)) === 17L)
+          .select(k, $"o_orderstatus", expr("cents div 3").as("cents"))),
+        layer(10, "edelete", "edel1", slice.filter(pmod(k, lit(ProbeMod)) === 14L)
+          .select(k)),
+        layer(11, "delta", "delta2", slice.filter(pmod(k, lit(ProbeMod)) === 7L)
+          .select(k, $"o_orderstatus", expr("cents div 5").as("cents")))))
       val maxk = slice.agg(max(k)).first().getLong(0)
       val probes = probeClasses.map { c =>
         val r = slice.filter(k >= maxk / 2 && pmod(k, lit(ProbeMod)) === c)
@@ -2603,36 +2540,26 @@ object LakeOps extends QueryPack {
       val orders = Catalog.load(spark, sfDir, "orders")
         .select($"o_orderkey", $"o_orderstatus", $"o_totalprice")
       val k = pmod($"o_orderkey", lit(10))
-      val log = scala.collection.mutable.ArrayBuffer.empty[String]
-      var v = 0
-      var refused = 0
       // The WRITER: validate-then-commit; refusal audits and skips.
-      def commit(name: String, batch: DataFrame): Unit = {
-        v += 1
+      def validated(v: Int, name: String, batch: DataFrame): Unit = {
         val pred = new String(Files.readAllBytes(
           Paths.get(base, "_constraint")), StandardCharsets.UTF_8)
         val bad = batch.filter(expr(s"NOT ($pred)")).count()
-        if (bad > 0L) {
-          refused += 1
-          log += s"""{"v":$v,"op":"conflict","path":"$name"}"""
-        } else {
-          batch.write.parquet(s"$base/$name")
-          log += s"""{"v":$v,"op":"add","path":"$name"}"""
-        }
+        if (bad == 0L) batch.write.parquet(s"$base/$name")
+        commit(logPath(base), v - 1,
+          Seq(LakeAction(v, if (bad > 0L) "conflict" else "add", name)))
       }
-      commit("fileBase", orders.filter(k < 5))
-      commit("fileB1", orders.filter(k === 5 || k === 6))
-      commit("fileB2", orders.filter(k === 7 || k === 8)) // refused
-      commit("fileB3", orders.filter(k === 7))
-      Files.write(Paths.get(base, "_log.json"),
-        log.mkString("\n").getBytes(StandardCharsets.UTF_8))
+      validated(1, "fileBase", orders.filter(k < 5))
+      validated(2, "fileB1", orders.filter(k === 5 || k === 6))
+      validated(3, "fileB2", orders.filter(k === 7 || k === 8)) // refused
+      validated(4, "fileB3", orders.filter(k === 7))
     }
 
   private def lakeConstraints(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val base = constrDir(spark, sfDir)
     val st = fullState(base, Int.MaxValue)
-    val acts = readActions(Paths.get(base, "_log.json"))
+    val acts = tableLog(base)
     val nOk = acts.count(_.op == "add")
     val nRefused = acts.count(_.op == "conflict")
     // Violation accounting for the graded row: the refused batch's
@@ -2677,22 +2604,20 @@ object LakeOps extends QueryPack {
   private[graft] def branchCreate(base: String, branch: String): Unit = {
     require(!Files.exists(branchLog(base, branch)),
       s"graft lake: branch '$branch' already exists")
-    Files.copy(Paths.get(base, "_log.json"), branchLog(base, branch))
-    ()
+    commit(branchLog(base, branch), 0, tableLog(base))
   }
 
   /** Stage an already-written data file as a commit ON THE BRANCH: main's
     * log is untouched — that isolation is the whole point of WAP (readers
-    * of main never see unaudited data). */
+    * of main never see unaudited data). The version is table-wide (the
+    * Iceberg sequence number): one past the newer of the two heads, so a
+    * commit staged after a refused publish (whose `conflict` line took
+    * main's next version) still lands past main's head. */
   private[graft] def stageOnBranch(base: String, branch: String,
                                    path: String): Int = {
-    val acts = readActions(branchLog(base, branch))
-    val v = acts.map(_.v).max + 1
-    val line = s"""{"v":$v,"op":"add","path":"$path"}"""
-    val old = new String(Files.readAllBytes(branchLog(base, branch)),
-      StandardCharsets.UTF_8)
-    Files.write(branchLog(base, branch),
-      (old + "\n" + line).getBytes(StandardCharsets.UTF_8))
+    val branchHead = headOf(readActions(branchLog(base, branch)))
+    val v = 1 + math.max(headOf(tableLog(base)), branchHead)
+    commit(branchLog(base, branch), branchHead, Seq(LakeAction(v, "add", path)))
     v
   }
 
@@ -2707,9 +2632,9 @@ object LakeOps extends QueryPack {
     * both refs). Returns (published staged commits, refused). */
   private[graft] def publishBranch(spark: SparkSession, base: String,
                                    branch: String): (Int, Int) = {
-    val mainActs = readActions(Paths.get(base, "_log.json"))
-    val mainHead = mainActs.map(_.v).max
-    val staged = readActions(branchLog(base, branch)).filter(_.v > mainHead)
+    val mainHead = headOf(tableLog(base))
+    val branchActs = readActions(branchLog(base, branch))
+    val staged = branchActs.filter(_.v > mainHead)
     require(staged.nonEmpty,
       s"graft lake: branch '$branch' has nothing staged past main v$mainHead")
     val pred = new String(Files.readAllBytes(
@@ -2718,31 +2643,17 @@ object LakeOps extends QueryPack {
       spark.read.parquet(s"$base/${a.path}")
         .filter(expr(s"NOT ($pred)")).count()).sum
     if (bad > 0L) {
-      val kept = readActions(branchLog(base, branch))
-        .filter(_.v <= mainHead)
-      Files.write(branchLog(base, branch), kept.map(actionLine)
-        .mkString("\n").getBytes(StandardCharsets.UTF_8))
-      val cl = s"""{"v":${mainHead + 1},"op":"conflict","path":"${
-        staged.head.path}"}"""
-      val old = new String(Files.readAllBytes(Paths.get(base, "_log.json")),
-        StandardCharsets.UTF_8)
-      Files.write(Paths.get(base, "_log.json"),
-        (old + "\n" + cl).getBytes(StandardCharsets.UTF_8))
+      // Roll the branch back: drop its log and re-commit the kept prefix.
+      Files.delete(branchLog(base, branch))
+      commit(branchLog(base, branch), 0, branchActs.filter(_.v <= mainHead))
+      commit(logPath(base), mainHead,
+        Seq(LakeAction(mainHead + 1, "conflict", staged.head.path)))
       (0, 1)
     } else {
-      val old = new String(Files.readAllBytes(Paths.get(base, "_log.json")),
-        StandardCharsets.UTF_8)
-      Files.write(Paths.get(base, "_log.json"),
-        (old + "\n" + staged.map(actionLine).mkString("\n"))
-          .getBytes(StandardCharsets.UTF_8))
+      commit(logPath(base), mainHead, staged)
       (staged.map(_.v).distinct.size, 0)
     }
   }
-
-  /** Re-serialize a parsed action to its canonical log line (only the
-    * field shapes the WAP logs use: plain add/remove/conflict). */
-  private def actionLine(a: LakeAction): String =
-    s"""{"v":${a.v},"op":"${a.op}","path":"${a.path}"}"""
 
   // ---- COLUMN MAPPING: rename-without-rewrite (round 19) ----
 
@@ -2774,7 +2685,7 @@ object LakeOps extends QueryPack {
     * read path. */
   private[graft] def colmapRead(spark: SparkSession, base: String,
                                 v: Int): DataFrame = {
-    val acts = readActions(Paths.get(base, "_log.json"))
+    val acts = tableLog(base)
     val st = replayActions(emptyState, acts.filter(_.v <= v))
     val renames = readRenames(base).filter(_.v <= v).sortBy(_.v)
     st.live.map { f =>
@@ -2790,10 +2701,7 @@ object LakeOps extends QueryPack {
   private def colmapDir(spark: SparkSession, sfDir: String): String =
     Memo.dir(spark, sfDir, "lake_cmap") { base =>
       import spark.implicits._
-      val orders = Catalog.load(spark, sfDir, "orders")
-        .select($"o_orderkey", $"o_orderstatus",
-          ($"o_totalprice".cast("decimal(14,2)") * 100).cast("long")
-            .as("cents"))
+      val orders = ordersCents(Catalog.load(spark, sfDir, "orders"))
       val k = pmod($"o_orderkey", lit(10))
       // v1: written under the ORIGINAL logical name.
       orders.filter(k < 4).write.parquet(s"$base/fileA")
@@ -2802,10 +2710,8 @@ object LakeOps extends QueryPack {
       orders.filter(k >= 4 && k < 8)
         .select($"o_orderkey", $"o_orderstatus".as("status"), $"cents")
         .write.parquet(s"$base/fileC")
-      Files.write(Paths.get(base, "_log.json"), Seq(
-        """{"v":1,"op":"add","path":"fileA"}""",
-        """{"v":3,"op":"add","path":"fileC"}""")
-        .mkString("\n").getBytes(StandardCharsets.UTF_8))
+      commit(logPath(base), 0,
+        Seq(LakeAction(1, "add", "fileA"), LakeAction(3, "add", "fileC")))
       // v2 and v4: two chained metadata-only renames — fileA composes
       // both, fileC only the second.
       Files.write(Paths.get(base, "_renames.json"), Seq(
@@ -2868,10 +2774,8 @@ object LakeOps extends QueryPack {
       orders.filter(k >= 3 && k < 6).write.parquet(s"$base/fileB")
       orders.filter(k === 6 || k === 7).write.parquet(s"$base/fileG")
       orders.filter(k === 8 || k === 9).write.parquet(s"$base/fileH")
-      Files.write(Paths.get(base, "_log.json"), Seq(
-        """{"v":1,"op":"add","path":"fileA"}""",
-        """{"v":2,"op":"add","path":"fileB"}""")
-        .mkString("\n").getBytes(StandardCharsets.UTF_8))
+      commit(logPath(base), 0,
+        Seq(LakeAction(1, "add", "fileA"), LakeAction(2, "add", "fileB")))
       branchCreate(base, "audit")
       stageOnBranch(base, "audit", "fileG")
       val r1 = publishBranch(spark, base, "audit")
@@ -2905,7 +2809,7 @@ object LakeOps extends QueryPack {
   private def lakeWap(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val base = wapDir(spark, sfDir)
-    val mainActs = readActions(Paths.get(base, "_log.json"))
+    val mainActs = tableLog(base)
     val brActs = readActions(branchLog(base, "audit"))
     def liveOf(acts: Seq[LakeAction], v: Int): Seq[String] =
       replayActions(emptyState, acts.filter(_.v <= v)).live
@@ -2925,8 +2829,8 @@ object LakeOps extends QueryPack {
       lit(0L).as("version"), lit(stray).as("n_files"),
       lit(published).as("n_rows"), lit(refused).as("key_sum"))
     Seq(refRow("main", 2, mainActs),
-      refRow("main", mainActs.map(_.v).max, mainActs),
-      refRow("audit", brActs.map(_.v).max, brActs), audit)
+      refRow("main", headOf(mainActs), mainActs),
+      refRow("audit", headOf(brActs), brActs), audit)
       .reduce(_.unionByName(_))
       .orderBy($"ref".asc_nulls_first, $"version".asc_nulls_first)
   }
@@ -2982,11 +2886,8 @@ object LakeOps extends QueryPack {
       spark.read.parquet(s"$base/file_dup")
         .filter($"o_orderkey" % 3 === 0 && $"_pos" % 2 === 0)
         .select($"_pos").write.parquet(s"$base/dv_pos")
-      val log = Seq(
-        """{"v":1,"op":"add","path":"file_dup"}""",
-        """{"v":2,"op":"dv","path":"file_dup","dv":"dv_pos"}""")
-      Files.write(Paths.get(base, "_log.json"),
-        log.mkString("\n").getBytes(StandardCharsets.UTF_8))
+      commit(logPath(base), 0, Seq(LakeAction(1, "add", "file_dup"),
+        LakeAction(2, "dv", "file_dup", dv = Some("dv_pos"))))
     }
 
   private def lakeDvPositional(spark: SparkSession,
@@ -3063,7 +2964,7 @@ object LakeOps extends QueryPack {
       import spark.implicits._
       val base = lakeDir(spark, sfDir)
       val stage = Paths.get(d)
-      val head = readActions(Paths.get(base, "_log.json")).map(_.v).max
+      val head = headOf(tableLog(base))
       (1 to head).foreach { v =>
         val prev = if (v == 1) emptyState else fullState(base, v - 1)
         val cur = fullState(base, v)
@@ -3126,10 +3027,7 @@ object LakeOps extends QueryPack {
           ok
         } finally ls.close()
         require(landed, s"cdf commit $v produced no parquet part file")
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(tmp.toFile)
+        Memo.rmTree(tmp)
       }
     }
 
@@ -3181,14 +3079,10 @@ object LakeOps extends QueryPack {
       def rz(b: Long): (Long, Long) = zoneOf(rz0, b, "key-range")
       (0 to 3).foreach(i =>
         live.filter(range === i).write.parquet(s"$base/clustered_$i"))
-      val log =
-        (0 to 3).map(i => addLine(i + 1, s"ingest_$i",
-          hz(i.toLong)._1, hz(i.toLong)._2)) ++
-        (0 to 3).map(i => s"""{"v":5,"op":"remove","path":"ingest_$i"}""") ++
-        (0 to 3).map(i => addLine(5, s"clustered_$i",
-          rz(i.toLong)._1, rz(i.toLong)._2))
-      Files.write(Paths.get(base, "_log.json"),
-        log.mkString("\n").getBytes(StandardCharsets.UTF_8))
+      commit(logPath(base), 0,
+        (0 to 3).map(i => zonedAdd(i + 1, s"ingest_$i", hz(i.toLong))) ++
+          (0 to 3).map(i => LakeAction(5, "remove", s"ingest_$i")) ++
+          (0 to 3).map(i => zonedAdd(5, s"clustered_$i", rz(i.toLong))))
     }
 
   /** Zone-pruned selective read of the cluster table at version `v`:
@@ -3333,17 +3227,14 @@ object LakeOps extends QueryPack {
         .collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2),
           r.getLong(3))).toMap
-      val log = (0 to 3).map { r =>
+      commit(logPath(base), 0, (0 to 3).map { r =>
         orders.filter($"o_orderkey" % 4 === r)
           .write.parquet(s"$base/file_$r")
         val (n, mn, mx) = stats.getOrElse(r.toLong,
           throw new IllegalArgumentException(
             s"graft lake: empty stats residue slice $r"))
-        s"""{"v":${r + 1},"op":"add","path":"file_$r","min":$mn,""" +
-          s""""max":$mx,"rows":$n}"""
-      } :+ s"""{"v":5,"op":"remove","path":"file_3"}"""
-      Files.write(Paths.get(base, "_log.json"),
-        log.mkString("\n").getBytes(StandardCharsets.UTF_8))
+        zonedAdd(r + 1, s"file_$r", (mn, mx)).copy(rows = Some(n))
+      } :+ LakeAction(5, "remove", "file_3"))
     }
 
   /** STATS-ONLY aggregation kernel: answer (n_files, count, min, max)

@@ -116,13 +116,12 @@ object PqOps extends QueryPack {
         .select($"vec_id", $"code")
       val cent0 = Rounds.cut(sq.join(seeds, Seq("vec_id"))
         .select($"sub", $"code", $"se".as("c")))
-      // (codes, codebooks) per round; the first slot starts unused.
-      val (assigned, _) = (1 to Iters).foldLeft((cent0, cent0)) {
-        case ((_, cent), _) =>
-          val a = Rounds.cut(assignPass(sq, cent))
-          (a, Rounds.cut(centroidsOf(a)))
+      // Rounds 1..Iters-1 assign and re-center; the last assignment is
+      // the leaf itself, so no unread centroids are computed or cut.
+      val cent = (1 until Iters).foldLeft(cent0) { (c, _) =>
+        Rounds.cut(centroidsOf(Rounds.cut(assignPass(sq, c))))
       }
-      assigned.select($"vec_id", $"sub", $"code")
+      assignPass(sq, cent).select($"vec_id", $"sub", $"code")
     }
   }
 

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, StandardOpenOption}
+import java.nio.file.{Files, Path}
 import java.nio.file.attribute.FileTime
 
 import scala.jdk.CollectionConverters._
@@ -196,7 +196,7 @@ object Streams extends QueryPack {
 
   private def withRun[T](tag: String)(body: Run => T): T = {
     val run = new Run(tag)
-    try body(run) finally run.dirs.foreach(rmTree)
+    try body(run) finally run.dirs.foreach(Memo.rmTree)
   }
 
   /** The isolated session a stateful run executes on. The state-store
@@ -257,15 +257,6 @@ object Streams extends QueryPack {
     } else Files.createSymbolicLink(dir.resolve(s"$table.parquet"), fixture)
   }
 
-  /** Deletes a scratch dir tree (walk doesn't follow symlinks, so the
-    * fixture parquet a source dir links to is never touched).
-    */
-  private def rmTree(p: Path): Unit = if (Files.exists(p)) {
-    val walk = Files.walk(p)
-    try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists)
-    finally walk.close()
-  }
-
   /** The events fixture streamed on an isolated session as (event_id,
     * user_id, event_type, value, ts) through `pipe` into a memory sink,
     * graded as `finish` over the sink's rows.
@@ -301,28 +292,27 @@ object Streams extends QueryPack {
         Window.partitionBy(keys.map(col): _*).orderBy(col("batch_id").desc)))
       .filter(col("rk") === 1)
 
-  /** Idempotent lake commit of one micro-batch in the
-    * [[graft.operators.LakeOps]] log shape: write the batch to `lake/rel`,
-    * then append ONE `op` action for it (with the batch's split-block
-    * bloom over `bloomKey`, if given). Readers replaying the log never see
-    * a half-landed batch, and under foreachBatch's at-least-once retry
-    * contract a batch whose path is already logged is skipped, while a
-    * half-written data dir is overwritten — a replay can neither
-    * duplicate rows nor double-log.
+  /** Idempotent lake commit of one micro-batch through
+    * [[graft.operators.LakeOps.commit]]: write the batch to `lake/rel`,
+    * then commit ONE `op` action for it at version `v` on top of `v - 1`
+    * (with the batch's split-block bloom over `bloomKey`, if given), so a
+    * gap in the versions raises instead of logging out of order. Readers
+    * replaying the log never see a half-landed batch, and under
+    * foreachBatch's at-least-once retry contract a batch whose path is
+    * already logged is skipped, while a half-written data dir is
+    * overwritten — a replay can neither duplicate rows nor double-log.
     */
   private[graft] def commitLake(lake: Path, rel: String, op: String, v: Long,
       batch: DataFrame, bloomKey: Option[String] = None): Unit = {
-    val log = lake.resolve("_log.json")
+    val log = LakeOps.logPath(lake.toString)
     if (!(Files.exists(log) && LakeOps.readActions(log).exists(_.path == rel))) {
       val b = if (bloomKey.isDefined) batch.localCheckpoint(true) else batch
       b.write.mode("overwrite").parquet(lake.resolve(rel).toString)
-      val bloom = bloomKey.fold("") { k =>
-        val hex = LakeOps.bloomHexes(b, lit(0L), k)
-          .getOrElse(0L, LakeOps.emptyBloomHex)
-        s""","bloom":"$hex""""
-      }
-      Files.write(log, (s"""{"v":$v,"op":"$op","path":"$rel"$bloom}""" + "\n")
-        .getBytes(UTF_8), StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+      val bloom = bloomKey.map(k => LakeOps.bloomHexes(b, lit(0L), k)
+        .getOrElse(0L, LakeOps.emptyBloomHex))
+      val ver = Math.toIntExact(v)
+      LakeOps.commit(log, ver - 1,
+        Seq(LakeOps.LakeAction(ver, op, rel, bloom = bloom)))
     }
   }
 
@@ -949,7 +939,7 @@ object Streams extends QueryPack {
         .writeStream.outputMode("append")
         .foreachBatch((batch: Dataset[Row], id: Long) =>
           commitLake(lake, s"batch_$id", "add", id + 1, batch)))
-      val live = LakeOps.readActions(lake.resolve("_log.json"))
+      val live = LakeOps.tableLog(lake.toString)
         .map(a => lake.resolve(a.path).toString)
       spark.read.parquet(live: _*)
         .groupBy($"event_type")
@@ -990,15 +980,11 @@ object Streams extends QueryPack {
     withRun("lmor") { run =>
       import spark.implicits._
       val lake = run.dir("lake")
-      val rows = Catalog.load(spark, sfDir, "orders")
-        .select($"o_orderkey", $"o_orderstatus",
-          ($"o_totalprice".cast("decimal(14,2)") * 100).cast("long")
-            .as("cents"))
+      val rows = LakeOps.ordersCents(Catalog.load(spark, sfDir, "orders"))
       rows.filter(pmod($"o_orderkey", lit(10)) < 5)
         .write.parquet(lake.resolve("base").toString)
-      val logPath = lake.resolve("_log.json")
-      Files.write(logPath,
-        ("""{"v":1,"op":"add","path":"base"}""" + "\n").getBytes(UTF_8))
+      val logPath = LakeOps.logPath(lake.toString)
+      LakeOps.commit(logPath, 0, Seq(LakeOps.LakeAction(1, "add", "base")))
       // CDC-style full-row upsert feed: keys ≡ 13 mod 100 hit the base
       // (updates), keys ≡ 57 mod 100 do not (inserts); each key appears
       // exactly once, so the merged table is batch-split-invariant.
@@ -1081,17 +1067,13 @@ object Streams extends QueryPack {
     withRun("lbloom") { run =>
       import spark.implicits._
       val lake = run.dir("lake")
-      val rows = Catalog.load(spark, sfDir, "orders")
-        .select($"o_orderkey", $"o_orderstatus",
-          ($"o_totalprice".cast("decimal(14,2)") * 100).cast("long")
-            .as("cents"))
+      val rows = LakeOps.ordersCents(Catalog.load(spark, sfDir, "orders"))
       val baseDf = rows.filter(pmod($"o_orderkey", lit(10)) < 5)
       baseDf.write.parquet(lake.resolve("base").toString)
       val baseHex = LakeOps.bloomHexes(baseDf, lit(0L), "o_orderkey")(0L)
-      val logPath = lake.resolve("_log.json")
-      Files.write(logPath,
-        (s"""{"v":1,"op":"add","path":"base","bloom":"$baseHex"}""" + "\n")
-          .getBytes(UTF_8))
+      val logPath = LakeOps.logPath(lake.toString)
+      LakeOps.commit(logPath, 0,
+        Seq(LakeOps.LakeAction(1, "add", "base", bloom = Some(baseHex))))
       val feed = rows.filter(pmod($"o_orderkey", lit(100)).isin(13L, 57L))
         .select($"o_orderkey", $"o_orderstatus",
           expr("cents div 3").as("cents"))

@@ -128,15 +128,37 @@ object PropertySpec extends Properties("graft") {
   // field exactly, and any single-character corruption of the structural
   // skeleton raises rather than silently dropping the action.
   private val pathGen = Gen.nonEmptyListOf(Gen.alphaNumChar).map(_.mkString)
+  // Every op, each optional field its grammar allows present or absent at
+  // random: the serializer is the exact inverse of the parser.
+  private val lakeOps = Seq("add", "remove", "dv", "vacuum", "conflict",
+    "delta", "edelete", "schema", "tag", "expire")
+  private val zoneGen = Gen.zip(Gen.chooseNum(-100000L, 100000L),
+    Gen.chooseNum(0L, 100000L)).map { case (mn, span) => (mn, mn + span) }
+  private def actionGen(op: String): Gen[graft.operators.LakeOps.LakeAction] = {
+    def on[T](ops: String*)(g: Gen[T], none: T): Gen[T] =
+      if (ops.contains(op)) g else Gen.const(none)
+    for {
+      v <- Gen.chooseNum(1, 9999)
+      p <- pathGen
+      ts <- Gen.option(Gen.chooseNum(0L, 4000000000L))
+      dv <- on("dv")(pathGen.map(Option(_)), None)
+      key <- on("add")(Gen.option(zoneGen), None)
+      zones <- on("add")(Gen.mapOf(Gen.zip(pathGen, zoneGen)),
+        Map.empty[String, (Long, Long)])
+      rows <- on("add")(Gen.option(Gen.chooseNum(0L, 10000000L)), None)
+      bloom <- on("add", "delta", "edelete")(Gen.option(
+        Gen.chooseNum(Long.MinValue, Long.MaxValue).map(w => f"$w%016x" * 512)),
+        None)
+    } yield graft.operators.LakeOps.LakeAction(v, op, p, dv, key.map(_._1),
+      key.map(_._2), zones, rows, bloom, ts)
+  }
+
   property("lake action grammar round-trips") =
-    forAll(Gen.chooseNum(1, 9999), pathGen,
-      Gen.chooseNum(-100000L, 100000L), Gen.chooseNum(0L, 100000L)) {
-      (v, p, mn, span) =>
-        val line = s"""{"v":$v,"op":"add","path":"$p","min":$mn,"max":${mn + span}}"""
-        val a = graft.operators.LakeOps.parseAction(line)
-        a.v == v && a.path == p && a.op == "add" &&
-          a.minKey.contains(mn) && a.maxKey.contains(mn + span) &&
-          a.dv.isEmpty
+    forAll(Gen.sequence[List[graft.operators.LakeOps.LakeAction],
+        graft.operators.LakeOps.LakeAction](lakeOps.map(actionGen))) { acts =>
+      acts.map(_.op) == lakeOps && acts.forall(a =>
+        graft.operators.LakeOps.parseAction(
+          graft.operators.LakeOps.actionLine(a)) == a)
     }
 
   // Round 16: add actions may carry a row count (the stats-only field);

@@ -71,6 +71,15 @@ class Round14BSpec extends SparkTestBase {
       .findAllMatchIn(log).map(_.group(1)).toSeq
     assert(adds.sorted == Seq("fileA", "fileB", "fileBase"),
       s"each file must land exactly once, got $adds")
+    // A writer that read v1 commits against a head now at v3: refused,
+    // naming both versions, and the log is left byte-identical.
+    val stale = intercept[IllegalStateException] {
+      operators.LakeOps.commit(operators.LakeOps.logPath(base), 1,
+        Seq(operators.LakeOps.LakeAction(2, "add", "fileZ")))
+    }
+    assert(stale.getMessage.contains("v1") && stale.getMessage.contains("v3"))
+    assert(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(base, "_log.json")), "UTF-8") == log)
   }
 
   test("join hints are honored: each strategy plans its own operator") {

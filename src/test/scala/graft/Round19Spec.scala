@@ -379,6 +379,13 @@ class Round19Spec extends SparkTestBase {
       operators.LakeOps.publishBranch(spark, base, "wip")
     }
     assert(e.getMessage.contains("nothing staged"))
+    // A commit staged AFTER the refusal takes the table-wide next version,
+    // past main's conflict line, so it publishes.
+    orders.filter(pmod($"o_orderkey", lit(10)) === 7)
+      .write.parquet(s"$base/fileZ")
+    operators.LakeOps.stageOnBranch(base, "wip", "fileZ")
+    assert(operators.LakeOps.publishBranch(spark, base, "wip") == ((1, 0)))
+    assert(mainLog.contains(""""op":"add","path":"fileZ""""))
   }
 
   // ---- q_lake_column_map (round 19) ----
