@@ -17,14 +17,13 @@ object Bench {
         System.err.println(s"[bench] warm-up '$tag' failed, its cold path will be timed: ${e.getMessage}")
       }
     warm("startup") {
-      spark.read.parquet(s"$sfDir/region.parquet").count()
       // Catalog.load re-splits single-row-group fixture files on first load
       // per table, so touch every table here.
       Catalog.tableNames.foreach(t => Catalog.load(spark, sfDir, t).count())
       SparkEntry.entry(spark).count()
       // SQL-text entry path (parser/analyzer init is distinct from the
       // DataFrame path the flagship warms).
-      spark.sql(s"SELECT r_name, count(*) FROM parquet.`$sfDir/region.parquet` GROUP BY r_name").count()
+      Catalog.sql(spark, sfDir, "SELECT r_name, count(*) FROM region GROUP BY r_name").count()
     }
     SparkEntry.all.filter(_.warm).foreach(q => warm(q.id)(q.fn(spark, sfDir).count(): Unit))
     // Memo entries no warm query resolves whole: the shingle leaf, the

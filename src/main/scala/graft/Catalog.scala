@@ -1,14 +1,19 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.functions.expr
 
 import scala.util.control.NonFatal
 
 /** Tiny table catalog: fixture tables are self-describing parquet files under
   * a scale-factor directory (see FIXTURES.md). At 100 TB these would be
-  * partitioned directories / catalog tables — `load` is the single indirection
-  * point where that swap happens, so no query hard-codes a layout.
+  * partitioned directories / catalog tables — this object is the single
+  * indirection point where that swap happens, so no query hard-codes a
+  * layout: DataFrame builders read a table with `load`, SQL text names it
+  * bare and runs through `sql` (which binds the name through `load`), and
+  * `file` is the one spelling of a fixture's on-disk path.
   */
 object Catalog {
   val tableNames: Seq[String] = Seq(
@@ -19,6 +24,33 @@ object Catalog {
     require(tableNames.contains(name), s"unknown table $name")
     normalize(spark.read.parquet(layoutPath(spark, sfDir, name)))
   }
+
+  /** Run SQL `text` in which the single-part table names of [[tableNames]]
+    * (spelled as listed there) denote the fixture tables of `sfDir`. Each
+    * such name binds to its own `load`, so SQL reads see the normalized
+    * types and re-split layout that DataFrame builders see, in the main
+    * query, every CTE body and every subquery. The binding is plan-local:
+    * no temp view is registered and no catalog is touched, so sessions and
+    * scale factors sharing one SparkSession never see each other's tables.
+    * A CTE must not reuse a fixture table's name: references to it would
+    * bind to the table.
+    */
+  def sql(spark: SparkSession, sfDir: String, text: String): DataFrame = {
+    def bind(plan: LogicalPlan): LogicalPlan = plan.transformUpWithSubqueries {
+      case UnresolvedRelation(Seq(name), _, _) if tableNames.contains(name) =>
+        SubqueryAlias(name, load(spark, sfDir, name).queryExecution.analyzed)
+      // CTE bodies are inner children, which a plan transform skips.
+      case w: UnresolvedWith =>
+        w.copy(cteRelations = w.cteRelations.map { case (n, body, depth) =>
+          (n, body.copy(child = bind(body.child)), depth)
+        })
+    }
+    GraftShim.ofRows(spark, bind(spark.sessionState.sqlParser.parsePlan(text)))
+  }
+
+  /** The on-disk path of fixture table `name` under `sfDir`. */
+  private[graft] def file(sfDir: String, name: String): String =
+    s"$sfDir/$name.parquet"
 
   /** Normalize time columns to session-tz TIMESTAMP. Fixture generations
     * have shipped them three ways: parquet TIMESTAMP(NANOS) (read as raw
@@ -79,7 +111,7 @@ object Catalog {
   private val RESPLIT_GROUP_BYTES = 4L << 20
   private val TARGET_FILE_BYTES = 1L << 20
   private def layoutPath(spark: SparkSession, sfDir: String, name: String): String = {
-    val original = s"$sfDir/$name.parquet"
+    val original = file(sfDir, name)
     Memo(spark, sfDir, s"layout_$name") {
       try {
         val groups = footerGroups(spark, original)

@@ -35,7 +35,7 @@ object ScaleStress {
           keyCols.foldLeft(base)((df, c) =>
             df.withColumn(c, col(c) + lit(i * off)))
         }.reduce(_ unionAll _)
-          .write.mode(SaveMode.Overwrite).parquet(s"$Out/$table.parquet")
+          .write.mode(SaveMode.Overwrite).parquet(Catalog.file(Out, table))
       }
       rep("orders", Seq("o_orderkey"))
       rep("lineitem", Seq("l_orderkey"))
@@ -43,7 +43,7 @@ object ScaleStress {
       Seq("region", "nation", "customer", "supplier", "part",
         "documents", "embeddings").foreach { t =>
         Catalog.load(spark, src, t)
-          .write.mode(SaveMode.Overwrite).parquet(s"$Out/$t.parquet")
+          .write.mode(SaveMode.Overwrite).parquet(Catalog.file(Out, t))
       }
       marker.createNewFile()
       println(s"SCALE generated $Out")

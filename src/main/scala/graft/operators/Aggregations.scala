@@ -163,16 +163,14 @@ object Aggregations extends QueryPack {
     ORDER BY gid ASC, l_returnflag ASC NULLS FIRST,
       l_linestatus ASC NULLS FIRST"""
 
-  private def aggGroupingSets(spark: SparkSession, sfDir: String): DataFrame = {
-    // SQL entry point without catalog mutation: `parquet.`-path relations
-    // instead of temp views, so concurrent sessions never clobber each other.
-    spark.sql(s"""
+  private def aggGroupingSets(spark: SparkSession, sfDir: String): DataFrame =
+    Catalog.sql(spark, sfDir, aggGroupingSetsSql)
+
+  private val aggGroupingSetsSql = """
       SELECT c_mktsegment, n_name, count(*) AS n_cust
-      FROM parquet.`$sfDir/customer.parquet` c
-      JOIN parquet.`$sfDir/nation.parquet` n ON c_nationkey = n_nationkey
+      FROM customer JOIN nation ON c_nationkey = n_nationkey
       GROUP BY GROUPING SETS ((c_mktsegment), (n_name), ())
-      ORDER BY c_mktsegment ASC NULLS FIRST, n_name ASC NULLS FIRST""")
-  }
+      ORDER BY c_mktsegment ASC NULLS FIRST, n_name ASC NULLS FIRST"""
 
   private val eventTypes = Seq("view", "click", "purchase", "signup", "error")
 
@@ -401,23 +399,26 @@ object Aggregations extends QueryPack {
   }
 
   /** SQL entry path: TPC-H Q3 flavor (filter + 3-way join + agg + top-k)
-    * submitted as one SQL string over parquet-path relations — proves the
-    * textual surface end-to-end, not just the DataFrame DSL.
+    * submitted as one SQL string over the bare fixture tables (the same
+    * text the oracle runs) — proves the textual surface end-to-end, not
+    * just the DataFrame DSL.
     */
   private def sqlTpchQ3Flavor(spark: SparkSession, sfDir: String): DataFrame =
-    spark.sql(s"""
+    Catalog.sql(spark, sfDir, sqlTpchQ3FlavorSql)
+
+  private val sqlTpchQ3FlavorSql = s"""
       SELECT l_orderkey,
-        CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue,
+        ${Oracle.dsum("l_extendedprice * (1.0 - l_discount)")} AS revenue,
         o_orderdate, o_orderpriority
-      FROM parquet.`$sfDir/customer.parquet`
-      JOIN parquet.`$sfDir/orders.parquet` ON c_custkey = o_custkey
-      JOIN parquet.`$sfDir/lineitem.parquet` ON l_orderkey = o_orderkey
+      FROM customer
+      JOIN orders ON c_custkey = o_custkey
+      JOIN lineitem ON l_orderkey = o_orderkey
       WHERE c_mktsegment = 'BUILDING'
         AND o_orderdate < TIMESTAMP '1995-03-15'
         AND l_shipdate > TIMESTAMP '1995-03-15'
       GROUP BY l_orderkey, o_orderdate, o_orderpriority
       ORDER BY revenue DESC, o_orderdate ASC NULLS FIRST, l_orderkey ASC NULLS FIRST
-      LIMIT 10""")
+      LIMIT 10"""
 
   /** TPC-H Q17 flavor (added round 10): small-quantity-order revenue — a
     * CORRELATED scalar subquery (per-part average quantity) driving a
@@ -432,19 +433,21 @@ object Aggregations extends QueryPack {
     * the boundary cannot flip on a float last-ulp between engines.
     */
   private def sqlTpchQ17Flavor(spark: SparkSession, sfDir: String): DataFrame =
-    spark.sql(s"""
+    Catalog.sql(spark, sfDir, sqlTpchQ17FlavorSql)
+
+  private val sqlTpchQ17FlavorSql = s"""
       WITH avgq AS (
         SELECT l_partkey, count(*) AS cnt,
           sum(CAST(l_quantity AS BIGINT)) AS sum_qty
-        FROM parquet.`$sfDir/lineitem.parquet` GROUP BY l_partkey)
+        FROM lineitem GROUP BY l_partkey)
       SELECT p_brand, count(*) AS n_small,
-        CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-      FROM parquet.`$sfDir/lineitem.parquet` l
-      JOIN parquet.`$sfDir/part.parquet` p ON p.p_partkey = l.l_partkey
+        ${Oracle.dsum("l.l_extendedprice")} AS revenue
+      FROM lineitem l
+      JOIN part p ON p.p_partkey = l.l_partkey
       JOIN avgq a ON a.l_partkey = l.l_partkey
       WHERE 5 * CAST(l.l_quantity AS BIGINT) * a.cnt < a.sum_qty
       GROUP BY p_brand
-      ORDER BY p_brand ASC NULLS FIRST""")
+      ORDER BY p_brand ASC NULLS FIRST"""
 
   /** TPC-H Q10 flavor (added round 10): returned-item reporting — which
     * customers returned the most revenue in a quarter. The scale-shaped
@@ -529,26 +532,9 @@ object Aggregations extends QueryPack {
     * reusing the level-1 partitioning, one broadcast-sized supplier join.
     */
   private def sqlDominantSupplier(spark: SparkSession, sfDir: String): DataFrame =
-    spark.sql(s"""
-      WITH pps AS (
-        SELECT l_partkey, l_suppkey,
-          sum(CAST(l_quantity AS BIGINT)) AS qty
-        FROM parquet.`$sfDir/lineitem.parquet`
-        WHERE year(l_shipdate) = 1996
-        GROUP BY l_partkey, l_suppkey),
-      pp AS (
-        SELECT l_partkey, sum(qty) AS total_qty FROM pps GROUP BY l_partkey),
-      dom AS (
-        SELECT pps.l_suppkey, count(*) AS n_dominant_parts,
-          sum(pps.qty) AS dom_qty
-        FROM pps JOIN pp ON pps.l_partkey = pp.l_partkey
-        WHERE 2 * pps.qty > pp.total_qty
-        GROUP BY pps.l_suppkey)
-      SELECT s_suppkey, s_name, n_dominant_parts, dom_qty
-      FROM parquet.`$sfDir/supplier.parquet` JOIN dom ON s_suppkey = l_suppkey
-      ORDER BY n_dominant_parts DESC, s_suppkey ASC NULLS FIRST""")
+    Catalog.sql(spark, sfDir, sqlDominantSupplierSql)
 
-  private val sqlDominantSupplierOracle = """
+  private val sqlDominantSupplierSql = """
       WITH pps AS (
         SELECT l_partkey, l_suppkey,
           CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty
@@ -815,12 +801,12 @@ object Aggregations extends QueryPack {
     * makes a concatenation hashable cross-engine.
     */
   private def aggListagg(spark: SparkSession, sfDir: String): DataFrame =
-    spark.sql(s"""
+    Catalog.sql(spark, sfDir, """
       SELECT r.r_name,
         count(*) AS n_nations,
         listagg(n.n_name, ',') WITHIN GROUP (ORDER BY n.n_name) AS members
-      FROM parquet.`$sfDir/region.parquet` r
-        JOIN parquet.`$sfDir/nation.parquet` n
+      FROM region r
+        JOIN nation n
           ON n.n_regionkey = r.r_regionkey
       GROUP BY r.r_name
       ORDER BY r.r_name ASC NULLS FIRST""")
@@ -1006,11 +992,7 @@ object Aggregations extends QueryPack {
       GROUP BY CUBE (l_returnflag, l_linestatus)
       ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""")),
     Q("q_agg_grouping_id", aggGroupingId, Some(aggGroupingIdOracle)),
-    Q("q_agg_grouping_sets", aggGroupingSets, Some("""
-      SELECT c_mktsegment, n_name, count(*) AS n_cust
-      FROM customer JOIN nation ON c_nationkey = n_nationkey
-      GROUP BY GROUPING SETS ((c_mktsegment), (n_name), ())
-      ORDER BY c_mktsegment ASC NULLS FIRST, n_name ASC NULLS FIRST""")),
+    Q("q_agg_grouping_sets", aggGroupingSets, Some(aggGroupingSetsSql)),
     Q("q_agg_pivot", aggPivot, Some("""
       SELECT user_id,
         count(*) FILTER (WHERE event_type = 'view') AS view,
@@ -1080,19 +1062,7 @@ object Aggregations extends QueryPack {
       SELECT user_id, event_type, count(*) AS n
       FROM events GROUP BY user_id, event_type
       ORDER BY user_id ASC NULLS FIRST, event_type ASC NULLS FIRST""")),
-    Q("q_sql_tpch_q3_flavor", sqlTpchQ3Flavor, Some(s"""
-      SELECT l_orderkey,
-        ${Oracle.dsum("l_extendedprice * (1.0 - l_discount)")} AS revenue,
-        o_orderdate, o_orderpriority
-      FROM customer
-      JOIN orders ON c_custkey = o_custkey
-      JOIN lineitem ON l_orderkey = o_orderkey
-      WHERE c_mktsegment = 'BUILDING'
-        AND o_orderdate < TIMESTAMP '1995-03-15'
-        AND l_shipdate > TIMESTAMP '1995-03-15'
-      GROUP BY l_orderkey, o_orderdate, o_orderpriority
-      ORDER BY revenue DESC, o_orderdate ASC NULLS FIRST, l_orderkey ASC NULLS FIRST
-      LIMIT 10""")),
+    Q("q_sql_tpch_q3_flavor", sqlTpchQ3Flavor, Some(sqlTpchQ3FlavorSql)),
     Q("q_agg_bool", aggBool, Some(aggBoolOracle)),
     Q("q_agg_argmax", aggArgmax, Some(aggArgmaxOracle)),
     Q("q_agg_mode", aggMode, Some("""
@@ -1117,22 +1087,10 @@ object Aggregations extends QueryPack {
     Q("q_agg_sketch_theta", aggSketchTheta, None),
     Q("q_agg_weighted_percentile", aggWeightedPercentile,
       Some(aggWeightedPercentileOracle)),
-    Q("q_sql_tpch_q17_flavor", sqlTpchQ17Flavor, Some(s"""
-      WITH avgq AS (
-        SELECT l_partkey, count(*) AS cnt,
-          sum(CAST(l_quantity AS BIGINT)) AS sum_qty
-        FROM lineitem GROUP BY l_partkey)
-      SELECT p_brand, count(*) AS n_small,
-        ${Oracle.dsum("l.l_extendedprice")} AS revenue
-      FROM lineitem l
-      JOIN part p ON p.p_partkey = l.l_partkey
-      JOIN avgq a ON a.l_partkey = l.l_partkey
-      WHERE 5 * CAST(l.l_quantity AS BIGINT) * a.cnt < a.sum_qty
-      GROUP BY p_brand
-      ORDER BY p_brand ASC NULLS FIRST""")),
+    Q("q_sql_tpch_q17_flavor", sqlTpchQ17Flavor, Some(sqlTpchQ17FlavorSql)),
     Q("q_agg_approx_percentile", aggApproxPercentile, None),
     Q("q_sql_dominant_supplier", sqlDominantSupplier,
-      Some(sqlDominantSupplierOracle)),
+      Some(sqlDominantSupplierSql)),
     Q("q_sql_tpch_q5_flavor", sqlTpchQ5Flavor, Some(s"""
       SELECT n_name,
         ${Oracle.dsum("l_extendedprice * (1.0 - l_discount)")} AS revenue

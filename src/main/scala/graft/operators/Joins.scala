@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -162,10 +162,7 @@ object Joins extends QueryPack {
     import spark.implicits._
     val e = Catalog.load(spark, sfDir, "events")
     val probes = e.select($"user_id").distinct()
-      .withColumn("probe_ts", explode(array(
-        lit("2024-01-08").cast("timestamp"),
-        lit("2024-01-15").cast("timestamp"),
-        lit("2024-01-22").cast("timestamp"))))
+      .withColumn("probe_ts", probeCuts)
     val j = probes.alias("p")
       .join(e.alias("ev"), col("p.user_id") === col("ev.user_id") &&
                            col("ev.ts") <= col("p.probe_ts"))
@@ -234,6 +231,33 @@ object Joins extends QueryPack {
       .orderBy($"s_nationkey".asc_nulls_first)
   }
 
+  /** The three as-of probe cut dates, exploded: one row per cut. */
+  private def probeCuts: Column = explode(array(
+    lit("2024-01-08").cast("timestamp"),
+    lit("2024-01-15").cast("timestamp"),
+    lit("2024-01-22").cast("timestamp")))
+
+  /** The as-of inputs of the merge-exec twins of q_join_asof (merge,
+    * forward, tolerance, nearest): events as (user_id, event_id, ts) and
+    * the probe spine, every event-active user at each cut date, as
+    * (user_id, probe_ts).
+    */
+  private def asofSpine(spark: SparkSession,
+                        sfDir: String): (DataFrame, DataFrame) = {
+    import spark.implicits._
+    val e = Catalog.load(spark, sfDir, "events")
+      .select($"user_id", $"event_id", $"ts")
+    (e, e.select($"user_id").distinct().withColumn("probe_ts", probeCuts))
+  }
+
+  /** The DuckDB `probes` CTE of the as-of oracles: the same spine as
+    * [[asofSpine]].
+    */
+  private val asofProbes = """WITH probes AS (
+        SELECT DISTINCT user_id, p.probe_ts
+        FROM events, (VALUES (TIMESTAMP '2024-01-08'), (TIMESTAMP '2024-01-15'),
+                             (TIMESTAMP '2024-01-22')) p(probe_ts)),"""
+
   /** The custom-operator as-of join (added round 9 close): the SAME query
     * as q_join_asof, executed by [[graft.plans.AsOfMergeJoinExec]] — the
     * injected whole-operator merge join — instead of the composed
@@ -248,11 +272,8 @@ object Joins extends QueryPack {
   /** Shared by q_join_asof (composed form) and q_join_asof_merge (custom
     * operator): one oracle, two execution strategies.
     */
-  private val asofOracle = """
-      WITH probes AS (
-        SELECT DISTINCT user_id, p.probe_ts
-        FROM events, (VALUES (TIMESTAMP '2024-01-08'), (TIMESTAMP '2024-01-15'),
-                             (TIMESTAMP '2024-01-22')) p(probe_ts)),
+  private val asofOracle = s"""
+      $asofProbes
       j AS (
         SELECT pr.user_id, pr.probe_ts, e.event_id, e.ts,
           row_number() OVER (PARTITION BY pr.user_id, pr.probe_ts
@@ -264,13 +285,7 @@ object Joins extends QueryPack {
 
   private def joinAsofMerge(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val e = Catalog.load(spark, sfDir, "events")
-      .select($"user_id", $"event_id", $"ts")
-    val probes = e.select($"user_id").distinct()
-      .withColumn("probe_ts", explode(array(
-        lit("2024-01-08").cast("timestamp"),
-        lit("2024-01-15").cast("timestamp"),
-        lit("2024-01-22").cast("timestamp"))))
+    val (e, probes) = asofSpine(spark, sfDir)
     graft.plans.AsOfJoin.asof(probes, e,
         leftKey = "user_id", leftTime = "probe_ts",
         rightKey = "user_id", rightTime = "ts", rightTie = "event_id")
@@ -307,10 +322,7 @@ object Joins extends QueryPack {
     // cut, features NULL where nothing is known yet. Both arms outer.
     val probes = Catalog.load(spark, sfDir, "customer")
       .select($"c_custkey".as("user_id"))
-      .withColumn("probe_ts", explode(array(
-        lit("2024-01-08").cast("timestamp"),
-        lit("2024-01-15").cast("timestamp"),
-        lit("2024-01-22").cast("timestamp"))))
+      .withColumn("probe_ts", probeCuts)
     val step1 = graft.plans.AsOfJoin.asof(probes, e,
         leftKey = "user_id", leftTime = "probe_ts",
         rightKey = "user_id", rightTime = "ts", rightTie = "event_id",
@@ -437,16 +449,10 @@ object Joins extends QueryPack {
     */
   private def joinAsofForward(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val e = Catalog.load(spark, sfDir, "events")
-      .select($"user_id", $"event_id", $"ts")
-      .withColumn("neg_ts", -unix_micros($"ts"))
+    val (events, spine) = asofSpine(spark, sfDir)
+    val e = events.withColumn("neg_ts", -unix_micros($"ts"))
       .withColumn("neg_eid", -$"event_id")
-    val probes = e.select($"user_id").distinct()
-      .withColumn("probe_ts", explode(array(
-        lit("2024-01-08").cast("timestamp"),
-        lit("2024-01-15").cast("timestamp"),
-        lit("2024-01-22").cast("timestamp"))))
-      .withColumn("neg_probe", -unix_micros($"probe_ts"))
+    val probes = spine.withColumn("neg_probe", -unix_micros($"probe_ts"))
     graft.plans.AsOfJoin.asof(probes, e,
         leftKey = "user_id", leftTime = "neg_probe",
         rightKey = "user_id", rightTime = "neg_ts", rightTie = "neg_eid")
@@ -469,13 +475,7 @@ object Joins extends QueryPack {
     */
   private def joinAsofTolerance(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val e = Catalog.load(spark, sfDir, "events")
-      .select($"user_id", $"event_id", $"ts")
-    val probes = e.select($"user_id").distinct()
-      .withColumn("probe_ts", explode(array(
-        lit("2024-01-08").cast("timestamp"),
-        lit("2024-01-15").cast("timestamp"),
-        lit("2024-01-22").cast("timestamp"))))
+    val (e, probes) = asofSpine(spark, sfDir)
     graft.plans.AsOfJoin.asof(probes, e,
         leftKey = "user_id", leftTime = "probe_ts",
         rightKey = "user_id", rightTime = "ts", rightTie = "event_id")
@@ -486,11 +486,8 @@ object Joins extends QueryPack {
       .orderBy($"user_id".asc_nulls_first, $"probe_ts".asc_nulls_first)
   }
 
-  private val joinAsofToleranceOracle = """
-      WITH probes AS (
-        SELECT DISTINCT user_id, p.probe_ts
-        FROM events, (VALUES (TIMESTAMP '2024-01-08'), (TIMESTAMP '2024-01-15'),
-                             (TIMESTAMP '2024-01-22')) p(probe_ts)),
+  private val joinAsofToleranceOracle = s"""
+      $asofProbes
       j AS (
         SELECT pr.user_id, pr.probe_ts, e.event_id, e.ts,
           row_number() OVER (PARTITION BY pr.user_id, pr.probe_ts
@@ -501,11 +498,8 @@ object Joins extends QueryPack {
       SELECT user_id, probe_ts, event_id, ts FROM j WHERE rn = 1
       ORDER BY user_id ASC NULLS FIRST, probe_ts ASC NULLS FIRST"""
 
-  private val joinAsofForwardOracle = """
-      WITH probes AS (
-        SELECT DISTINCT user_id, p.probe_ts
-        FROM events, (VALUES (TIMESTAMP '2024-01-08'), (TIMESTAMP '2024-01-15'),
-                             (TIMESTAMP '2024-01-22')) p(probe_ts)),
+  private val joinAsofForwardOracle = s"""
+      $asofProbes
       j AS (
         SELECT pr.user_id, pr.probe_ts, e.event_id, e.ts,
           row_number() OVER (PARTITION BY pr.user_id, pr.probe_ts
@@ -532,13 +526,7 @@ object Joins extends QueryPack {
     */
   private def joinAsofNearest(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val e = Catalog.load(spark, sfDir, "events")
-      .select($"user_id", $"event_id", $"ts")
-    val probes = e.select($"user_id").distinct()
-      .withColumn("probe_ts", explode(array(
-        lit("2024-01-08").cast("timestamp"),
-        lit("2024-01-15").cast("timestamp"),
-        lit("2024-01-22").cast("timestamp"))))
+    val (e, probes) = asofSpine(spark, sfDir)
     graft.plans.AsOfJoin.asof(probes, e,
         leftKey = "user_id", leftTime = "probe_ts",
         rightKey = "user_id", rightTime = "ts", rightTie = "event_id",
@@ -671,13 +659,13 @@ object Joins extends QueryPack {
     * the oracle checks (the q_join_skew_salted invariant pattern).
     */
   private def joinBloomPrefilter(spark: SparkSession, sfDir: String): DataFrame =
-    spark.sql(s"""
+    Catalog.sql(spark, sfDir, s"""
       WITH dim AS (
-        SELECT o_orderkey FROM parquet.`$sfDir/orders.parquet`
+        SELECT o_orderkey FROM orders
         WHERE o_orderpriority = '1-URGENT'),
       fact AS (
         SELECT l_orderkey, l_returnflag, l_quantity
-        FROM parquet.`$sfDir/lineitem.parquet`
+        FROM lineitem
         WHERE graft_might_contain(
           (SELECT graft_bloom_agg(xxhash64(o_orderkey)) FROM dim),
           xxhash64(l_orderkey)))
@@ -1045,11 +1033,8 @@ object Joins extends QueryPack {
         ON a.user_id = b.user_id
        AND a.ts < b.ts AND b.ts <= a.ts + INTERVAL 1 HOUR
       ORDER BY e1 ASC NULLS FIRST, e2 ASC NULLS FIRST""")),
-    Q("q_join_asof_nearest", joinAsofNearest, Some("""
-      WITH probes AS (
-        SELECT DISTINCT user_id, p.probe_ts
-        FROM events, (VALUES (TIMESTAMP '2024-01-08'), (TIMESTAMP '2024-01-15'),
-                             (TIMESTAMP '2024-01-22')) p(probe_ts)),
+    Q("q_join_asof_nearest", joinAsofNearest, Some(s"""
+      $asofProbes
       j AS (
         SELECT pr.user_id, pr.probe_ts, e.event_id, e.ts,
           abs(epoch_us(e.ts) - epoch_us(pr.probe_ts)) AS dt_us,

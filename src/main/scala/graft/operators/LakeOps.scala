@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -32,16 +32,28 @@ import graft.{Catalog, Memo, Q, QueryPack}
   */
 object LakeOps extends QueryPack {
 
+  /** o_orderkey mod 10: the slot the lake demo tables slice orders by. */
+  private val orderSlot = pmod(col("o_orderkey"), lit(10))
+
+  /** Writes the data files the lake, vacuum and expiry tables start from
+    * under `base` — fileA (slots 0-2), fileB (slots 3-5) and fileC
+    * (fileA's 'F' rows) — and returns the orders table they slice.
+    */
+  private def writeOrderSlices(spark: SparkSession, sfDir: String,
+                               base: String): DataFrame = {
+    val orders = Catalog.load(spark, sfDir, "orders")
+    orders.filter(orderSlot < 3).write.parquet(s"$base/fileA")
+    orders.filter(orderSlot >= 3 && orderSlot < 6).write.parquet(s"$base/fileB")
+    orders.filter(orderSlot < 3 && col("o_orderstatus") === "F")
+      .write.parquet(s"$base/fileC")
+    orders
+  }
+
   /** Build the three-commit scratch table once per (app, sfDir). */
   private def lakeDir(spark: SparkSession, sfDir: String): String =
     Memo.dir(spark, sfDir, "lake") { base =>
       import spark.implicits._
-      val orders = Catalog.load(spark, sfDir, "orders")
-      val k = pmod($"o_orderkey", lit(10))
-      orders.filter(k < 3).write.parquet(s"$base/fileA")
-      orders.filter(k >= 3 && k < 6).write.parquet(s"$base/fileB")
-      orders.filter(k < 3 && $"o_orderstatus" === "F")
-        .write.parquet(s"$base/fileC")
+      val orders = writeOrderSlices(spark, sfDir, base)
       // v4 COMPACTS B and C into D. The compactor reads ONLY the live
       // data files (never the source table) — the file-level rewrite a
       // real table service runs; row content is untouched by contract.
@@ -58,7 +70,7 @@ object LakeOps extends QueryPack {
       // v6 is a SCHEMA-EVOLUTION commit: fileF adds the o_channel column
       // (a deterministic function of the key) on a fresh slice; older
       // files keep the base 6-column schema and reconcile by name at read.
-      orders.filter(k >= 6 && k < 8)
+      orders.filter(orderSlot >= 6 && orderSlot < 8)
         .withColumn("o_channel", pmod(expr("o_orderkey div 10"), lit(2)))
         .write.parquet(s"$base/fileF")
       def a(v: Int, op: String, path: String) = LakeAction(v, op, path)
@@ -719,9 +731,8 @@ object LakeOps extends QueryPack {
                         base: String): DataFrame = {
     import spark.implicits._
     val rows = ordersCents(Catalog.load(spark, sfDir, "orders"))
-    val k = pmod($"o_orderkey", lit(10))
-    rows.filter(k >= 3 && k < 6).write.parquet(s"$base/fileB")
-    rows.filter(k < 3 && $"o_orderstatus" === "F")
+    rows.filter(orderSlot >= 3 && orderSlot < 6).write.parquet(s"$base/fileB")
+    rows.filter(orderSlot < 3 && $"o_orderstatus" === "F")
       .write.parquet(s"$base/fileC")
     rows.filter(pmod($"o_orderkey", lit(100)) === 42)
       .select($"o_orderkey", $"o_orderstatus",
@@ -892,9 +903,8 @@ object LakeOps extends QueryPack {
     Memo.dir(spark, sfDir, "lake_edel") { base =>
       import spark.implicits._
       val rows = ordersCents(Catalog.load(spark, sfDir, "orders"))
-      val k = pmod($"o_orderkey", lit(10))
-      rows.filter(k < 3).write.parquet(s"$base/fileP")
-      rows.filter(k >= 3 && k < 5).write.parquet(s"$base/fileQ")
+      rows.filter(orderSlot < 3).write.parquet(s"$base/fileP")
+      rows.filter(orderSlot >= 3 && orderSlot < 5).write.parquet(s"$base/fileQ")
       // v2: table-wide equality-delete file — keys only (a delete file
       // may list keys absent from the table; the mask is key-driven).
       rows.filter(pmod($"o_orderkey", lit(7)) === 3)
@@ -1214,13 +1224,7 @@ object LakeOps extends QueryPack {
 
   private def vacuumDir(spark: SparkSession, sfDir: String): String =
     Memo.dir(spark, sfDir, "lake_vac") { base =>
-      import spark.implicits._
-      val orders = Catalog.load(spark, sfDir, "orders")
-      val k = pmod($"o_orderkey", lit(10))
-      orders.filter(k < 3).write.parquet(s"$base/fileA")
-      orders.filter(k >= 3 && k < 6).write.parquet(s"$base/fileB")
-      orders.filter(k < 3 && $"o_orderstatus" === "F")
-        .write.parquet(s"$base/fileC")
+      writeOrderSlices(spark, sfDir, base)
       commit(logPath(base), 0, Seq(LakeAction(1, "add", "fileA"),
         LakeAction(2, "add", "fileB"), LakeAction(3, "remove", "fileA"),
         LakeAction(3, "add", "fileC")))
@@ -1364,16 +1368,10 @@ object LakeOps extends QueryPack {
 
   private[graft] def expireDir(spark: SparkSession, sfDir: String): String =
     Memo.dir(spark, sfDir, "lake_exp") { base =>
-      import spark.implicits._
-      val orders = Catalog.load(spark, sfDir, "orders")
-      val k = pmod($"o_orderkey", lit(10))
-      orders.filter(k < 3).write.parquet(s"$base/fileA")
-      orders.filter(k >= 3 && k < 6).write.parquet(s"$base/fileB")
-      orders.filter(k < 3 && $"o_orderstatus" === "F")
-        .write.parquet(s"$base/fileC")
+      val orders = writeOrderSlices(spark, sfDir, base)
       spark.read.parquet(s"$base/fileB", s"$base/fileC")
         .write.parquet(s"$base/fileD")
-      orders.filter(k >= 6 && k < 8).write.parquet(s"$base/fileE")
+      orders.filter(orderSlot >= 6 && orderSlot < 8).write.parquet(s"$base/fileE")
       def a(v: Int, op: String, path: String) =
         LakeAction(v, op, path, ts = Some(lakeTs(v)))
       commit(logPath(base), 0, Seq(
@@ -1607,10 +1605,9 @@ object LakeOps extends QueryPack {
     Memo.dir(spark, sfDir, "lake_pe") { base =>
       import spark.implicits._
       val orders = Catalog.load(spark, sfDir, "orders")
-      val k = pmod($"o_orderkey", lit(10))
-      orders.filter(k < 5)
+      orders.filter(orderSlot < 5)
         .write.partitionBy("o_orderstatus").parquet(s"$base/fileP1")
-      orders.filter(k >= 5)
+      orders.filter(orderSlot >= 5)
         .withColumn("o_year", year($"o_orderdate"))
         .write.partitionBy("o_year").parquet(s"$base/fileP2")
       commit(logPath(base), 0,
@@ -1654,15 +1651,13 @@ object LakeOps extends QueryPack {
     */
   private def occDir(spark: SparkSession, sfDir: String): String =
     Memo.dir(spark, sfDir, "lake_occ") { base =>
-      import spark.implicits._
       val orders = Catalog.load(spark, sfDir, "orders")
-      val k = pmod($"o_orderkey", lit(10))
-      orders.filter(k < 2).write.parquet(s"$base/fileBase")
+      orders.filter(orderSlot < 2).write.parquet(s"$base/fileBase")
       val log = logPath(base)
       commit(log, 0, Seq(LakeAction(1, "add", "fileBase")))
       // Both writers read the SAME head (v1) and stage their files.
-      orders.filter(k >= 2 && k < 4).write.parquet(s"$base/fileA")
-      orders.filter(k >= 4 && k < 6).write.parquet(s"$base/fileB")
+      orders.filter(orderSlot >= 2 && orderSlot < 4).write.parquet(s"$base/fileA")
+      orders.filter(orderSlot >= 4 && orderSlot < 6).write.parquet(s"$base/fileB")
       val read = 1
       // Writer A lands first.
       commit(log, read, Seq(LakeAction(read + 1, "add", "fileA")))
@@ -2539,7 +2534,6 @@ object LakeOps extends QueryPack {
         ConstraintSql.getBytes(StandardCharsets.UTF_8))
       val orders = Catalog.load(spark, sfDir, "orders")
         .select($"o_orderkey", $"o_orderstatus", $"o_totalprice")
-      val k = pmod($"o_orderkey", lit(10))
       // The WRITER: validate-then-commit; refusal audits and skips.
       def validated(v: Int, name: String, batch: DataFrame): Unit = {
         val pred = new String(Files.readAllBytes(
@@ -2549,10 +2543,10 @@ object LakeOps extends QueryPack {
         commit(logPath(base), v - 1,
           Seq(LakeAction(v, if (bad > 0L) "conflict" else "add", name)))
       }
-      validated(1, "fileBase", orders.filter(k < 5))
-      validated(2, "fileB1", orders.filter(k === 5 || k === 6))
-      validated(3, "fileB2", orders.filter(k === 7 || k === 8)) // refused
-      validated(4, "fileB3", orders.filter(k === 7))
+      validated(1, "fileBase", orders.filter(orderSlot < 5))
+      validated(2, "fileB1", orders.filter(orderSlot === 5 || orderSlot === 6))
+      validated(3, "fileB2", orders.filter(orderSlot === 7 || orderSlot === 8)) // refused
+      validated(4, "fileB3", orders.filter(orderSlot === 7))
     }
 
   private def lakeConstraints(spark: SparkSession, sfDir: String): DataFrame = {
@@ -2643,9 +2637,15 @@ object LakeOps extends QueryPack {
       spark.read.parquet(s"$base/${a.path}")
         .filter(expr(s"NOT ($pred)")).count()).sum
     if (bad > 0L) {
-      // Roll the branch back: drop its log and re-commit the kept prefix.
-      Files.delete(branchLog(base, branch))
-      commit(branchLog(base, branch), 0, branchActs.filter(_.v <= mainHead))
+      // Roll the branch back: commit the kept prefix to a sibling log and
+      // rename it over the branch log, so a crash at any point leaves one
+      // whole branch log, the old or the rolled-back one.
+      val log = branchLog(base, branch)
+      val kept = log.resolveSibling(s"${log.getFileName}.rollback")
+      Files.deleteIfExists(kept)
+      commit(kept, 0, branchActs.filter(_.v <= mainHead))
+      Files.move(kept, log, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
       commit(logPath(base), mainHead,
         Seq(LakeAction(mainHead + 1, "conflict", staged.head.path)))
       (0, 1)
@@ -2702,12 +2702,11 @@ object LakeOps extends QueryPack {
     Memo.dir(spark, sfDir, "lake_cmap") { base =>
       import spark.implicits._
       val orders = ordersCents(Catalog.load(spark, sfDir, "orders"))
-      val k = pmod($"o_orderkey", lit(10))
       // v1: written under the ORIGINAL logical name.
-      orders.filter(k < 4).write.parquet(s"$base/fileA")
+      orders.filter(orderSlot < 4).write.parquet(s"$base/fileA")
       // v3: written under the post-rename name — a second physical
       // generation of the same logical column.
-      orders.filter(k >= 4 && k < 8)
+      orders.filter(orderSlot >= 4 && orderSlot < 8)
         .select($"o_orderkey", $"o_orderstatus".as("status"), $"cents")
         .write.parquet(s"$base/fileC")
       commit(logPath(base), 0,
@@ -2769,11 +2768,10 @@ object LakeOps extends QueryPack {
         ConstraintSql.getBytes(StandardCharsets.UTF_8))
       val orders = Catalog.load(spark, sfDir, "orders")
         .select($"o_orderkey", $"o_orderstatus", $"o_totalprice")
-      val k = pmod($"o_orderkey", lit(10))
-      orders.filter(k < 3).write.parquet(s"$base/fileA")
-      orders.filter(k >= 3 && k < 6).write.parquet(s"$base/fileB")
-      orders.filter(k === 6 || k === 7).write.parquet(s"$base/fileG")
-      orders.filter(k === 8 || k === 9).write.parquet(s"$base/fileH")
+      orders.filter(orderSlot < 3).write.parquet(s"$base/fileA")
+      orders.filter(orderSlot >= 3 && orderSlot < 6).write.parquet(s"$base/fileB")
+      orders.filter(orderSlot === 6 || orderSlot === 7).write.parquet(s"$base/fileG")
+      orders.filter(orderSlot === 8 || orderSlot === 9).write.parquet(s"$base/fileH")
       commit(logPath(base), 0,
         Seq(LakeAction(1, "add", "fileA"), LakeAction(2, "add", "fileB")))
       branchCreate(base, "audit")

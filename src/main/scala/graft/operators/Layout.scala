@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.Memo
+import graft.{Catalog, Memo}
 
 /** File-layout compaction — the operator behind `Catalog`'s fixture
   * re-split, exposed as a first-class API. A lakehouse table degrades into
@@ -36,13 +36,15 @@ object Layout {
   }
 
   /** Compact the fixture `lineitem` once (a [[graft.Memo]] directory) into
-    * ~256 KB files and return the destination directory.
+    * ~256 KB files and return the destination directory. The fixture is
+    * one file as generated and a directory of part files after a Spark
+    * rewrite; its size is the sum of the files under it.
     */
   def compactedLineitem(spark: SparkSession, sfDir: String): String =
     Memo.dir(spark, sfDir, "compact_lineitem") { dest =>
-      val srcBytes =
-        java.nio.file.Files.size(java.nio.file.Path.of(s"$sfDir/lineitem.parquet"))
-      compact(graft.Catalog.load(spark, sfDir, "lineitem"), srcBytes, dest,
+      val srcBytes = org.apache.commons.io.FileUtils.sizeOf(
+        new java.io.File(Catalog.file(sfDir, "lineitem")))
+      compact(Catalog.load(spark, sfDir, "lineitem"), srcBytes, dest,
         targetFileBytes = 256L << 10)
     }
 

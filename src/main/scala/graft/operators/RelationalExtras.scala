@@ -146,18 +146,19 @@ object RelationalExtras extends QueryPack {
     * plan.
     */
   private def subquerySuite(spark: SparkSession, sfDir: String): DataFrame =
-    spark.sql(s"""
+    Catalog.sql(spark, sfDir, subquerySuiteSql)
+
+  private val subquerySuiteSql = """
       SELECT o.o_orderkey, o.o_custkey, o.o_totalprice
-      FROM parquet.`$sfDir/orders.parquet` o
+      FROM orders o
       WHERE o.o_custkey IN (
-          SELECT c_custkey FROM parquet.`$sfDir/customer.parquet`
-          WHERE c_mktsegment = 'BUILDING')
+          SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
         AND EXISTS (
-          SELECT 1 FROM parquet.`$sfDir/lineitem.parquet` l
+          SELECT 1 FROM lineitem l
           WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R')
-        AND (SELECT count(*) FROM parquet.`$sfDir/orders.parquet` o2
+        AND (SELECT count(*) FROM orders o2
              WHERE o2.o_custkey = o.o_custkey) > 12
-      ORDER BY o.o_orderkey ASC NULLS FIRST""")
+      ORDER BY o.o_orderkey ASC NULLS FIRST"""
 
   /** Distribution windows: percent_rank / cume_dist / nth_value over
     * customers ranked by account balance within their nation. The rank-based
@@ -358,19 +359,9 @@ object RelationalExtras extends QueryPack {
     * makes the construct usable when the outer side is large.
     */
   private def joinLateralTopk(spark: SparkSession, sfDir: String): DataFrame =
-    spark.sql(s"""
-      SELECT n.n_name, t.o_orderkey, t.o_totalprice
-      FROM parquet.`$sfDir/nation.parquet` n,
-      LATERAL (
-        SELECT o_orderkey, o_totalprice
-        FROM parquet.`$sfDir/orders.parquet` o
-        JOIN parquet.`$sfDir/customer.parquet` c ON o_custkey = c_custkey
-        WHERE c.c_nationkey = n.n_nationkey
-        ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 2) t
-      ORDER BY n.n_name ASC NULLS FIRST, t.o_totalprice DESC,
-        t.o_orderkey ASC NULLS FIRST""")
+    Catalog.sql(spark, sfDir, joinLateralTopkSql)
 
-  private val joinLateralTopkOracle = """
+  private val joinLateralTopkSql = """
     SELECT n.n_name, t.o_orderkey, t.o_totalprice
     FROM nation n,
     LATERAL (
@@ -397,16 +388,16 @@ object RelationalExtras extends QueryPack {
     * exchanges are the two final aggregates.
     */
   private def sqlRecursiveCte(spark: SparkSession, sfDir: String): DataFrame =
-    spark.sql(s"""
+    Catalog.sql(spark, sfDir, """
       WITH RECURSIVE walk(part, anc, d) AS (
-        SELECT p_partkey, p_partkey, 0 FROM parquet.`$sfDir/part.parquet`
+        SELECT p_partkey, p_partkey, 0 FROM part
         UNION ALL
         SELECT part, anc div 2, d + 1 FROM walk WHERE anc > 1),
       pd AS (SELECT part, max(d) AS depth FROM walk GROUP BY part)
       SELECT depth, count(*) AS n_parts,
         CAST(sum(CAST(p_retailprice AS DECIMAL(18,6))) AS DOUBLE)
           AS price_mass
-      FROM pd JOIN parquet.`$sfDir/part.parquet` ON part = p_partkey
+      FROM pd JOIN part ON part = p_partkey
       GROUP BY depth
       ORDER BY depth ASC NULLS FIRST""")
 
@@ -444,21 +435,9 @@ object RelationalExtras extends QueryPack {
     * This query IS the broadcast case; the rewrite case is q_join_left_anti.
     */
   private def joinNullAwareAnti(spark: SparkSession, sfDir: String): DataFrame =
-    spark.sql(s"""
-      WITH probe AS (
-        SELECT o_orderkey, o_orderpriority, o_totalprice,
-          CASE WHEN o_orderpriority = '5-LOW' THEN NULL ELSE o_custkey END AS k
-        FROM parquet.`$sfDir/orders.parquet`)
-      SELECT o_orderpriority, count(*) AS n_orders,
-        CAST(sum(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS total
-      FROM probe
-      WHERE k NOT IN (
-        SELECT c_custkey FROM parquet.`$sfDir/customer.parquet`
-        WHERE c_mktsegment = 'BUILDING')
-      GROUP BY o_orderpriority
-      ORDER BY o_orderpriority ASC NULLS FIRST""")
+    Catalog.sql(spark, sfDir, joinNullAwareAntiSql)
 
-  private val joinNullAwareAntiOracle = s"""
+  private val joinNullAwareAntiSql = s"""
     WITH probe AS (
       SELECT o_orderkey, o_orderpriority, o_totalprice,
         CASE WHEN o_orderpriority = '5-LOW' THEN NULL ELSE o_custkey END AS k
@@ -655,8 +634,8 @@ object RelationalExtras extends QueryPack {
     Q("q_er_sorted_neighborhood", erSortedNeighborhood,
       Some(erSortedNeighborhoodOracle), warm = true),
     Q("q_er_score", erScore, Some(erScoreOracle)),
-    Q("q_join_null_aware_anti", joinNullAwareAnti, Some(joinNullAwareAntiOracle)),
-    Q("q_join_lateral_topk", joinLateralTopk, Some(joinLateralTopkOracle)),
+    Q("q_join_null_aware_anti", joinNullAwareAnti, Some(joinNullAwareAntiSql)),
+    Q("q_join_lateral_topk", joinLateralTopk, Some(joinLateralTopkSql)),
     Q("q_sql_recursive_cte", sqlRecursiveCte, Some(sqlRecursiveCteOracle)),
     Q("q_join_cbo_reorder", joinCboReorder, Some(s"""
       SELECT n_name, count(*) AS n_items,
@@ -675,17 +654,7 @@ object RelationalExtras extends QueryPack {
       FROM orders JOIN lineitem ON o_orderkey = l_orderkey
       GROUP BY o_orderpriority
       ORDER BY o_orderpriority ASC NULLS FIRST"""), warm = true),
-    Q("q_subquery_suite", subquerySuite, Some("""
-      SELECT o.o_orderkey, o.o_custkey, o.o_totalprice
-      FROM orders o
-      WHERE o.o_custkey IN (
-          SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
-        AND EXISTS (
-          SELECT 1 FROM lineitem l
-          WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R')
-        AND (SELECT count(*) FROM orders o2
-             WHERE o2.o_custkey = o.o_custkey) > 12
-      ORDER BY o.o_orderkey ASC NULLS FIRST""")),
+    Q("q_subquery_suite", subquerySuite, Some(subquerySuiteSql)),
     Q("q_win_distribution", winDistribution, Some("""
       SELECT c_custkey, c_nationkey, c_acctbal,
         percent_rank() OVER w AS pct_rank,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Oracle, Q, QueryPack}
+import graft.{Catalog, Oracle, Q, QueryPack}
 import graft.Dsl._
 
 /** SURVEY.md §2.D (SQL-flavor family, round-10 extension): the remaining
@@ -94,19 +94,9 @@ object SqlFlavors extends QueryPack {
     * O(|orders|) subquery executions.
     */
   private def sqlTpchQ4Flavor(spark: SparkSession, sfDir: String): DataFrame =
-    spark.sql(s"""
-      SELECT o_orderpriority, count(*) AS n_orders
-      FROM parquet.`$sfDir/orders.parquet`
-      WHERE o_orderdate >= TIMESTAMP '1996-07-01'
-        AND o_orderdate < TIMESTAMP '1996-10-01'
-        AND EXISTS (
-          SELECT 1 FROM parquet.`$sfDir/lineitem.parquet`
-          WHERE l_orderkey = o_orderkey
-            AND l_shipdate > o_orderdate + INTERVAL 90 DAY)
-      GROUP BY o_orderpriority
-      ORDER BY o_orderpriority ASC NULLS FIRST""")
+    Catalog.sql(spark, sfDir, sqlTpchQ4FlavorSql)
 
-  private val sqlTpchQ4FlavorOracle = """
+  private val sqlTpchQ4FlavorSql = """
     SELECT o_orderpriority, count(*) AS n_orders
     FROM orders
     WHERE o_orderdate >= TIMESTAMP '1996-07-01'
@@ -199,21 +189,9 @@ object SqlFlavors extends QueryPack {
     * sum over count on both engines, so the comparison cannot drift.
     */
   private def sqlTpchQ22Flavor(spark: SparkSession, sfDir: String): DataFrame =
-    spark.sql(s"""
-      SELECT c_mktsegment, count(*) AS n_cust,
-        CAST(sum(CAST(c_acctbal AS DECIMAL(18,6))) AS DOUBLE) AS total_bal
-      FROM parquet.`$sfDir/customer.parquet`
-      WHERE c_acctbal > (
-          SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,6))) AS DOUBLE) / count(*)
-          FROM parquet.`$sfDir/customer.parquet` WHERE c_acctbal > 0.0)
-        AND NOT EXISTS (
-          SELECT 1 FROM parquet.`$sfDir/orders.parquet`
-          WHERE o_custkey = c_custkey
-            AND o_orderdate >= TIMESTAMP '2000-01-01')
-      GROUP BY c_mktsegment
-      ORDER BY c_mktsegment ASC NULLS FIRST""")
+    Catalog.sql(spark, sfDir, sqlTpchQ22FlavorSql)
 
-  private val sqlTpchQ22FlavorOracle = """
+  private val sqlTpchQ22FlavorSql = """
     SELECT c_mktsegment, count(*) AS n_cust,
       CAST(sum(CAST(c_acctbal AS DECIMAL(18,6))) AS DOUBLE) AS total_bal
     FROM customer
@@ -354,9 +332,9 @@ object SqlFlavors extends QueryPack {
     Q("q_sql_tpch_q8_flavor", sqlTpchQ8Flavor, Some(sqlTpchQ8FlavorOracle)),
     Q("q_sql_tpch_q19_flavor", sqlTpchQ19Flavor, Some(sqlTpchQ19FlavorOracle)),
     Q("q_sql_tpch_q2_flavor", sqlTpchQ2Flavor, Some(sqlTpchQ2FlavorOracle)),
-    Q("q_sql_tpch_q4_flavor", sqlTpchQ4Flavor, Some(sqlTpchQ4FlavorOracle)),
+    Q("q_sql_tpch_q4_flavor", sqlTpchQ4Flavor, Some(sqlTpchQ4FlavorSql)),
     Q("q_sql_tpch_q12_flavor", sqlTpchQ12Flavor, Some(sqlTpchQ12FlavorOracle)),
     Q("q_sql_tpch_q14_flavor", sqlTpchQ14Flavor, Some(sqlTpchQ14FlavorOracle)),
-    Q("q_sql_tpch_q22_flavor", sqlTpchQ22Flavor, Some(sqlTpchQ22FlavorOracle)),
+    Q("q_sql_tpch_q22_flavor", sqlTpchQ22Flavor, Some(sqlTpchQ22FlavorSql)),
   )
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Oracle, Q, QueryPack}
+import graft.{Catalog, Oracle, Q, QueryPack}
 import graft.Dsl._
 
 /** SURVEY.md §2.D (SQL-flavor family, round-10 batch 3): the final eight
@@ -146,24 +146,9 @@ object SqlFlavorsB extends QueryPack {
     * comparison cannot drift cross-engine.
     */
   private def sqlTpchQ11Flavor(spark: SparkSession, sfDir: String): DataFrame =
-    spark.sql(s"""
-      WITH pv AS (
-        SELECT l_partkey,
-          CAST(sum(CAST(l_extendedprice * l_quantity AS DECIMAL(18,6)))
-            AS DOUBLE) AS part_value
-        FROM parquet.`$sfDir/lineitem.parquet`
-        JOIN parquet.`$sfDir/supplier.parquet` ON l_suppkey = s_suppkey
-        JOIN parquet.`$sfDir/nation.parquet` ON s_nationkey = n_nationkey
-        WHERE n_name = 'NATION_19'
-        GROUP BY l_partkey)
-      SELECT l_partkey, part_value
-      FROM pv
-      WHERE part_value > 2.5 * (
-        SELECT CAST(sum(CAST(part_value AS DECIMAL(18,6))) AS DOUBLE)
-          / count(*) FROM pv)
-      ORDER BY part_value DESC, l_partkey ASC""")
+    Catalog.sql(spark, sfDir, sqlTpchQ11FlavorSql)
 
-  private val sqlTpchQ11FlavorOracle = """
+  private val sqlTpchQ11FlavorSql = """
     WITH pv AS (
       SELECT l_partkey,
         CAST(sum(CAST(l_extendedprice * l_quantity AS DECIMAL(18,6)))
@@ -225,23 +210,9 @@ object SqlFlavorsB extends QueryPack {
     * engines (the reason Q15's view equality is safe to grade at all).
     */
   private def sqlTpchQ15Flavor(spark: SparkSession, sfDir: String): DataFrame =
-    spark.sql(s"""
-      WITH rev AS (
-        SELECT l_suppkey,
-          CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
-            AS DECIMAL(18,6))) AS DOUBLE) AS total_revenue
-        FROM parquet.`$sfDir/lineitem.parquet`
-        WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-          AND l_shipdate < TIMESTAMP '1996-04-01'
-          AND l_suppkey IS NOT NULL
-        GROUP BY l_suppkey)
-      SELECT s_suppkey, s_name, total_revenue
-      FROM parquet.`$sfDir/supplier.parquet`
-      JOIN rev ON s_suppkey = l_suppkey
-      WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
-      ORDER BY s_suppkey ASC""")
+    Catalog.sql(spark, sfDir, sqlTpchQ15FlavorSql)
 
-  private val sqlTpchQ15FlavorOracle = """
+  private val sqlTpchQ15FlavorSql = """
     WITH rev AS (
       SELECT l_suppkey,
         CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
@@ -306,22 +277,9 @@ object SqlFlavorsB extends QueryPack {
     * orderkey breaking ties.
     */
   private def sqlTpchQ18Flavor(spark: SparkSession, sfDir: String): DataFrame =
-    spark.sql(s"""
-      WITH big AS (
-        SELECT l_orderkey,
-          CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS total_qty
-        FROM parquet.`$sfDir/lineitem.parquet`
-        GROUP BY l_orderkey
-        HAVING sum(CAST(l_quantity AS DECIMAL(18,6))) > 300)
-      SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
-        total_qty
-      FROM big
-      JOIN parquet.`$sfDir/orders.parquet` ON o_orderkey = l_orderkey
-      JOIN parquet.`$sfDir/customer.parquet` ON c_custkey = o_custkey
-      ORDER BY o_totalprice DESC, o_orderkey ASC
-      LIMIT 100""")
+    Catalog.sql(spark, sfDir, sqlTpchQ18FlavorSql)
 
-  private val sqlTpchQ18FlavorOracle = """
+  private val sqlTpchQ18FlavorSql = """
     WITH big AS (
       SELECT l_orderkey,
         CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS total_qty
@@ -347,33 +305,9 @@ object SqlFlavorsB extends QueryPack {
     * counts once per supplier (DISTINCT orderkey×suppkey before counting).
     */
   private def sqlTpchQ21Flavor(spark: SparkSession, sfDir: String): DataFrame =
-    spark.sql(s"""
-      WITH l AS (
-        SELECT l_orderkey, l_suppkey,
-          l_shipdate > o_orderdate + INTERVAL 60 DAY AS is_late
-        FROM parquet.`$sfDir/lineitem.parquet`
-        JOIN parquet.`$sfDir/orders.parquet` ON l_orderkey = o_orderkey
-        WHERE o_orderstatus = 'F'),
-      l1 AS (
-        SELECT DISTINCT l_orderkey, l_suppkey FROM l WHERE is_late)
-      SELECT s_name, count(*) AS numwait
-      FROM l1
-      JOIN parquet.`$sfDir/supplier.parquet` ON l1.l_suppkey = s_suppkey
-      JOIN parquet.`$sfDir/nation.parquet` ON s_nationkey = n_nationkey
-      WHERE n_name = 'NATION_1'
-        AND EXISTS (
-          SELECT 1 FROM l l2
-          WHERE l2.l_orderkey = l1.l_orderkey
-            AND l2.l_suppkey <> l1.l_suppkey)
-        AND NOT EXISTS (
-          SELECT 1 FROM l l3
-          WHERE l3.l_orderkey = l1.l_orderkey
-            AND l3.l_suppkey <> l1.l_suppkey AND l3.is_late)
-      GROUP BY s_name
-      ORDER BY numwait DESC, s_name ASC
-      LIMIT 100""")
+    Catalog.sql(spark, sfDir, sqlTpchQ21FlavorSql)
 
-  private val sqlTpchQ21FlavorOracle = """
+  private val sqlTpchQ21FlavorSql = """
     WITH l AS (
       SELECT l_orderkey, l_suppkey,
         l_shipdate > o_orderdate + INTERVAL 60 DAY AS is_late
@@ -411,24 +345,9 @@ object SqlFlavorsB extends QueryPack {
     * IN chains to semi joins; the 1-row total broadcasts.
     */
   private def sqlTpchQ20Flavor(spark: SparkSession, sfDir: String): DataFrame =
-    spark.sql(s"""
-      WITH rq AS (
-        SELECT l_suppkey, CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty
-        FROM parquet.`$sfDir/lineitem.parquet`
-        WHERE l_partkey IN (
-            SELECT p_partkey FROM parquet.`$sfDir/part.parquet`
-            WHERE p_name LIKE 'red%')
-          AND l_shipdate >= DATE '1995-01-01'
-          AND l_shipdate < DATE '1997-01-01'
-        GROUP BY l_suppkey),
-      tot AS (SELECT CAST(sum(qty) AS BIGINT) AS t, count(*) AS ns FROM rq)
-      SELECT s_suppkey, s_name, n_name
-      FROM parquet.`$sfDir/supplier.parquet`
-      JOIN parquet.`$sfDir/nation.parquet` ON s_nationkey = n_nationkey
-      WHERE s_suppkey IN (SELECT l_suppkey FROM rq, tot WHERE qty * ns > t)
-      ORDER BY s_suppkey ASC NULLS FIRST""")
+    Catalog.sql(spark, sfDir, sqlTpchQ20FlavorSql)
 
-  private val sqlTpchQ20FlavorOracle = """
+  private val sqlTpchQ20FlavorSql = """
     WITH rq AS (
       SELECT l_suppkey, CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty
       FROM lineitem
@@ -1069,14 +988,14 @@ object SqlFlavorsB extends QueryPack {
     Q("q_sql_tpcds_q97_flavor", sqlTpcdsQ97Flavor, Some(sqlTpcdsQ97FlavorOracle)),
     Q("q_sql_tpcds_q67_flavor", sqlTpcdsQ67Flavor, Some(sqlTpcdsQ67FlavorOracle)),
     Q("q_sql_tpcds_q51_flavor", sqlTpcdsQ51Flavor, Some(sqlTpcdsQ51FlavorOracle)),
-    Q("q_sql_tpch_q20_flavor", sqlTpchQ20Flavor, Some(sqlTpchQ20FlavorOracle)),
+    Q("q_sql_tpch_q20_flavor", sqlTpchQ20Flavor, Some(sqlTpchQ20FlavorSql)),
     Q("q_sql_tpch_q7_flavor", sqlTpchQ7Flavor, Some(sqlTpchQ7FlavorOracle)),
     Q("q_sql_tpch_q9_flavor", sqlTpchQ9Flavor, Some(sqlTpchQ9FlavorOracle)),
-    Q("q_sql_tpch_q11_flavor", sqlTpchQ11Flavor, Some(sqlTpchQ11FlavorOracle)),
+    Q("q_sql_tpch_q11_flavor", sqlTpchQ11Flavor, Some(sqlTpchQ11FlavorSql)),
     Q("q_sql_tpch_q13_flavor", sqlTpchQ13Flavor, Some(sqlTpchQ13FlavorOracle)),
-    Q("q_sql_tpch_q15_flavor", sqlTpchQ15Flavor, Some(sqlTpchQ15FlavorOracle)),
+    Q("q_sql_tpch_q15_flavor", sqlTpchQ15Flavor, Some(sqlTpchQ15FlavorSql)),
     Q("q_sql_tpch_q16_flavor", sqlTpchQ16Flavor, Some(sqlTpchQ16FlavorOracle)),
-    Q("q_sql_tpch_q18_flavor", sqlTpchQ18Flavor, Some(sqlTpchQ18FlavorOracle)),
-    Q("q_sql_tpch_q21_flavor", sqlTpchQ21Flavor, Some(sqlTpchQ21FlavorOracle)),
+    Q("q_sql_tpch_q18_flavor", sqlTpchQ18Flavor, Some(sqlTpchQ18FlavorSql)),
+    Q("q_sql_tpch_q21_flavor", sqlTpchQ21Flavor, Some(sqlTpchQ21FlavorSql)),
   )
 }

@@ -177,7 +177,7 @@ object Streams extends QueryPack {
                 maxFilesPerTrigger: Option[Int] = None): DataFrame = {
       linkFixture(sfDir, table, src)
       source(s, src.toString,
-        s.read.parquet(s"$sfDir/$table.parquet").schema, maxFilesPerTrigger)
+        s.read.parquet(Catalog.file(sfDir, table)).schema, maxFilesPerTrigger)
     }
 
     /** Drains `df` into a uniquely named append-mode memory sink and returns
@@ -247,14 +247,14 @@ object Streams extends QueryPack {
     * individually.
     */
   private def linkFixture(sfDir: String, table: String, dir: Path): Unit = {
-    val fixture = Path.of(sfDir, s"$table.parquet")
+    val fixture = Path.of(Catalog.file(sfDir, table))
     if (Files.isDirectory(fixture)) {
       val ls = Files.list(fixture)
       try ls.iterator().asScala
         .filter(_.getFileName.toString.endsWith(".parquet"))
         .foreach(f => Files.createSymbolicLink(dir.resolve(f.getFileName), f))
       finally ls.close()
-    } else Files.createSymbolicLink(dir.resolve(s"$table.parquet"), fixture)
+    } else Files.createSymbolicLink(dir.resolve(fixture.getFileName), fixture)
   }
 
   /** The events fixture streamed on an isolated session as (event_id,

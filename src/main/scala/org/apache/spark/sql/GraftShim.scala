@@ -3,8 +3,10 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** The internal-access shim this library needs: turning a hand-built
-  * [[LogicalPlan]] (the custom as-of join node, graft.plans.AsOfJoinPlan)
-  * into a DataFrame, and the shutdown cleanup of [[graft.Memo]]'s scratch.
+  * [[LogicalPlan]] into a DataFrame (the custom as-of join node,
+  * graft.plans.AsOfJoinPlan, and the SQL text whose fixture names
+  * [[graft.Catalog.sql]] bound), and the shutdown cleanup of
+  * [[graft.Memo]]'s scratch.
   * `Dataset.ofRows` is `private[sql]` and `ShutdownHookManager` is
   * `private[spark]`, so
   * the accessors must live in this package — the standard pattern for

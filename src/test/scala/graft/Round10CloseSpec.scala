@@ -39,6 +39,21 @@ class Round10CloseSpec extends SparkTestBase {
     assert(n == want)
   }
 
+  test("Layout.compactedLineitem sizes a directory fixture by its part files") {
+    // The same lineitem as one file and as a Spark-written directory of
+    // part files (the 10x scale-stress shape): both compact to one count.
+    val asDir = java.nio.file.Files.createTempDirectory("graft_layout_spec_")
+    try {
+      Catalog.load(spark, sf01, "lineitem").repartition(4)
+        .write.parquet(Catalog.file(asDir.toString, "lineitem"))
+      def files(sfDir: String) =
+        new java.io.File(operators.Layout.compactedLineitem(spark, sfDir))
+          .listFiles().count(_.getName.endsWith(".parquet"))
+      assert(files(sf01) > 1)
+      assert(files(asDir.toString) == files(sf01))
+    } finally Memo.rmTree(asDir)
+  }
+
   test("q_sql_tpch_q10_flavor broadcasts dims and keeps one fact shuffle") {
     val df = SparkEntry.queries("q_sql_tpch_q10_flavor")(spark, sf0001)
     val plan = df.queryExecution.executedPlan.toString

@@ -341,6 +341,7 @@ class Round19Spec extends SparkTestBase {
   test("wap: staged commits are invisible on main until publish; refusal is transactional on both refs") {
     import java.nio.file.{Files, Paths}
     import java.nio.charset.StandardCharsets.UTF_8
+    import scala.jdk.CollectionConverters._
     val base = Files.createTempDirectory("graft_wap_spec_").toString
     Files.write(Paths.get(base, "_constraint"),
       "o_orderkey % 10 < 8".getBytes(UTF_8))
@@ -374,6 +375,12 @@ class Round19Spec extends SparkTestBase {
     assert(!branchLog.contains("fileY"),
       "a refused staged commit must be discarded from the branch")
     assert(mainLog.contains(""""op":"conflict""""))
+    // The rollback renames its rewritten log into place: no temp sibling
+    // is left next to the two logs.
+    val logs = Files.list(Paths.get(base))
+    try assert(logs.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("_log")).toSet == Set("_log.json", "_log_wip.json"))
+    finally logs.close()
     // Re-publishing with nothing staged refuses loudly.
     val e = intercept[IllegalArgumentException] {
       operators.LakeOps.publishBranch(spark, base, "wip")
