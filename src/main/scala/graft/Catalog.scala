@@ -115,7 +115,7 @@ object Catalog {
     Memo(spark, sfDir, s"layout_$name") {
       try {
         val groups = footerGroups(spark, original)
-        val bytes = java.nio.file.Files.size(java.nio.file.Path.of(original))
+        val bytes = org.apache.commons.io.FileUtils.sizeOf(new java.io.File(original))
         if (bytes / math.max(groups, 1) <= RESPLIT_GROUP_BYTES) original
         else {
           val n = math.min(spark.sparkContext.defaultParallelism.toLong,
@@ -137,13 +137,20 @@ object Catalog {
     }
   }
 
-  /** Row-group count from the parquet footer — metadata only, no data pages
+  /** Row-group count from the parquet footers of a fixture (one file, or a
+    * Spark-written directory's part files) — metadata only, no data pages
     * touched.
     */
-  private def footerGroups(spark: SparkSession, file: String): Int = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file), spark.sessionState.newHadoopConf())
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getRowGroups.size finally r.close()
+  private def footerGroups(spark: SparkSession, fixture: String): Int = {
+    val f = new java.io.File(fixture)
+    val parts =
+      if (f.isDirectory) f.listFiles().toSeq.filter(_.getName.endsWith(".parquet"))
+      else Seq(f)
+    parts.map { p =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(p.getPath), spark.sessionState.newHadoopConf())
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try r.getRowGroups.size finally r.close()
+    }.sum
   }
 }

@@ -13,7 +13,8 @@ import org.apache.spark.sql.DataFrame
   */
 object Rounds {
 
-  /** The eager local checkpoint that ends a round (and every memo leaf).
+  /** The eager local checkpoint that ends a round, pins a memo leaf or a
+    * stream run's result: the engine's only one.
     *
     * Iterative lineage otherwise grows the logical plan every round (a
     * 14-round min-label chain OOM-ed the planner just printing the plan);

@@ -588,29 +588,29 @@ object Aggregations extends QueryPack {
   /** Mergeable KLL quantile sketch pipeline — capability only; the
     * percentile analogue of [[aggSketchHll]] (added round 10). Spark's own
     * `percentile_approx` answers one query per scan; this builds per-group
-    * KLL sketches (custom TypedImperativeAggregate over the Datasketches
-    * library Spark already ships — `graft_kll_agg`, injected via
-    * GraftExtensions) whose binary column is MERGEABLE: the ALL row comes
-    * from `graft_kll_merge_agg` over the stored sketches, never
-    * re-touching raw rows, and KLL's ±ε rank-error guarantee survives any
-    * merge topology — the property that lets 100 TB percentile rollups
-    * reaggregate instead of rescan. Unit spec bounds every estimate
-    * between the exact quantiles at q∓3% (k=200 → ε≈1.65%).
+    * KLL sketches (Spark's `kll_sketch_agg_double`) whose binary column is
+    * MERGEABLE: the ALL row comes from `kll_merge_agg_double` over the
+    * stored sketches, never re-touching raw rows, and KLL's ±ε rank-error
+    * guarantee survives any merge topology — the property that lets 100 TB
+    * percentile rollups reaggregate instead of rescan. Unit spec bounds
+    * every estimate between the exact quantiles at q∓3% (k=200 → ε≈1.65%).
+    * An all-NULL group would raise `KLL_INVALID_INPUT_SKETCH_BUFFER` at
+    * extraction; `events.value` has no NULLs in any fixture generation.
     */
   private def aggSketchKll(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val perType = Catalog.load(spark, sfDir, "events")
       .groupBy($"event_type")
-      .agg(expr("graft_kll_agg(value, 200)").as("sk"))
+      .agg(expr("kll_sketch_agg_double(value, 200)").as("sk"))
       .cache()
     val perTypeQ = perType.select($"event_type",
-      expr("graft_kll_quantile(sk, 0.5d)").as("p50_value"),
-      expr("graft_kll_quantile(sk, 0.95d)").as("p95_value"))
+      expr("kll_sketch_get_quantile_double(sk, 0.5d)").as("p50_value"),
+      expr("kll_sketch_get_quantile_double(sk, 0.95d)").as("p95_value"))
     val merged = perType
-      .agg(expr("graft_kll_merge_agg(sk)").as("msk"))
+      .agg(expr("kll_merge_agg_double(sk)").as("msk"))
       .select(lit("ALL").as("event_type"),
-        expr("graft_kll_quantile(msk, 0.5d)").as("p50_value"),
-        expr("graft_kll_quantile(msk, 0.95d)").as("p95_value"))
+        expr("kll_sketch_get_quantile_double(msk, 0.5d)").as("p50_value"),
+        expr("kll_sketch_get_quantile_double(msk, 0.95d)").as("p95_value"))
     perTypeQ.union(merged).orderBy($"event_type".asc_nulls_first)
   }
 
@@ -647,8 +647,9 @@ object Aggregations extends QueryPack {
   /** Theta sketch set algebra — capability only; the audience-overlap
     * pipeline (added round 10). HLL sketches union; THETA sketches also
     * INTERSECT, so distinct-user overlap between every pair of event
-    * types comes from the 4 stored sketches — never a pairwise
-    * distinct-count over raw rows (at 100 TB: 6 self-join distinct
+    * types comes from the 4 stored sketches (Spark's `theta_sketch_agg`
+    * at its default 4096 nominal entries, `theta_intersection`) — never a
+    * pairwise distinct-count over raw rows (at 100 TB: 6 self-join distinct
     * counts collapse to one sketch pass plus driver-side set algebra).
     * Retained-hash construction is order-independent, so the estimates
     * are deterministic under any partitioning; below the sketch's k they
@@ -658,15 +659,15 @@ object Aggregations extends QueryPack {
     import spark.implicits._
     val perType = Catalog.load(spark, sfDir, "events")
       .groupBy($"event_type")
-      .agg(expr("graft_theta_agg(user_id)").as("sk"))
+      .agg(expr("theta_sketch_agg(user_id)").as("sk"))
       .cache()
     val a = perType.select($"event_type".as("type_a"), $"sk".as("sk_a"))
     val b = perType.select($"event_type".as("type_b"), $"sk".as("sk_b"))
     a.join(b, $"type_a" < $"type_b")
       .select($"type_a", $"type_b",
-        expr("graft_theta_estimate(sk_a)").as("est_users_a"),
-        expr("graft_theta_estimate(sk_b)").as("est_users_b"),
-        expr("graft_theta_intersect_estimate(sk_a, sk_b)").as("est_overlap"))
+        expr("theta_sketch_estimate(sk_a)").as("est_users_a"),
+        expr("theta_sketch_estimate(sk_b)").as("est_users_b"),
+        expr("theta_sketch_estimate(theta_intersection(sk_a, sk_b))").as("est_overlap"))
       .orderBy($"type_a".asc_nulls_first, $"type_b".asc_nulls_first)
   }
 

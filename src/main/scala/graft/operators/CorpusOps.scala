@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Catalog, Memo, Q, QueryPack}
+import graft.{Catalog, Memo, Q, QueryPack, Rounds}
 
 /** SURVEY.md §2.J3 — corpus-curation operators (added round 9): the three
   * pipeline stages between raw dedup and the training run that the §2.J/J2
@@ -426,7 +426,7 @@ object CorpusOps extends QueryPack {
     var seg = words.select($"word", $"cnt",
         concat(lit(" "),
           rtrim(regexp_replace($"word", "(.)", "$1  ")), lit(" ")).as("s"))
-      .localCheckpoint(true)
+      .transform(Rounds.cut)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     for (r <- 1 to BpeMerges) {
       val pairs = seg
@@ -451,7 +451,7 @@ object CorpusOps extends QueryPack {
       seg = seg.withColumn("s",
           call_function("replace", $"s",
             lit(s" $l  $rr "), lit(s" $l$rr ")))
-        .localCheckpoint(true)
+        .transform(Rounds.cut)
     }
     BpeModel(merges.toSeq, seg)
   }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Rounds
+
 /** Exact global ranking primitives that never funnel the data through a
   * single partition — the scale-safe replacement for `Window.orderBy(...)`
   * with no `partitionBy` (which Spark executes as one task holding the whole
@@ -79,7 +81,7 @@ object DistributedRank {
           s"ntileExactMulti: tie column '$tieCol' must be non-null — " +
             "a null tie key would be silently dropped by the tile rejoin")))
           .otherwise(col(tieCol)))
-      .localCheckpoint(true)
+      .transform(Rounds.cut)
     val allBounds = base.stat.approxQuantile(
       specs.map(_._2).toArray, quantileProbs(buckets), 0.001)
     // Each tile column is computed on an independent SLIM branch off the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Q, QueryPack}
+import graft.{Q, QueryPack, Rounds}
 import graft.Dsl._
 
 /** SURVEY.md §2.T — Geospatial operators (added round 10 batch 4): the
@@ -285,7 +285,7 @@ object GeoOps extends QueryPack {
     // labels propagate min-over-sites.
     val sites = pts.groupBy($"x", $"y")
       .agg(count(lit(1)).as("m"), min($"id").as("sid"))
-      .localCheckpoint(true)
+      .transform(Rounds.cut)
     val build = sites
       .select($"sid".as("sb"), $"x".as("bx"), $"y".as("by"), $"m".as("mb"),
         floor($"x" / DbCell).as("cx"), floor($"y" / DbCell).as("cy"))
@@ -299,7 +299,7 @@ object GeoOps extends QueryPack {
       .filter(($"ax" - $"bx") * ($"ax" - $"bx") +
         ($"ay" - $"by") * ($"ay" - $"by") <= DbEps2)
       .select($"sa", $"sb", $"mb")
-      .localCheckpoint(true)
+      .transform(Rounds.cut)
     val siteM = sites.select($"sid".as("sa"), $"m")
     // Per-point neighborhood size (self included) = sum of neighbor-site
     // multiplicities (the self site-pair carries the point's own site).

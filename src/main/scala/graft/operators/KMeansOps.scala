@@ -859,7 +859,7 @@ object KMeansOps extends QueryPack {
       .orderBy($"votes".desc, $"cand_label".asc)
     train.crossJoin(broadcast(probes))
       .select($"probe_id", $"true_label", $"cand_id", $"cand_label",
-        // Fused codegen distance (graft.plans.SqDistLong) — integer-exact
+        // Fused codegen distance (graft.plans.ArrayFold) — integer-exact
         // equal to the composed zip_with/aggregate fold, ~4x faster on
         // this |train|x|probes| scoring pass.
         expr("graft_sqdist_long(ce, pe)").as("d2"))

@@ -6,7 +6,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Catalog, Memo, Q, QueryPack}
+import graft.{Catalog, Memo, Q, QueryPack, Rounds}
 
 /** SURVEY.md §2.A — LAKEHOUSE COMMIT LOG / TIME TRAVEL (round 13
   * batch 8): the table-format read path under every modern lake table
@@ -737,7 +737,7 @@ object LakeOps extends QueryPack {
     rows.filter(pmod($"o_orderkey", lit(100)) === 42)
       .select($"o_orderkey", $"o_orderstatus",
         expr("cents div 2").as("cents"))
-      .localCheckpoint(true)
+      .transform(Rounds.cut)
   }
 
   private def mergeDir(spark: SparkSession, sfDir: String): String =
@@ -830,7 +830,7 @@ object LakeOps extends QueryPack {
     * anti-join per outstanding delta (O(base ∪ delta) shuffle, a small
     * delta broadcasts under AQE) until the nightly compactor amortizes
     * the layer away. */
-  private def morDir(spark: SparkSession, sfDir: String): String =
+  private[graft] def morDir(spark: SparkSession, sfDir: String): String =
     Memo.dir(spark, sfDir, "lake_mor") { base =>
       import spark.implicits._
       val src = mergeSeed(spark, sfDir, base)
@@ -885,9 +885,6 @@ object LakeOps extends QueryPack {
     }
   }
 
-  private[graft] def morBase(spark: SparkSession, sfDir: String): String =
-    morDir(spark, sfDir)
-
   /** EQUALITY-DELETE + ORDERED-LAYER scratch (round 17) — the remaining
     * cell of the MoR dialect matrix: per-file key DVs (q_lake_dv),
     * per-file positional DVs (q_lake_dv_positional) and table-wide
@@ -899,7 +896,7 @@ object LakeOps extends QueryPack {
     * must be PRESENT at v3 with the upserted values, so applying layers
     * in any order but the commit order breaks the hash. v4 compacts all
     * layers through the shared MoR kernel into one file (v4 ≡ v3). */
-  private def edelDir(spark: SparkSession, sfDir: String): String =
+  private[graft] def edelDir(spark: SparkSession, sfDir: String): String =
     Memo.dir(spark, sfDir, "lake_edel") { base =>
       import spark.implicits._
       val rows = ordersCents(Catalog.load(spark, sfDir, "orders"))
@@ -924,9 +921,6 @@ object LakeOps extends QueryPack {
         Seq("fileP", "fileQ", "ed1", "up1").map(LakeAction(4, "remove", _)) :+
           LakeAction(4, "add", "fileR"))
     }
-
-  private[graft] def edelBase(spark: SparkSession, sfDir: String): String =
-    edelDir(spark, sfDir)
 
   private def lakeDeleteMor(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
@@ -1059,7 +1053,7 @@ object LakeOps extends QueryPack {
       .reduce(_.unionByName(_)).distinct()
     val oldImages = morSnapshot(spark, base, vOld)
       .join(broadcast(affected), Seq("o_orderkey"))
-      .localCheckpoint(true)
+      .transform(Rounds.cut)
     val newImages = layers.foldLeft(oldImages: DataFrame) {
       case (acc, (kind, d)) =>
         val layer = spark.read.parquet(s"$base/$d")
@@ -1222,7 +1216,7 @@ object LakeOps extends QueryPack {
     * pattern) and the deletes are file-system metadata ops; no data scan.
     */
 
-  private def vacuumDir(spark: SparkSession, sfDir: String): String =
+  private[graft] def vacuumDir(spark: SparkSession, sfDir: String): String =
     Memo.dir(spark, sfDir, "lake_vac") { base =>
       writeOrderSlices(spark, sfDir, base)
       commit(logPath(base), 0, Seq(LakeAction(1, "add", "fileA"),
@@ -1536,7 +1530,7 @@ object LakeOps extends QueryPack {
     * fork-diverge-rollback story in one hash.
     */
 
-  private def cloneDir(spark: SparkSession, sfDir: String): String =
+  private[graft] def cloneDir(spark: SparkSession, sfDir: String): String =
     Memo.dir(spark, sfDir, "lake_clone") { base =>
       val src = lakeDir(spark, sfDir)
       commit(logPath(base), 0, tableLog(src).filter(_.v <= 4))
@@ -1601,7 +1595,7 @@ object LakeOps extends QueryPack {
     * never rewrite history to repartition.
     */
 
-  private def partDir(spark: SparkSession, sfDir: String): String =
+  private[graft] def partDir(spark: SparkSession, sfDir: String): String =
     Memo.dir(spark, sfDir, "lake_pe") { base =>
       import spark.implicits._
       val orders = Catalog.load(spark, sfDir, "orders")
@@ -1649,7 +1643,7 @@ object LakeOps extends QueryPack {
     * scan; retry cost is re-validation, not re-write. The protocol is
     * [[commit]]'s own: B's stale attempt is exactly its refusal.
     */
-  private def occDir(spark: SparkSession, sfDir: String): String =
+  private[graft] def occDir(spark: SparkSession, sfDir: String): String =
     Memo.dir(spark, sfDir, "lake_occ") { base =>
       val orders = Catalog.load(spark, sfDir, "orders")
       orders.filter(orderSlot < 2).write.parquet(s"$base/fileBase")
@@ -1753,7 +1747,7 @@ object LakeOps extends QueryPack {
     * resolution O(tail) in I/O and parse, not just in replay (the log is
     * version-ordered append-only, so the offset stays valid as commits
     * land after it). */
-  private def writeCheckpoint(base: String, v: Int): Unit = {
+  private[graft] def writeCheckpoint(base: String, v: Int): Unit = {
     val st = fullState(base, v)
     val acts = st.live.map { p =>
       LakeAction(v, "add", p, minKey = st.zones.get(p).map(_._1),
@@ -1825,7 +1819,7 @@ object LakeOps extends QueryPack {
   /** Checkpointed state resolution: newest checkpoint ≤ v + tail replay.
     * Returns (state, checkpoint version used — 0 if none, tail action
     * count actually replayed). */
-  private def ckptState(base: String, v: Int): (LakeState, Int, Int) = {
+  private[graft] def ckptState(base: String, v: Int): (LakeState, Int, Int) = {
     val cands = Option(new java.io.File(base).listFiles())
       .getOrElse(Array.empty).map(_.getName)
       .collect { case ckptNameRe(n) => n.toInt }.filter(_ <= v)
@@ -1838,7 +1832,7 @@ object LakeOps extends QueryPack {
     (replayActions(init, tail), cv, tail.size)
   }
 
-  private def ckptDir(spark: SparkSession, sfDir: String): String =
+  private[graft] def ckptDir(spark: SparkSession, sfDir: String): String =
     Memo.dir(spark, sfDir, "lake_ckpt") { base =>
       import spark.implicits._
       val orders = Catalog.load(spark, sfDir, "orders")
@@ -2335,7 +2329,7 @@ object LakeOps extends QueryPack {
       import spark.implicits._
       val slice = ordersCents(Catalog.load(spark, sfDir, "orders")
         .filter($"o_orderpriority" === "1-URGENT"))
-        .localCheckpoint(true)
+        .transform(Rounds.cut)
       val fcol = pmod($"o_orderkey", lit(BloomFiles.toLong))
       val hexes = bloomHexes(slice, fcol, "o_orderkey")
       val baseAdds = (0 until BloomFiles).map { i =>
@@ -2527,7 +2521,7 @@ object LakeOps extends QueryPack {
     * never a driver-side row loop. */
   private val ConstraintSql = "o_orderkey % 10 < 8"
 
-  private def constrDir(spark: SparkSession, sfDir: String): String =
+  private[graft] def constrDir(spark: SparkSession, sfDir: String): String =
     Memo.dir(spark, sfDir, "lake_constr") { base =>
       import spark.implicits._
       Files.write(Paths.get(base, "_constraint"),
@@ -2579,12 +2573,6 @@ object LakeOps extends QueryPack {
       CAST(0 AS BIGINT) AS n_violations_live
     FROM orders WHERE o_orderkey % 10 < 8
     ORDER BY n_commits_ok ASC NULLS FIRST"""
-
-  /** Spec hooks: the constraint table's dir (log content pins: the
-    * refused batch left a conflict audit and NO data file). */
-  private[graft] def constraintsBase(spark: SparkSession,
-                                     sfDir: String): String =
-    constrDir(spark, sfDir)
 
   // ---- WRITE-AUDIT-PUBLISH via branch refs (round 19) ----
 
@@ -2698,7 +2686,7 @@ object LakeOps extends QueryPack {
     }.reduce((a, b) => a.unionByName(b))
   }
 
-  private def colmapDir(spark: SparkSession, sfDir: String): String =
+  private[graft] def colmapDir(spark: SparkSession, sfDir: String): String =
     Memo.dir(spark, sfDir, "lake_cmap") { base =>
       import spark.implicits._
       val orders = ordersCents(Catalog.load(spark, sfDir, "orders"))
@@ -2756,10 +2744,6 @@ object LakeOps extends QueryPack {
     FROM orders WHERE o_orderkey % 10 < 8
     GROUP BY 1
     ORDER BY order_state ASC NULLS FIRST"""
-
-  /** Spec hook. */
-  private[graft] def colmapBase(spark: SparkSession, sfDir: String): String =
-    colmapDir(spark, sfDir)
 
   private def wapDir(spark: SparkSession, sfDir: String): String =
     Memo.dir(spark, sfDir, "lake_wap") { base =>
@@ -2870,7 +2854,7 @@ object LakeOps extends QueryPack {
     * Scale: same merge-on-read economics as key DVs — O(file ∪ dv) per
     * masked file, |dv| cost per delete until compaction folds it in. */
 
-  private def posDvDir(spark: SparkSession, sfDir: String): String =
+  private[graft] def posDvDir(spark: SparkSession, sfDir: String): String =
     Memo.dir(spark, sfDir, "lake_pdv") { base =>
       import spark.implicits._
       val slice = Catalog.load(spark, sfDir, "orders")
@@ -2931,10 +2915,7 @@ object LakeOps extends QueryPack {
     readState(spark, base, planned, st.dvs, schemaFiles = st.live)
   }
 
-  /** Spec hooks for the positional-DV table. */
-  private[graft] def posDvBase(spark: SparkSession, sfDir: String): String =
-    posDvDir(spark, sfDir)
-
+  /** Spec hook: snapshot read of the positional-DV table. */
   private[graft] def posDvSnapshot(spark: SparkSession, sfDir: String,
                                    v: Int): DataFrame =
     readSnapshot(spark, posDvDir(spark, sfDir), v)
@@ -3124,18 +3105,10 @@ object LakeOps extends QueryPack {
     SELECT 5, 4, 1, n_rows, key_sum FROM sel
     ORDER BY version ASC NULLS FIRST"""
 
-  /** Spec hook: the cluster table's base dir. */
-  private[graft] def clusterBase(spark: SparkSession, sfDir: String): String =
-    clusterDir(spark, sfDir)
-
   /** Spec hook: zones of the cluster table's live files at `v`. */
   private[graft] def clusterZonesAt(spark: SparkSession, sfDir: String,
       v: Int): Map[String, (Long, Long)] =
     fullState(clusterDir(spark, sfDir), v).zones
-
-  /** Spec hook: the checkpoint table's base dir. */
-  private[graft] def checkpointBase(spark: SparkSession, sfDir: String): String =
-    ckptDir(spark, sfDir)
 
   /** Spec hook: checkpointed resolution at v → (live files, dv map,
     * checkpoint version used, tail actions replayed). */
@@ -3144,14 +3117,6 @@ object LakeOps extends QueryPack {
     val (st, cv, n) = ckptState(ckptDir(spark, sfDir), v)
     (st.live, st.dvs, cv, n)
   }
-
-  /** Spec hooks (round 18): raw checkpoint write/resolve on an ARBITRARY
-    * table dir — lets the spec pin that file AND layer blooms survive a
-    * checkpoint-resolved read (the scaladoc claim on writeCheckpoint). */
-  private[graft] def writeCheckpointFor(base: String, v: Int): Unit =
-    writeCheckpoint(base, v)
-  private[graft] def ckptStateFor(base: String, v: Int)
-      : (LakeState, Int, Int) = ckptState(base, v)
 
   /** Spec hook: FULL-replay resolution at v on the checkpoint table. */
   private[graft] def fullStateAt(spark: SparkSession, sfDir: String,
@@ -3174,23 +3139,6 @@ object LakeOps extends QueryPack {
     readState(spark, base, st.live, st.dvs, schemaFiles = st.everAdded)
       .filter($"o_orderkey" <= hi)
   }
-
-  /** Spec hook: the OCC table's base dir. */
-  private[graft] def occBase(spark: SparkSession, sfDir: String): String =
-    occDir(spark, sfDir)
-
-  /** Spec hook: the partition-evolution table's base dir. */
-  private[graft] def partitionEvolutionBase(spark: SparkSession,
-                                            sfDir: String): String =
-    partDir(spark, sfDir)
-
-  /** Spec hook: the clone table's base dir. */
-  private[graft] def cloneBase(spark: SparkSession, sfDir: String): String =
-    cloneDir(spark, sfDir)
-
-  /** Spec hook: the vacuum table's base dir (post-vacuum). */
-  private[graft] def vacuumBase(spark: SparkSession, sfDir: String): String =
-    vacuumDir(spark, sfDir)
 
   /** Spec hook: snapshot read of the time-travel table (DV + schema
     * reconciliation applied). */

@@ -443,7 +443,7 @@ object LlmExtras extends QueryPack {
     // hash aggregations; the first r9 form folded with zip_with/aggregate —
     // higher-order functions never enter whole-stage codegen, and their
     // interpreted eval was stack-sampled at 95 s in the single scan task
-    // when the JIT hadn't warmed it ([[graft.plans.DotProductDouble]]).
+    // when the JIT hadn't warmed it ([[graft.plans.ArrayFold]]).
     // The plane weights are row-INVARIANT (LCG on b*64+pos, dim fixed at
     // 64 for this op family), so they belong in a literal, not a per-row
     // `transform(sequence(...))` rebuild. Same index-order double

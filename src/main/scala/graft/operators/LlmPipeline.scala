@@ -322,7 +322,7 @@ object LlmPipeline extends QueryPack {
     val cands = e.select($"vec_id".as("cand_id"), $"embedding".as("cand_emb"))
     // Rank on the ROUNDED cosine (ties broken by cand_id) so ordering is
     // invariant to last-bit summation differences across engines. The hot
-    // path uses the native codegen'd expression (graft.plans.CosineSimilarity,
+    // path uses the native codegen'd expression (graft.plans.ArrayFold,
     // registered in Sessions) — same index-order double accumulation as the
     // composed zip_with/aggregate form, so results are bit-identical.
     val scored = cands.join(broadcast(probes), $"cand_id" =!= $"probe_id")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Q, QueryPack}
+import graft.{Q, QueryPack, Rounds}
 import graft.Dsl._
 
 /** SURVEY.md §2.J3 — HISTOGRAM-BASED SPLIT FINDING (round 13): the
@@ -179,7 +179,7 @@ object MlTrees extends QueryPack {
     */
   private def treeDepth2(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val base = featureBase(spark, sfDir).localCheckpoint(true)
+    val base = featureBase(spark, sfDir).transform(Rounds.cut)
     val root = bestPerNode(nodeCandidates(base.withColumn("node", lit("root"))))
     val routed = base.crossJoin(broadcast(
         root.select($"feature".as("bf"), $"thr".as("bt"))))
@@ -266,7 +266,7 @@ object MlTrees extends QueryPack {
     val base = featureBase(spark, sfDir)
       .select(($"pos" * 2 - 1).as("y"),
         $"f_month".as("x1"), $"f_nation".as("x2"), $"f_balbin".as("x3"))
-      .localCheckpoint(true)
+      .transform(Rounds.cut)
     // One epoch: margin under the incoming weights, batch update from
     // the misclassified set (margin <= 0), weights advance by the sums.
     // Conditional sums (not a filter) so a fully-separated epoch still
@@ -285,9 +285,9 @@ object MlTrees extends QueryPack {
             .as("w3"),
           sum(when($"mis", 1L).otherwise(0L)).as("n_mis"))
     val w0 = Seq((0L, 0L, 0L, 0L)).toDF("w0", "w1", "w2", "w3")
-    val e1 = epoch(w0).localCheckpoint(true)
-    val e2 = epoch(e1.drop("n_mis")).localCheckpoint(true)
-    val e3 = epoch(e2.drop("n_mis")).localCheckpoint(true)
+    val e1 = epoch(w0).transform(Rounds.cut)
+    val e2 = epoch(e1.drop("n_mis")).transform(Rounds.cut)
+    val e3 = epoch(e2.drop("n_mis")).transform(Rounds.cut)
     e1.withColumn("epoch", lit(1L))
       .unionByName(e2.withColumn("epoch", lit(2L)))
       .unionByName(e3.withColumn("epoch", lit(3L)))
@@ -434,11 +434,11 @@ object MlTrees extends QueryPack {
     */
   private def mlBoostStump(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val base0 = featureBase2(spark, sfDir).localCheckpoint(true)
+    val base0 = featureBase2(spark, sfDir).transform(Rounds.cut)
     val f0 = base0.agg(expr("sum(y) div count(1)").as("f0"))
     var resid = base0.crossJoin(broadcast(f0))
       .select($"f_month", $"f_nation", $"f_balbin", ($"y" - $"f0").as("r"))
-      .localCheckpoint(true)
+      .transform(Rounds.cut)
     val rounds = (1 to 2).map { k =>
       val hist = resid
         .select(explode(array(
@@ -470,7 +470,7 @@ object MlTrees extends QueryPack {
                   else -((-sl) div nl) end""").as("vl"),
           expr("""case when sr >= 0 then sr div nr
                   else -((-sr) div nr) end""").as("vr"))
-        .localCheckpoint(true)
+        .transform(Rounds.cut)
       resid = resid.crossJoin(broadcast(
           best.select($"feature".as("bf"), $"thr".as("bt"),
             $"vl".as("bvl"), $"vr".as("bvr"))))
@@ -479,7 +479,7 @@ object MlTrees extends QueryPack {
             .when($"bf" === "nation", $"f_nation")
             .otherwise($"f_balbin") <= $"bt", $"bvl").otherwise($"bvr"))
             .as("r"))
-        .localCheckpoint(true)
+        .transform(Rounds.cut)
       val sse = resid.agg(
         expr("CAST(sum(CAST(r AS DECIMAL(38,0)) * r) AS BIGINT)")
           .as("sse_after"))

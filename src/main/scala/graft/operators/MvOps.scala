@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Catalog, Memo, Q, QueryPack}
+import graft.{Catalog, Memo, Q, QueryPack, Rounds}
 import graft.plans.MvAggregateRewrite
 
 /** SURVEY.md §2.M — materialized-view aggregate rewrite (added round 12
@@ -35,7 +35,7 @@ object MvOps extends QueryPack {
           month($"l_shipdate").cast("long").as("mon"))
         .agg(count(lit(1)).as("cnt"),
           sum($"l_quantity".cast("long")).as("sqty"))
-        .localCheckpoint(true)
+        .transform(Rounds.cut)
       val out = mv.queryExecution.analyzed.output
       MvAggregateRewrite.register(appId, pathKey,
         MvAggregateRewrite.Entry(mv.queryExecution.analyzed,

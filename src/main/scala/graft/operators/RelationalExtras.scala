@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Catalog, Memo, Oracle, Q, QueryPack}
+import graft.{Catalog, Memo, Oracle, Q, QueryPack, Rounds}
 import graft.Dsl._
 
 /** SURVEY.md §2.M — relational depth (added round 4): bucketed co-located
@@ -98,7 +98,7 @@ object RelationalExtras extends QueryPack {
       // Eager execution UNDER the conf (the streaming-sink convention:
       // localCheckpoint pins the result as a leaf), so the conf never
       // leaks into the rest of the suite's planning.
-      df.localCheckpoint(true)
+      Rounds.cut(df)
     } finally old.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)

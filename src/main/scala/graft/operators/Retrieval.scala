@@ -318,7 +318,7 @@ object Retrieval extends QueryPack {
     val probes = q.filter($"vec_id" < 10)
       .select($"vec_id".as("probe_id"), $"qvec".as("probe_q"))
     val cands = q.select($"vec_id".as("cand_id"), $"qvec".as("cand_q"))
-    // graft_dot_long (plans.DotProductLong): one fused codegen'd loop —
+    // graft_dot_long (plans.ArrayFold): one fused codegen'd loop —
     // the composed zip_with/aggregate form is CodegenFallback and allocates
     // the product array per pair. Integer sum ⇒ identical results.
     val scored = cands.join(broadcast(probes), $"cand_id" =!= $"probe_id")

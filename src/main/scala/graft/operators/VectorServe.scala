@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Catalog, Memo, Q, QueryPack}
+import graft.{Catalog, Memo, Q, QueryPack, Rounds}
 
 /** SURVEY.md §2.J — the composed vector-serving endgame (round 13): the
   * two index halves trained in rounds 12 ([[KMeansOps]] IVF cells,
@@ -304,7 +304,7 @@ object VectorServe extends QueryPack {
   private[graft] def hnswDirectedLeaf(spark: SparkSession,
                                       sfDir: String): DataFrame =
     Memo.leaf(spark, sfDir, "hnswKnnDir") {
-      hnswDirectedPlan(spark, sfDir, _.localCheckpoint(true))
+      hnswDirectedPlan(spark, sfDir, Rounds.cut)
     }
 
   private[graft] def hnswGraphLeaf(spark: SparkSession,
@@ -327,7 +327,7 @@ object VectorServe extends QueryPack {
     * symmetrize is the returned frame).
     */
   private[graft] def hnswBuildPlan(spark: SparkSession, sfDir: String,
-      stage: DataFrame => DataFrame = _.localCheckpoint(true)): DataFrame = {
+      stage: DataFrame => DataFrame = Rounds.cut): DataFrame = {
     import spark.implicits._
     // SYMMETRIZE (the hnswlib bidirectional-link step): a kNN digraph
     // strands vectors nothing points AT; undirected edges restore the
@@ -580,7 +580,7 @@ object VectorServe extends QueryPack {
     // does not replay the walk.
     var beam = trim(score(probes.select($"probe_id").crossJoin(entries)),
       HnswBeam).select($"probe_id", $"cand_id", $"d2")
-      .localCheckpoint(true)
+      .transform(Rounds.cut)
     (1 to HnswRounds).foreach { _ =>
       val expanded = broadcast(beam)
         .join(graph, beam("cand_id") === graph("src"))
@@ -590,7 +590,7 @@ object VectorServe extends QueryPack {
       beam = trim(score(expanded)
           .unionByName(beam.select($"probe_id", $"cand_id", $"d2")),
         HnswBeam).select($"probe_id", $"cand_id", $"d2")
-        .localCheckpoint(true)
+        .transform(Rounds.cut)
     }
     trim(beam.filter($"cand_id" =!= $"probe_id"), HnswK)
       .select($"probe_id", $"rn".cast("long").as("rank"), $"cand_id", $"d2")

@@ -12,7 +12,7 @@ import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, LongType}
 
 /** Mergeable frequent-items (heavy-hitters) sketch — the third member of
-  * the sketch family next to [[KllSketchAgg]] (quantiles) and the HLL
+  * the sketch family next to KLL (quantiles) and the HLL
   * pipeline (distinct counts), over the same Datasketches library Spark
   * ships. Misra-Gries-style: `graft_freq_agg(key, maxMapSize)` aggregates
   * longs into a serialized sketch whose estimates obey

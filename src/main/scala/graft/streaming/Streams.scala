@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, TimeMode, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.{Catalog, Memo, Q, QueryPack}
+import graft.{Catalog, Memo, Q, QueryPack, Rounds}
 import graft.Dsl._
 import graft.operators.LakeOps
 
@@ -136,7 +136,7 @@ object Streams extends QueryPack {
   /** One streaming run's lifecycle, shared by every graded run below.
     * Scratch dirs come from [[graft.Memo]] and are all deleted when the
     * run ends, failed or not; [[Run.await]] is the one place a query
-    * starts and waits. A run pins its result (`localCheckpoint(true)`)
+    * starts and waits. A run pins its result (`Rounds.cut`)
     * before it returns: Dataset construction analyzes eagerly, so the
     * returned plan reads the pinned rows, not the deleted sink files, and
     * repeated bench rounds in one JVM accumulate no sink tables or temp
@@ -189,7 +189,7 @@ object Streams extends QueryPack {
       try {
         await(df.writeStream.format("memory").queryName(sink)
           .outputMode("append"))
-        finish(s.table(sink)).localCheckpoint(true)
+        finish(s.table(sink)).transform(Rounds.cut)
       } finally s.catalog.dropTempView(sink)
     }
   }
@@ -280,7 +280,7 @@ object Streams extends QueryPack {
     withRun(tag) { run =>
       val s = stateSession(spark, rocksDb = rocksDb)
       run.await(pipe(s, run).writeStream.outputMode(mode).foreachBatch(run.land))
-      merge(spark.read.parquet(run.out.toString)).localCheckpoint(true)
+      merge(spark.read.parquet(run.out.toString)).transform(Rounds.cut)
     }
 
   /** Each key's row from the latest landed batch: per-key cumulative
@@ -306,7 +306,7 @@ object Streams extends QueryPack {
       batch: DataFrame, bloomKey: Option[String] = None): Unit = {
     val log = LakeOps.logPath(lake.toString)
     if (!(Files.exists(log) && LakeOps.readActions(log).exists(_.path == rel))) {
-      val b = if (bloomKey.isDefined) batch.localCheckpoint(true) else batch
+      val b = if (bloomKey.isDefined) Rounds.cut(batch) else batch
       b.write.mode("overwrite").parquet(lake.resolve(rel).toString)
       val bloom = bloomKey.map(k => LakeOps.bloomHexes(b, lit(0L), k)
         .getOrElse(0L, LakeOps.emptyBloomHex))
@@ -521,7 +521,7 @@ object Streams extends QueryPack {
       runOnce() // run 2: resumes from the shared checkpoint
       // Pin the merged sink rows before the run deletes its scratch. The
       // memoized stage dir is NOT deleted — other queries share it.
-      val merged = spark.read.parquet(run.out.toString).localCheckpoint(true)
+      val merged = spark.read.parquet(run.out.toString).transform(Rounds.cut)
       val n2 = merged.count()
       require(n1 > 0 && n2 > n1,
         s"restart run not productive in both phases: run1=$n1 total=$n2")
@@ -946,7 +946,7 @@ object Streams extends QueryPack {
         .agg(count(lit(1)).as("n_events"), dsum($"value").as("total_value"),
           countDistinct($"user_id").as("n_users"))
         .orderBy($"event_type".asc_nulls_first)
-        .localCheckpoint(true)
+        .transform(Rounds.cut)
     }
 
   private val streamLakeSinkSql = s"""
@@ -1019,7 +1019,7 @@ object Streams extends QueryPack {
         .select($"o_orderstatus", $"n_rows", $"cents_sum",
           lit(nDeltas.toLong).as("n_deltas"))
         .orderBy($"o_orderstatus".asc_nulls_first)
-        .localCheckpoint(true)
+        .transform(Rounds.cut)
     }
 
   private val streamLakeMorSql = """
@@ -1077,7 +1077,7 @@ object Streams extends QueryPack {
       val feed = rows.filter(pmod($"o_orderkey", lit(100)).isin(13L, 57L))
         .select($"o_orderkey", $"o_orderstatus",
           expr("cents div 3").as("cents"))
-        .localCheckpoint(true)
+        .transform(Rounds.cut)
       // Deterministic class staging: one file per key-residue class so each
       // micro-batch (maxFilesPerTrigger=1) is a relationally-statable set.
       (0 until 4).foreach { i =>
@@ -1121,7 +1121,7 @@ object Streams extends QueryPack {
           lit(nApplied.toLong).as("n_deltas_applied"),
           $"n_rows", $"cents_sum")
         .orderBy($"n_deltas".asc_nulls_first)
-        .localCheckpoint(true)
+        .transform(Rounds.cut)
     }
 
   private val streamLakeBloomSql: String = {
@@ -1345,7 +1345,7 @@ object Streams extends QueryPack {
       .agg(max(col("n_events")).as("n_events"),
         max(col("expiry_ms")).as("expiry_ms"))
       .orderBy(col("user_id").asc_nulls_first)
-      .localCheckpoint(true)
+      .transform(Rounds.cut)
   }
 
   private val streamTwsTimerSql = """
@@ -1471,7 +1471,7 @@ object Streams extends QueryPack {
       landStaged(stage, "late", run.src, "late", 0L)
       runOnce() // run 2: resumes the RocksDB state from the checkpoint
       val merged = twsCountMerge(spark.read.parquet(run.out.toString))
-        .localCheckpoint(true)
+        .transform(Rounds.cut)
       require(n1 > 0 && spark.read.parquet(run.out.toString).count() > n1,
         s"tws restart not productive in both phases (run1=$n1)")
       merged
@@ -1671,7 +1671,7 @@ object Streams extends QueryPack {
         .agg(count(lit(1)).as("n_rows"),
           sum($"o_orderkey").cast("long").as("key_sum"))
         .orderBy($"o_orderpriority".asc_nulls_first)
-        .localCheckpoint(true)
+        .transform(Rounds.cut)
       cdcApplyMat.set(matDir.toString)
       out
     }
@@ -1709,7 +1709,7 @@ object Streams extends QueryPack {
       runOnce() // run 1: first four commits; terminates = the "kill"
       land(5 to 7)
       runOnce() // run 2: resumes from the shared checkpoint
-      cdfMerge(spark.read.parquet(run.out.toString)).localCheckpoint(true)
+      cdfMerge(spark.read.parquet(run.out.toString)).transform(Rounds.cut)
     }
 
   /** Head-snapshot state per priority: the v7 restore leaves exactly

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** `Catalog.sql`: bare fixture names in SQL text bind through
-  * `Catalog.load`, wherever in the statement they appear.
+  * `Catalog.load`, wherever in the statement they appear; and `load` itself
+  * on a Spark-written directory fixture.
   */
 class CatalogSqlSpec extends SparkTestBase {
   import spark.implicits._
@@ -74,5 +75,20 @@ class CatalogSqlSpec extends SparkTestBase {
       Catalog.sql(spark, sf0001, "SELECT * FROM no_such_table")
     }
     assert(e.getCondition == "TABLE_OR_VIEW_NOT_FOUND")
+  }
+
+  test("load sizes a multi-file directory fixture without a layout failure") {
+    val dir = Memo.tempDir("dir_fixture")
+    try {
+      val orders = Catalog.load(spark, sf0001, "orders")
+      orders.repartition(3).write.parquet(Catalog.file(dir.toString, "orders"))
+      val err = new java.io.ByteArrayOutputStream()
+      val saved = System.err
+      System.setErr(new java.io.PrintStream(err, true))
+      val n = try Catalog.load(spark, dir.toString, "orders").count()
+        finally System.setErr(saved)
+      assert(n == orders.count())
+      assert(!err.toString.contains("[catalog] layout"), err.toString)
+    } finally Memo.rmTree(dir)
   }
 }

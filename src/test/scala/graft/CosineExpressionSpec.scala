@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** The native CosineSimilarity expression must be a drop-in replacement for
-  * the composed zip_with/aggregate formulation: bit-identical doubles
-  * (same index-order accumulation), null-safe, and codegen-compatible.
+/** The native array folds (`graft_cosine`, `graft_dot`, `graft_dot_long`,
+  * `graft_sqdist_long`) must be drop-in replacements for the composed
+  * zip_with/aggregate formulation: bit-identical doubles (same index-order
+  * accumulation), null-safe, and codegen-compatible.
   */
 class CosineExpressionSpec extends SparkTestBase {
   import spark.implicits._
@@ -63,6 +64,27 @@ class CosineExpressionSpec extends SparkTestBase {
       .orderBy($"id").collect()
     assert(rl(0).isNullAt(1) && rl(0).isNullAt(2))
     assert(rl(1).getLong(1) == 23L && rl(1).getLong(2) == 23L)
+  }
+
+  test("ragged arrays yield NULL in every fold, like the composed zip_with fold") {
+    // zip_with pads the shorter array with NULLs, so the composed fold is
+    // NULL. A local relation is folded at planning (interpreted eval); the
+    // RDD scan runs the codegen path.
+    val local = Seq(
+      (Array(1.0f, 2.0f), Array(1.0f, 2.0f, 3.0f), Array(1L, 2L), Array(1L, 2L, 3L)),
+      (Array(1.0f, 2.0f, 3.0f), Array(1.0f), Array(4L, 5L, 6L), Array(4L)))
+      .toDF("a", "b", "la", "lb")
+    val scan = spark.createDataFrame(local.rdd, local.schema)
+    Seq(local, scan).foreach { df =>
+      val r = df.select(
+        expr("graft_cosine(a, b)"), expr("graft_dot(a, b)"),
+        expr("graft_dot_long(la, lb)"), expr("graft_sqdist_long(la, lb)"),
+        hofCosine($"a", $"b"),
+        aggregate(zip_with($"la", $"lb", (p, q) => p * q), lit(0L), (acc, v) => acc + v))
+        .collect()
+      assert(r.length == 2 && r.forall(row => (0 until 6).forall(row.isNullAt)),
+        r.mkString("; "))
+    }
   }
 
   test("identical vectors give cosine 1.0") {

@@ -13,18 +13,24 @@ class Round13QSpec extends SparkTestBase {
       .select($"vec_id",
         transform($"embedding",
           v => floor(v.cast("double") * lit(1000000d)).cast("long")).as("e"))
-    val pair = q.as("a").join(q.as("b"), $"a.vec_id" < $"b.vec_id")
+    val joined = q.as("a").join(q.as("b"), $"a.vec_id" < $"b.vec_id")
       .limit(500)
-      .select(
-        expr("graft_sqdist_long(a.e, b.e)").as("fused"),
-        aggregate(zip_with($"a.e", $"b.e", (x, y) => (x - y) * (x - y)),
-          lit(0L), _ + _).as("composed"))
+    val pair = joined.select(
+      expr("graft_sqdist_long(a.e, b.e)").as("fused"),
+      aggregate(zip_with($"a.e", $"b.e", (x, y) => (x - y) * (x - y)),
+        lit(0L), _ + _).as("composed"))
     assert(pair.filter($"fused" =!= $"composed").count() == 0)
     assert(pair.count() == 500)
     // Null element propagates null, like the composed fold.
     val r = spark.sql(
       "SELECT graft_sqdist_long(array(1L, NULL), array(1L, 2L))").head()
     assert(r.isNullAt(0))
+    // So do ragged arrays: zip_with pads the shorter one with NULLs.
+    val ragged = joined.select(
+      expr("graft_sqdist_long(a.e, slice(b.e, 1, 3))").as("fused"),
+      aggregate(zip_with($"a.e", slice($"b.e", 1, 3), (x, y) => (x - y) * (x - y)),
+        lit(0L), _ + _).as("composed"))
+    assert(ragged.filter($"fused".isNotNull || $"composed".isNotNull).count() == 0)
   }
 
   test("q_join_pit_multi: no feature from the future; outer arm is real") {

@@ -63,7 +63,7 @@ class Round14BSpec extends SparkTestBase {
 
   test("occ: the conflict is audited and both writers' files are live once") {
     SparkEntry.queries("q_lake_occ")(spark, sf0001).count()
-    val base = operators.LakeOps.occBase(spark, sf0001)
+    val base = operators.LakeOps.occDir(spark, sf0001)
     val log = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(base, "_log.json")), "UTF-8")
     assert(log.contains(""""op":"conflict""""), "rejected attempt must be audited")
@@ -93,7 +93,7 @@ class Round14BSpec extends SparkTestBase {
 
   test("partition evolution: each slice keeps its own hive layout on disk") {
     SparkEntry.queries("q_lake_partition_evolution")(spark, sf0001).count()
-    val base = operators.LakeOps.partitionEvolutionBase(spark, sf0001)
+    val base = operators.LakeOps.partDir(spark, sf0001)
     def dirs(p: String): Seq[String] =
       new java.io.File(s"$base/$p").listFiles()
         .filter(_.isDirectory).map(_.getName).sorted.toSeq
@@ -126,7 +126,7 @@ class Round14BSpec extends SparkTestBase {
 
   test("shallow clone is zero-copy: the clone dir holds only metadata") {
     SparkEntry.queries("q_lake_clone")(spark, sf0001).count()
-    val base = operators.LakeOps.cloneBase(spark, sf0001)
+    val base = operators.LakeOps.cloneDir(spark, sf0001)
     val entries = new java.io.File(base).listFiles().map(_.getName).sorted.toSeq
     assert(entries === Seq("_log.json", "_source"),
       s"clone dir must hold only the log and the source pointer: $entries")
@@ -147,7 +147,7 @@ class Round14BSpec extends SparkTestBase {
 
   test("vacuum removes exactly the dead file and pre-horizon travel refuses") {
     SparkEntry.queries("q_lake_vacuum")(spark, sf0001).count()
-    val base = operators.LakeOps.vacuumBase(spark, sf0001)
+    val base = operators.LakeOps.vacuumDir(spark, sf0001)
     val names = new java.io.File(base).listFiles()
       .filter(_.isDirectory).map(_.getName).sorted.toSeq
     assert(names === Seq("fileB", "fileC"), s"on-disk after vacuum: $names")

@@ -47,7 +47,7 @@ class Round15Spec extends SparkTestBase {
 
   test("checkpoint files exist at the declared cadence") {
     SparkEntry.queries("q_lake_checkpoint")(spark, sf0001).count()
-    val base = operators.LakeOps.checkpointBase(spark, sf0001)
+    val base = operators.LakeOps.ckptDir(spark, sf0001)
     Seq(5, 10).foreach { v =>
       assert(java.nio.file.Files.exists(
         java.nio.file.Paths.get(base, s"_ckpt.v$v.json")),
@@ -233,7 +233,7 @@ class Round15Spec extends SparkTestBase {
 
   test("zone maps survive the compaction and re-add commits") {
     SparkEntry.queries("q_lake_checkpoint")(spark, sf0001).count()
-    val base = operators.LakeOps.checkpointBase(spark, sf0001)
+    val base = operators.LakeOps.ckptDir(spark, sf0001)
     // file_9's zone must cover both compacted inputs: its min is the
     // table minimum (bucket 0's min).
     val mins = spark.read.parquet(s"$base/file_9")

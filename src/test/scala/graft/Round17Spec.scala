@@ -19,7 +19,7 @@ class Round17Spec extends SparkTestBase {
   // ---- q_lake_merge_mor (VERDICT r16 task 1) ----
 
   test("mor merge: the upsert commit writes ONLY a delta file") {
-    val base = operators.LakeOps.morBase(spark, sf0001)
+    val base = operators.LakeOps.morDir(spark, sf0001)
     val log = new String(Files.readAllBytes(Paths.get(base, "_log.json")))
       .split("\n").toSeq
     val v2 = log.filter(_.contains("\"v\":2"))
@@ -43,7 +43,7 @@ class Round17Spec extends SparkTestBase {
   }
 
   test("mor merge: v2 read equals the COW merge result (MoR == COW)") {
-    val base = operators.LakeOps.morBase(spark, sf0001)
+    val base = operators.LakeOps.morDir(spark, sf0001)
     val mor = operators.LakeOps.morSnapshot(spark, base, 2)
       .groupBy($"o_orderstatus")
       .agg(count(lit(1)).as("n_rows"),
@@ -56,7 +56,7 @@ class Round17Spec extends SparkTestBase {
   }
 
   test("mor merge: compaction folds the delta without changing the table") {
-    val base = operators.LakeOps.morBase(spark, sf0001)
+    val base = operators.LakeOps.morDir(spark, sf0001)
     val v2 = operators.LakeOps.morSnapshot(spark, base, 2)
       .orderBy($"o_orderkey").collect().toSeq
     val v3 = operators.LakeOps.morSnapshot(spark, base, 3)
@@ -74,7 +74,7 @@ class Round17Spec extends SparkTestBase {
       .split("\n").toSeq
 
   test("mor merge: updated rows keep the base status and take source cents") {
-    val base = operators.LakeOps.morBase(spark, sf0001)
+    val base = operators.LakeOps.morDir(spark, sf0001)
     // Matched keys (k % 100 == 42 inside the base predicate) exist only in
     // fileC (k % 10 == 2 < 3 requires status F): every matched row must
     // keep status F while its cents halve vs the base copy.
@@ -227,7 +227,7 @@ class Round17Spec extends SparkTestBase {
   // ---- q_lake_delete_mor layer ordering ----
 
   test("edelete: a deleted-then-upserted key is present with upsert values") {
-    val base = operators.LakeOps.edelBase(spark, sf0001)
+    val base = operators.LakeOps.edelDir(spark, sf0001)
     val v2 = operators.LakeOps.morSnapshot(spark, base, 2)
     assert(v2.filter(pmod($"o_orderkey", lit(7)) === 3).count() == 0,
       "the v2 equality-delete layer must mask every key = 3 mod 7")

@@ -422,11 +422,11 @@ class Round18Spec extends SparkTestBase {
       s"""{"v":2,"op":"delta","path":"d1","bloom":"$hexD"}""",
       s"""{"v":3,"op":"edelete","path":"e1","bloom":"$hexE"}"""
     ).mkString("\n").getBytes("UTF-8"))
-    operators.LakeOps.writeCheckpointFor(d.toString, 3)
+    operators.LakeOps.writeCheckpoint(d.toString, 3)
     // Resolve THROUGH the checkpoint (cv = 3, zero tail actions): every
     // bloom and the zone must survive the serialize/parse roundtrip, or a
     // checkpoint-resolved probe read would silently stop skipping.
-    val (st, cv, tail) = operators.LakeOps.ckptStateFor(d.toString, 3)
+    val (st, cv, tail) = operators.LakeOps.ckptState(d.toString, 3)
     assert(cv == 3 && tail == 0)
     assert(st.blooms == Map("base" -> hexA, "d1" -> hexD, "e1" -> hexE))
     assert(st.zones == Map("base" -> ((0L, 99L))))
@@ -512,7 +512,7 @@ class Round18Spec extends SparkTestBase {
 
   test("constraints: refusal is transactional — conflict audited, no file landed") {
     SparkEntry.queries("q_lake_constraints")(spark, sf0001).count()
-    val base = operators.LakeOps.constraintsBase(spark, sf0001)
+    val base = operators.LakeOps.constrDir(spark, sf0001)
     val log = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(base, "_log.json")), "UTF-8")
     assert(log.contains(""""op":"conflict","path":"fileB2""""),

@@ -23,8 +23,8 @@ class Round19Spec extends SparkTestBase {
       s"""{"v":2,"op":"remove","path":"f1"}""",
       s"""{"v":3,"op":"add","path":"f2","min":10,"max":19}"""
     ).mkString("\n").getBytes("UTF-8"))
-    operators.LakeOps.writeCheckpointFor(d.toString, 3)
-    val (st, cv, tail) = operators.LakeOps.ckptStateFor(d.toString, 3)
+    operators.LakeOps.writeCheckpoint(d.toString, 3)
+    val (st, cv, tail) = operators.LakeOps.ckptState(d.toString, 3)
     assert(cv == 3 && tail == 0)
     assert(st.live == Seq("f2"))
     // f1 must survive resolution THROUGH the checkpoint (it was never
@@ -39,8 +39,8 @@ class Round19Spec extends SparkTestBase {
       s"""{"v":3,"op":"vacuum","path":"f1"}""",
       s"""{"v":4,"op":"add","path":"f2","min":10,"max":19}"""
     ).mkString("\n").getBytes("UTF-8"))
-    operators.LakeOps.writeCheckpointFor(d2.toString, 4)
-    val (st2, _, _) = operators.LakeOps.ckptStateFor(d2.toString, 4)
+    operators.LakeOps.writeCheckpoint(d2.toString, 4)
+    val (st2, _, _) = operators.LakeOps.ckptState(d2.toString, 4)
     assert(st2.everAdded.toSet == Set("f2"))
   }
 
@@ -207,7 +207,7 @@ class Round19Spec extends SparkTestBase {
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     // Differential: the retract-and-apply delta rule must equal a full
     // per-status rollup of the v3 MoR snapshot through the shared kernel.
-    val base = operators.LakeOps.edelBase(spark, sf0001)
+    val base = operators.LakeOps.edelDir(spark, sf0001)
     val full = operators.LakeOps.morSnapshot(spark, base, 3)
       .groupBy($"o_orderstatus")
       .agg(count(lit(1)).as("n_rows"),
@@ -399,7 +399,7 @@ class Round19Spec extends SparkTestBase {
 
   test("column map: zero-rewrite renames compose per file generation, epoch-correct") {
     SparkEntry.queries("q_lake_column_map")(spark, sf0001).count()
-    val base = operators.LakeOps.colmapBase(spark, sf0001)
+    val base = operators.LakeOps.colmapDir(spark, sf0001)
     // ZERO REWRITE: the pre-rename file's PHYSICAL schema still carries
     // the original column name — renames never touch data bytes.
     assert(spark.read.parquet(s"$base/fileA").columns
